@@ -22,6 +22,20 @@ final case class FeatureRow(
     props: Map[String, String],
     id: Option[Long])
 
+/** One feature nested in its tile's row: a [[FeatureRow]] without the
+  * tile key. A fetched tile carries its features as an array of these, in
+  * `fidx` order, so per-tile labels need no regrouping. */
+final case class TileFeature(
+    fidx: Int,
+    geomType: String,
+    multi: Boolean,
+    parts: Seq[Seq[Coord]],
+    props: Map[String, String],
+    id: Option[Long]) {
+  def toRow(z: Int, x: Int, y: Int): FeatureRow =
+    FeatureRow(z, x, y, fidx, geomType, multi, parts, props, id)
+}
+
 /** Class spec (`main.py:73`): name + GL filter + optional geometry buffer. */
 final case class ClassSpec(name: String, filter: GLFilter, buffer: Option[Double] = None)
 

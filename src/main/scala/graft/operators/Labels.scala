@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * emit a record with the empty label (A4, `label.py:99-109` + the implicit
   * every-tile guarantee of `main.py:90-97`).
   *
-  * All label math here is built-in Column arithmetic (codegen'd, shuffles
-  * once on the tile key); rasterization (A3) lives in [[Segmentation]].
+  * All label math here is built-in Column expressions. The feature-table
+  * operators shuffle once on the tile key; the `tile*` forms label a
+  * fetched tile's row in place, with no shuffle. Rasterization (A3) lives
+  * in [[Segmentation]].
   */
 /** 0-4096-space geometry bounds carried out of [[Labels.negBufferBounds]] —
   * top-level (not nested in the object) so the UnsafeProjection's generated
@@ -46,6 +48,11 @@ object Labels {
       .select(col("z"), col("x"), col("y"),
         array(background +: cs: _*).as("label"))
   }
+
+  /** The 0-row object-detection label. */
+  private def noBoxes: Column =
+    typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
+      .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>")
 
   /** Pixel-space bbox for one (feature, class) pair from its 0-4096-space
     * bounds, `label.py:68-96`: scaled to 0-255 with banker's rounding
@@ -90,8 +97,7 @@ object Labels {
   def objectDetection(tiles: DataFrame, features: DataFrame, classes: Seq[ClassSpec]): DataFrame = {
     if (classes.isEmpty) // no classes -> every tile gets the 0-row label
       return tiles.select(col("z"), col("x"), col("y"),
-        typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
-          .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>").as("label"))
+        noBoxes.as("label"))
     val classEntries = array(classes.zipWithIndex.map { case (c, i) =>
       struct(
         lit(i).as("cidx"),
@@ -141,9 +147,62 @@ object Labels {
           b.getField("cls").as("cls"))).as("label"))
     tiles.join(agg, tileKey, "left")
       .select(col("z"), col("x"), col("y"),
-        coalesce(col("label"), typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
-          .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>")).as("label"))
+        coalesce(col("label"), noBoxes).as("label"))
   }
+
+  // ---- the same labels on a fetched tile row (LabelMakerJob) ----
+  //
+  // `features` is the tile's `array<struct<fidx, geomType, multi, parts,
+  // props, id>>` in fidx order (TileSources.fetch). The label is computed
+  // in place on the tile's row: no regrouping by tile key and no join back
+  // to the keyspace, because featureless and failed tiles already carry
+  // an empty array.
+
+  private def featureCols(f: Column): FilterCompiler.FeatureCols =
+    FilterCompiler.FeatureCols(f.getField("props"), f.getField("geomType"), f.getField("id"))
+
+  /** A1 on a tile row: slot i+1 = EXISTS(feature matching filter_i),
+    * slot 0 = background. */
+  def tileClassification(features: Column, classes: Seq[ClassSpec]): Column =
+    if (classes.isEmpty) array(lit(1))
+    else {
+      val cs = classes.map { c =>
+        when(exists(features, f => FilterCompiler.compile(c.filter, featureCols(f))), 1).otherwise(0)
+      }
+      array(when(cs.reduce(_ + _) === 0, 1).otherwise(0) +: cs: _*)
+    }
+
+  /** A2 on a tile row: per feature, the boxes of its matching classes in
+    * class order, flattened in feature order — the reference's
+    * feature-then-class emit order, with no sort. Same bounds and pixel
+    * math as [[objectDetection]]. */
+  def tileObjectDetection(features: Column, classes: Seq[ClassSpec]): Column =
+    if (classes.isEmpty) noBoxes
+    else flatten(transform(features, f => {
+      val parts = f.getField("parts")
+      val flat = flatten(parts)
+      val cols = featureCols(f)
+      // per class: null unless the feature matches, else (cls, 0-4096
+      // bounds); a fully-shrunk negative buffer gives null bounds: no box
+      val entries = array(classes.zipWithIndex.map { case (c, i) =>
+        val buf = c.buffer.getOrElse(0.0)
+        val bounds =
+          if (buf >= 0) struct(
+            (array_min(transform(flat, p => p.getField("x"))) - buf).as("minx"),
+            (array_min(transform(flat, p => p.getField("y"))) - buf).as("miny"),
+            (array_max(transform(flat, p => p.getField("x"))) + buf).as("maxx"),
+            (array_max(transform(flat, p => p.getField("y"))) + buf).as("maxy"))
+          else negBufferBounds(f.getField("geomType"), parts, lit(buf))
+        when(FilterCompiler.compile(c.filter, cols) && size(flat) > 0,
+          struct(lit(i + 1).as("cls"), bounds.as("b")))
+      }: _*)
+      transform(filter(entries, e => e.getField("b").isNotNull), e => {
+        val b = e.getField("b")
+        val Seq(x0, y0, x1, y1) = pixelBboxCols(
+          b.getField("minx"), b.getField("miny"), b.getField("maxx"), b.getField("maxy"))
+        struct(x0.as("xmin"), y0.as("ymin"), x1.as("xmax"), y1.as("ymax"), e.getField("cls").as("cls"))
+      })
+    }))
 
   /** A5 — class_match (`utils.py:32-40`): does a label contain class i. */
   def classMatch(mlType: String, label: Column, i: Int): Column = mlType match {

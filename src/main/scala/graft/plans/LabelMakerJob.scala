@@ -6,6 +6,7 @@ import graft.operators.{Labels, Segmentation, TileEnumeration}
 import graft.sources.TileSources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** The reference's job API (`LabelMakerJob`, `main.py:69-111`) re-expressed
   * as a lazy Dataset plan (P1-P6, SURVEY §2.4).
@@ -18,6 +19,10 @@ import org.apache.spark.sql.functions._
   *    per feature x class, `label.py:18,28,40`);
   *  - imagery dispatch resolves once at plan time (`utils.py:121-127` probes
   *    per task);
+  *  - the reference's implicit 1:1 pairing of each tile's label and image
+  *    tasks (`main.py:90-97`) is one fetch pass per tile: both requests
+  *    start in the same prefetch window and the tile is labeled in place,
+  *    so the plan needs no shuffle, no join and no image broadcast;
   *  - results go to a parquet sink or a Dataset, not a driver gather
   *    (`main.py:111` returns every image to the client).
   */
@@ -39,26 +44,31 @@ final case class LabelMakerJob(
   def tiles(spark: SparkSession): DataFrame =
     TileEnumeration.tiles(spark, bounds, zoom)
 
-  /** P2/P3 — the full labeled-tile plan: (z, x, y, label[, image cols]).
-    * Lazy; `explain` it for the reference's `dask.visualize` equivalent. */
-  def build(spark: SparkSession): DataFrame = {
-    val t = tiles(spark)
-    val failures = spark.sparkContext.longAccumulator("label_fetch_failures")
-    val features = TileSources.vectorFeatures(t, labelSource, failures = Some(failures))
-    val labeled = mlType match {
-      case MlType.Classification => Labels.classification(t, features.toDF(), classes)
-      case MlType.ObjectDetection => Labels.objectDetection(t, features.toDF(), classes)
-      case MlType.Segmentation => Segmentation.segmentation(t, features, classes)
+  /** P2/P3 — the full labeled-tile plan: (z, x, y, label[, height, width,
+    * bands, image]). One row per tile from one fetch pass that brings the
+    * label tile and the image together (the reference's two Dask tasks per
+    * tile, `main.py:90-97`); the label is computed in place on that row.
+    * The plan is range -> fetch -> label projection: one stage, no shuffle,
+    * no join. Lazy; `explain` it for the reference's `dask.visualize`
+    * equivalent. */
+  def build(spark: SparkSession): DataFrame =
+    build(spark, spark.sparkContext.longAccumulator("label_fetch_failures"))
+
+  /** [[build]], counting tiles whose label fetch or decode failed (and so
+    * got the empty label) into `labelFailures`. */
+  def build(spark: SparkSession, labelFailures: LongAccumulator): DataFrame = {
+    val fetched = TileSources.fetch(tiles(spark), Some(labelSource), imagery,
+      failures = Some(labelFailures))
+    val features = col("features")
+    val label = mlType match {
+      case MlType.Classification => Labels.tileClassification(features, classes)
+      case MlType.ObjectDetection => Labels.tileObjectDetection(features, classes)
+      case MlType.Segmentation =>
+        Segmentation.tileSegmentation(col("z"), col("x"), col("y"), features, classes)
     }
-    imagery match {
-      case None => labeled
-      case Some(img) =>
-        // the reference's implicit 1:1 tile-key join of label and image
-        // stages (`main.py:90-97`)
-        val images = TileSources.images(t, img).toDF()
-          .withColumnRenamed("data", "image")
-        labeled.join(images, Seq("z", "x", "y"))
-    }
+    val imageCols =
+      if (imagery.isEmpty) Nil else Seq("height", "width", "bands", "image").map(col)
+    fetched.select(Seq(col("z"), col("x"), col("y"), label.as("label")) ++ imageCols: _*)
   }
 
   /** P6 — execute into a parquet sink (the scale path). */

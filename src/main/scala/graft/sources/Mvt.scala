@@ -88,7 +88,7 @@ object Mvt {
   /** Decode a full tile: layerName -> features. Empty input yields an
     * empty map; malformed input may throw (like the reference's decoder) —
     * callers treat any failure as the empty tile `{}` (`main.py:38-44`,
-    * mirrored in TileSources.vectorFeatures). */
+    * mirrored in TileSources.fetch). */
   def decode(data: Array[Byte]): Map[String, Seq[MvtFeature]] = {
     val out = scala.collection.mutable.LinkedHashMap[String, Seq[MvtFeature]]()
     val r = new Reader(data, 0, data.length)

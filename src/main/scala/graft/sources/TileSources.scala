@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.core.Tiles
-import graft.model.{Coord, FeatureRow}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.model.{Coord, FeatureRow, TileFeature}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -12,8 +12,8 @@ import java.time.Duration
 
 /** HTTP tile sources (SURVEY §2.1 S2/S4/S6/S7).
   *
-  * Executor-side fetches run in `mapPartitions` with one shared
-  * `HttpClient` per JVM (the reference builds a session per task via
+  * Executor-side fetches run in one `mapPartitions` pass ([[TileSources.fetch]])
+  * with one shared `HttpClient` per JVM (the reference builds a session per task via
   * `requests.get`, `main.py:39`/`utils.py:50`); failures follow the
   * reference's semantics: label fetch/decode errors degrade to an empty
   * feature set (`main.py:38-44`) — but are counted in an accumulator
@@ -46,31 +46,27 @@ object TileSources {
     }
   }
 
-  /** Windowed async prefetch over a partition's rows: keeps `window`
-    * requests in flight so per-request latency (network RTT, server
-    * stalls) overlaps instead of serializing. Order-preserving. This is
-    * what makes HTTP-bound source stages latency-tolerant at any
-    * partition count — the knob that matters when the fetch, not the
+  /** Windowed lookahead over a partition's rows: `start` runs up to
+    * `window` rows ahead of the consumer, so the requests it starts
+    * overlap instead of serializing on per-request latency (network RTT,
+    * server stalls). Order-preserving; the consumer joins what `start`
+    * returned. This is what makes HTTP-bound fetches latency-tolerant at
+    * any partition count — the knob that matters when the fetch, not the
     * CPU, is the bottleneck. */
-  private[sources] def prefetched[A, B](it: Iterator[A], window: Int)(
-      start: A => java.util.concurrent.CompletableFuture[B]): Iterator[(A, scala.util.Try[B])] = {
-    val queue = scala.collection.mutable.Queue[(A, java.util.concurrent.CompletableFuture[B])]()
-    new Iterator[(A, scala.util.Try[B])] {
+  private[sources] def prefetched[A, B](it: Iterator[A], window: Int)(start: A => B): Iterator[(A, B)] = {
+    val queue = scala.collection.mutable.Queue[(A, B)]()
+    new Iterator[(A, B)] {
       private def fill(): Unit =
         while (queue.size < window && it.hasNext) {
           val a = it.next()
           queue.enqueue((a, start(a)))
         }
       override def hasNext: Boolean = { fill(); queue.nonEmpty }
-      override def next(): (A, scala.util.Try[B]) = {
-        fill()
-        val (a, f) = queue.dequeue()
-        (a, scala.util.Try(f.join()))
-      }
+      override def next(): (A, B) = { fill(); queue.dequeue() }
     }
   }
 
-  /** In-flight requests per partition for tile fetch stages. */
+  /** Tiles per partition whose requests are in flight at once. */
   val FetchWindow = 16
 
   /** `str.format`-style URL templating (`utils.py:27-29`) with the
@@ -81,41 +77,6 @@ object TileSources {
       .map(t => template.replace("{ACCESS_TOKEN}", t)).getOrElse(template)
     withToken
       .replace("{z}", z.toString).replace("{x}", x.toString).replace("{y}", y.toString)
-  }
-
-  // ---- S2 + S3: vector-tile fetch + MVT decode -> relational features ----
-
-  /** Fetch + decode the label source for every tile; emit the relational
-    * feature rows of the layer the pipeline reads ("osm", `label.py:13`).
-    * Tiles that fail to fetch/decode, or lack the layer, emit no rows (the
-    * downstream left join restores them with empty labels, A4). */
-  def vectorFeatures(tiles: DataFrame, labelSource: String,
-      layer: String = "osm",
-      failures: Option[LongAccumulator] = None): Dataset[FeatureRow] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles.select(col("z").cast("int"), col("x").cast("int"), col("y").cast("int"))
-      .as[(Int, Int, Int)]
-      .mapPartitions { it =>
-        prefetched(it, FetchWindow) { case (z, x, y) =>
-          httpGetAsync(fillUrl(labelSource, z, x, y))
-        }.flatMap { case ((z, x, y), bytes) =>
-          val decoded = bytes.map(Mvt.decode) match {
-            case scala.util.Success(d) => d
-            case scala.util.Failure(_) =>
-              failures.foreach(_.add(1L))
-              Map.empty[String, Seq[Mvt.MvtFeature]]
-          }
-          decoded.getOrElse(layer, Seq.empty).iterator.zipWithIndex.map { case (f, i) =>
-            FeatureRow(z, x, y, i,
-              geomType = if (f.multi) "Multi" + f.geomType else f.geomType,
-              multi = f.multi,
-              parts = f.parts.map(_.map { case (px, py) => Coord(px, py) }.toSeq).toSeq,
-              props = f.props,
-              id = f.id)
-          }
-        }
-      }
   }
 
   // ---- S4/S6: imagery fetch ----
@@ -220,37 +181,89 @@ object TileSources {
       if (magic.exists(isTiffMagic)) CogSource else TmsSource
     } else TmsSource
 
-  /** Fetch imagery for every tile (S4 TMS / S6 WMS / S5 COG windowed
-    * read). Fetch errors fail the task (Spark retries), matching the
-    * reference's uncaught image-path errors (`main.py:50-63`) while
-    * keeping at-least-once semantics. */
-  def images(tiles: DataFrame, imagery: String): Dataset[ImageTile] = {
+  /** One tile after the fetch pass: the decoded features of the label
+    * layer, in `fidx` order, and the decoded image. `features` is empty
+    * when the tile has none, lacks the layer, or its label fetch or decode
+    * failed. Without imagery, `height = width = bands = 0` and `image` is
+    * null. */
+  final case class FetchedTile(z: Int, x: Int, y: Int, features: Seq[TileFeature],
+      height: Int, width: Int, bands: Int, image: Array[Byte])
+
+  /** S2-S7 in one pass, one row per tile (the reference's two Dask tasks
+    * per tile, `main.py:90-97`): each tile's label request and image
+    * request start together inside the same prefetch window; then both
+    * are decoded and the tile is emitted whole, so labels and images never
+    * need to be regrouped or joined by tile key.
+    *
+    * Label fetch or decode errors degrade to an empty feature set
+    * (`main.py:38-44`) and are counted in `failures`. Image errors fail
+    * the task (Spark retries), matching the reference's uncaught image
+    * path (`main.py:50-63`) while keeping at-least-once semantics. The
+    * imagery source is dispatched once, here at plan time; a COG is read
+    * synchronously, tile by tile, as the consumer reaches it. */
+  def fetch(tiles: DataFrame, labelSource: Option[String], imagery: Option[String],
+      layer: String = "osm",
+      failures: Option[LongAccumulator] = None): Dataset[FetchedTile] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val source = dispatch(imagery, probeContent = true)
+    val source = imagery.map(i => (i, dispatch(i, probeContent = true)))
     tiles.select(col("z").cast("int"), col("x").cast("int"), col("y").cast("int"))
       .as[(Int, Int, Int)]
       .mapPartitions { it =>
-        source match {
-          case CogSource =>
-            it.map { case (z, x, y) =>
-              val (h, w, bands, data) = CogReader.tile(imagery, graft.core.TileKey(z, x, y))
-              ImageTile(z, x, y, h, w, bands, data)
+        prefetched(it, FetchWindow) { case (z, x, y) =>
+          val label = labelSource.map(s => httpGetAsync(fillUrl(s, z, x, y)))
+          val image = source.collect {
+            case (i, WmsSource) => httpGetAsync(wmsUrl(fillUrl(i, z, x, y), z, x, y))
+            case (i, TmsSource) => httpGetAsync(fillUrl(i, z, x, y))
+          }
+          (label, image)
+        }.map { case ((z, x, y), (label, image)) =>
+          val features = label.fold(Seq.empty[TileFeature]) { f =>
+            scala.util.Try(Mvt.decode(f.join())) match {
+              case scala.util.Success(d) =>
+                d.getOrElse(layer, Seq.empty).zipWithIndex.map { case (m, i) =>
+                  TileFeature(i,
+                    geomType = if (m.multi) "Multi" + m.geomType else m.geomType,
+                    multi = m.multi,
+                    parts = m.parts.map(_.map { case (px, py) => Coord(px, py) }.toSeq).toSeq,
+                    props = m.props,
+                    id = m.id)
+                }
+              case scala.util.Failure(_) =>
+                failures.foreach(_.add(1L))
+                Seq.empty
             }
-          case other =>
-            prefetched(it, FetchWindow) { case (z, x, y) =>
-              val url = other match {
-                case WmsSource => wmsUrl(fillUrl(imagery, z, x, y), z, x, y)
-                case _ => fillUrl(imagery, z, x, y)
-              }
-              httpGetAsync(url)
-            }.map { case ((z, x, y), bytes) =>
-              // image errors fail the task (Spark retries) — reference
-              // parity for the uncaught image path
-              val (h, w, bands, data) = decodeImage(bytes.get)
-              ImageTile(z, x, y, h, w, bands, data)
-            }
+          }
+          val (h, w, bands, data) = (source, image) match {
+            case (_, Some(f)) => decodeImage(f.join())
+            case (Some((i, CogSource)), None) => CogReader.tile(i, graft.core.TileKey(z, x, y))
+            case _ => (0, 0, 0, null)
+          }
+          FetchedTile(z, x, y, features, h, w, bands, data)
         }
       }
+  }
+
+  /** S2 + S3 — the relational feature rows of the label layer the pipeline
+    * reads ("osm", `label.py:13`): [[fetch]] without imagery, one row per
+    * feature. Tiles whose fetch or decode fails, or that lack the layer,
+    * emit no rows. */
+  def vectorFeatures(tiles: DataFrame, labelSource: String,
+      layer: String = "osm",
+      failures: Option[LongAccumulator] = None): Dataset[FeatureRow] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    fetch(tiles, Some(labelSource), None, layer, failures)
+      .flatMap(t => t.features.map(_.toRow(t.z, t.x, t.y)))
+  }
+
+  /** S4/S5/S6 — imagery for every tile: [[fetch]] without labels. */
+  def images(tiles: DataFrame, imagery: String): Dataset[ImageTile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    fetch(tiles, None, Some(imagery))
+      .select(col("z"), col("x"), col("y"), col("height"), col("width"), col("bands"),
+        col("image").as("data"))
+      .as[ImageTile]
   }
 }

@@ -45,11 +45,13 @@ class TextHashesSpec extends graft.SparkSpec {
     TextHashes.register(s)
     import s.implicits._
     // ngram_hashes is a session-wide SQL function: a caller can hand it
-    // array() or a filtered-empty array (r11 ADVICE — truncShort=true
-    // used to read th(0) of a zero-length array)
+    // an empty array or a filtered-empty array (r11 ADVICE — truncShort=true
+    // used to read th(0) of a zero-length array). A bare array() is
+    // array<void> and fails the array<string> input check at analysis,
+    // so the probe is typed.
     val got = s.sql(
-      """SELECT size(ngram_hashes(array(), 3, true)) AS t,
-        |       size(ngram_hashes(array(), 3, false)) AS f,
+      """SELECT size(ngram_hashes(cast(array() as array<string>), 3, true)) AS t,
+        |       size(ngram_hashes(cast(array() as array<string>), 3, false)) AS f,
         |       size(ngram_hashes(array('a'), 3, true)) AS one""".stripMargin)
       .as[(Int, Int, Int)].collect().head
     assert(got == ((0, 0, 1)), got)

@@ -5,12 +5,13 @@ import graft.SparkSpec
 import graft.core.BBox
 import graft.sources.Mvt
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import java.net.InetSocketAddress
 
 /** Pipeline e2e (SURVEY §5.3): local HTTP stub serving fixture MVT + PNG
   * tiles -> full LabelMakerJob on local[4] -> per-tile records. */
-class LabelMakerJobSpec extends SparkSpec {
+class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val classesJson =
     """[
@@ -28,6 +29,32 @@ class LabelMakerJobSpec extends SparkSpec {
     Mvt.EncFeature("LineString",
       Seq(Seq((0L, 2048L), (4096L, 2048L))),
       Map("highway" -> "primary"), id = Some(2L))))
+
+  /** `/mixed/{z}/{x}/{y}.pbf`: (x + y) % 3 picks a 404, a truncated MVT
+    * body or the good fixture tile, so every partition holds all three. */
+  private def mixedKind(x: Int, y: Int): Int = (x + y) % 3
+
+  private def mixedTile(path: String): Array[Byte] = {
+    val Array(x, y) = path.stripSuffix(".pbf").split('/').takeRight(2).map(_.toInt)
+    mixedKind(x, y) match {
+      case 0 => Array.emptyByteArray // 404
+      case 1 => fixtureTile.take(fixtureTile.length / 2)
+      case _ => fixtureTile
+    }
+  }
+
+  /** A large and a small building and a road: a negative buffer keeps a
+    * shrunk large building and shrinks the small one and the line away. */
+  private def negativeBufferTile: Array[Byte] = Mvt.encode(Seq(
+    Mvt.EncFeature("Polygon",
+      Seq(Seq((500L, 500L), (500L, 3500L), (3500L, 3500L), (3500L, 500L))),
+      Map("building" -> "yes"), id = Some(1L)),
+    Mvt.EncFeature("LineString",
+      Seq(Seq((0L, 2048L), (4096L, 2048L))),
+      Map("highway" -> "primary"), id = Some(2L)),
+    Mvt.EncFeature("Polygon",
+      Seq(Seq((1000L, 1000L), (1000L, 1400L), (1400L, 1400L), (1400L, 1000L))),
+      Map("building" -> "yes"), id = Some(3L))))
 
   private def pngBytes: Array[Byte] = {
     val img = new java.awt.image.BufferedImage(256, 256, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -48,7 +75,10 @@ class LabelMakerJobSpec extends SparkSpec {
         val path = ex.getRequestURI.getPath
         val body: Array[Byte] =
           if (path.endsWith(".pbf")) {
-            if (path.contains("bad")) "garbage".getBytes else fixtureTile
+            if (path.contains("bad")) "garbage".getBytes
+            else if (path.startsWith("/mixed/")) mixedTile(path)
+            else if (path.startsWith("/neg/")) negativeBufferTile
+            else fixtureTile
           } else if (path.endsWith(".png") || path.startsWith("/wms")) {
             if (path.startsWith("/wms")) wmsHits += 1
             pngBytes
@@ -195,6 +225,78 @@ class LabelMakerJobSpec extends SparkSpec {
         mlType = "classification")
       val e = intercept[org.apache.spark.SparkException] { job.collect(spark) }
       assert(e.getMessage != null)
+    }
+  }
+
+  /** Every node of the executed plan, through adaptive query stages. */
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+
+  test("the job is one stage: no Exchange, BroadcastExchange or join in any ml_type's plan") {
+    withServer { port =>
+      for (ml <- Seq("classification", "object-detection", "segmentation");
+           imagery <- Seq(s"http://localhost:$port/img/{z}/{x}/{y}.png", null)) {
+        val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
+          classesJson, imagery = imagery,
+          labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf", mlType = ml)
+        val df = job.build(spark)
+        assert(df.collect().length == 4)
+        val nodes = planNodes(df)
+        val banned = nodes.filter(n => n.contains("Exchange") || n.contains("Join"))
+        assert(banned.isEmpty, s"$ml, imagery=${imagery != null}: ${nodes.mkString(" <- ")}")
+      }
+    }
+  }
+
+  test("mixed 404 / truncated / good label tiles in one window: exact labels, failures counted") {
+    withServer { port =>
+      // 7x7 tiles: 12-13 per partition on local[4], inside one fetch window
+      val b = BBox(-44.4836, -23.0266, -44.2, -22.75)
+      val job = LabelMakerJob(13, Seq(b.west, b.south, b.east, b.north), classesJson,
+        imagery = s"http://localhost:$port/img/{z}/{x}/{y}.png",
+        labelSource = s"http://localhost:$port/mixed/{z}/{x}/{y}.pbf",
+        mlType = "classification")
+      val failures = spark.sparkContext.longAccumulator("label_fetch_failures")
+      val rows = job.build(spark, failures).collect()
+      assert(rows.length == job.nTiles && job.nTiles >= 40)
+      val keys = rows.map(r => (r.getInt(r.fieldIndex("x")), r.getInt(r.fieldIndex("y"))))
+      val bad = keys.count { case (x, y) => mixedKind(x, y) != 2 }
+      assert(Seq(0, 1, 2).forall(k => keys.exists { case (x, y) => mixedKind(x, y) == k }))
+      rows.zip(keys).foreach { case (r, (x, y)) =>
+        val want = if (mixedKind(x, y) == 2) Seq(0, 1, 1) else Seq(1, 0, 0)
+        assert(r.getSeq[Int](r.fieldIndex("label")) == want, s"tile ($x, $y)")
+        assert(r.getAs[Array[Byte]](r.fieldIndex("image")).length == 256 * 256 * 3)
+      }
+      assert(failures.value == bad)
+    }
+  }
+
+  test("object-detection with negative buffers: the job equals Labels.objectDetection") {
+    withServer { port =>
+      val classes =
+        """[
+          |  {"name": "Roads",     "filter": ["has", "highway"],  "buffer": -10.0},
+          |  {"name": "Buildings", "filter": ["has", "building"], "buffer": -500.0},
+          |  {"name": "Lots",      "filter": ["has", "building"], "buffer": 50.0}
+          |]""".stripMargin
+      val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
+        classes, imagery = null,
+        labelSource = s"http://localhost:$port/neg/{z}/{x}/{y}.pbf",
+        mlType = "object-detection")
+      def boxes(df: org.apache.spark.sql.DataFrame): Map[(Int, Int), Seq[Seq[Int]]] =
+        df.collect().map { r =>
+          (r.getInt(r.fieldIndex("x")), r.getInt(r.fieldIndex("y"))) ->
+            r.getSeq[Row](r.fieldIndex("label")).map(b => (0 until 5).map(b.getInt))
+        }.toMap
+      val got = boxes(job.build(spark))
+      val tiles = job.tiles(spark)
+      val want = boxes(graft.operators.Labels.objectDetection(tiles,
+        graft.sources.TileSources.vectorFeatures(tiles, job.labelSource).toDF(), job.classes))
+      assert(got.size == 4)
+      assert(got == want)
+      // the road and the small building shrink away: the large building
+      // keeps a shrunk box, and both buildings keep their grown boxes
+      got.values.foreach(bbs => assert(bbs.map(_(4)) == Seq(2, 3, 3), bbs))
     }
   }
 
