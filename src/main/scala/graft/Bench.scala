@@ -21,7 +21,7 @@ object Bench {
       spark.catalog.clearCache()
       // collect the previous run's garbage before timing this one, so a
       // GC pause isn't billed to whichever query happens to trigger it
-      if (sys.env.getOrElse("SPARK_GRAFT_GC_BETWEEN", "1") != "0") System.gc()
+      System.gc()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case e: Throwable =>
         err = Some(e.getClass.getSimpleName + ": " +
@@ -128,22 +128,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries timestamp[ns]; Spark reads it as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // r11 (guide §3.1): let AQE rewrite a planned sort-merge join to a
-      // shuffled-hash join at runtime when the MEASURED per-partition map
-      // output fits comfortably in memory — unlike preferSortMergeJoin
-      // (an estimate-based static gamble), this is size-guarded per
-      // partition, so it is the same decision a 100 TB run should make:
-      // big partitions keep the spill-safe SMJ, small ones skip the sort.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // one trivial action so JVM/codegen/session init isn't billed to the
     // first query
@@ -196,8 +181,11 @@ object Bench {
     }
     val json = renderJson(results, sfDir, baseline)
     // the full map ALSO goes to its own file: the driver's tail capture has
-    // truncated the (long) stdout line before, cutting early queries off
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
+    // truncated the (long) stdout line before, cutting early queries off.
+    // Absolute, and by default in the repo root (not the process cwd), so
+    // the compact line's `full` pointer resolves from anywhere.
+    val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT").map(new java.io.File(_))
+      .getOrElse(new java.io.File(root, "bench_result.json")).getAbsolutePath
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         (json + "\n").getBytes("UTF-8"))

@@ -7,11 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session extensions: installs the engine's native functions session-wide
   * (survives `spark.sql(...)` from any thread, unlike temp registration).
   *
-  * Usage:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
-  * // or: --conf spark.sql.extensions=graft.GraftExtensions
-  * }}}
+  * Usage: `.withExtensions(new GraftExtensions)` on a session builder, or
+  * `--conf spark.sql.extensions=graft.GraftExtensions`.
   *
   * Kept deliberately small: the engine's operators compose Spark built-ins
   * (builder-contract preference (a)); the native expressions are the

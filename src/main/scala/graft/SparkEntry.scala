@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.BBox
 import graft.plans.LabelMakerJob
-import graft.queries.{FilterQueries, LabelQueries, MediaQueries, MiscQueries, Relational, TextOps, VectorOps}
+import graft.queries.{FilterQueries, LabelQueries, MediaQueries, MiscQueries, Query, Relational, TextOps, VectorOps}
 import graft.sources.Mvt
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -46,16 +46,20 @@ object SparkEntry {
     } finally server.stop(0)
   }
 
+  /** Every registered query, each name once (construction fails naming
+    * any name registered twice). */
+  val registry: Seq[Query] = Query.registry(
+    Relational.queries ++ FilterQueries.queries ++ TextOps.queries ++
+      VectorOps.queries ++ LabelQueries.queries ++ MediaQueries.queries ++
+      MiscQueries.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ FilterQueries.queries ++ FilterQueries.tileQueries ++
-      TextOps.queries ++ VectorOps.queries ++ LabelQueries.queries ++
-      MediaQueries.queries ++ MiscQueries.queries ++ LabelQueries.segQueries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Omit for non-SQL-expressible ops. qv15's
+    * entry appears once its query has run in this JVM. */
   def oracleSql: Map[String, String] =
-    Relational.oracleSql ++ FilterQueries.oracleSql ++ FilterQueries.tileOracleSql ++
-      TextOps.oracleSql ++ VectorOps.oracleSql ++ LabelQueries.oracleSql ++
-      MediaQueries.oracleSql ++ MiscQueries.oracleSql
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap ++ VectorOps.generatedOracleSql
 }

@@ -84,8 +84,11 @@ object LabelMakerJob {
   /** Convenience constructor mirroring the reference's signature
     * (`main.py:71-85`): bounds as [west, south, east, north]. */
   def apply(zoom: Int, bounds: Seq[Double], classesJson: String,
-      imagery: String, labelSource: String, mlType: String): LabelMakerJob =
+      imagery: String, labelSource: String, mlType: String): LabelMakerJob = {
+    require(bounds.length == 4,
+      s"bounds must be [west, south, east, north], got ${bounds.length} values")
     LabelMakerJob(zoom, BBox(bounds(0), bounds(1), bounds(2), bounds(3)),
       ClassSpec.parseJson(classesJson), Option(imagery).filter(_.nonEmpty),
       labelSource, mlType)
+  }
 }

@@ -50,27 +50,34 @@ class SkewJoinSpec extends SparkSpec {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val threshold = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    val saved = (keys.map(_._1) :+ threshold).map(k => k -> spark.conf.getOption(k))
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      import spark.implicits._
-      // 95% of 200k fact rows hit key 7 -> one shuffle partition dwarfs the rest
-      val fact = spark.range(200000)
-        .select(when(col("id") % 20 === 0, col("id") % 50).otherwise(lit(7L)).as("k"),
-          col("id").as("v"))
-      val dim = spark.range(50).select(col("id").as("k"), (col("id") * 2).as("w"))
-      // global agg downstream: a groupBy on the join key would make AQE
-      // keep the skewed partition intact (splitting would force an extra
-      // shuffle for the agg) — which is itself the documented behavior
-      val j = fact.join(dim, "k")
-        .agg(count(lit(1)).as("n"), sum(when(col("k") === 7, 1L).otherwise(0L)).as("n7"))
-      val row = j.collect()(0) // executes j -> final adaptive plan below
-      assert(row.getAs[Long]("n") == 200000L && row.getAs[Long]("n7") == 190000L)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin(skew=true)"),
-        s"expected the skew-split SMJ marker:\n${plan.take(1500)}")
-      assert(plan.contains("AQEShuffleRead skewed"),
-        s"expected the skewed shuffle read:\n${plan.take(1500)}")
+      // 0 keeps the large-partition path (the sort-merge join); the
+      // session's 64m is the path the bench runs, where AQE turns the
+      // split join into a shuffled hash join
+      Seq("0" -> "SortMergeJoin(skew=true)", "64m" -> "ShuffledHashJoin(skew=true)")
+        .foreach { case (limit, join) =>
+          spark.conf.set(threshold, limit)
+          // 95% of 200k fact rows hit key 7 -> one shuffle partition dwarfs the rest
+          val fact = spark.range(200000)
+            .select(when(col("id") % 20 === 0, col("id") % 50).otherwise(lit(7L)).as("k"),
+              col("id").as("v"))
+          val dim = spark.range(50).select(col("id").as("k"), (col("id") * 2).as("w"))
+          // global agg downstream: a groupBy on the join key would make AQE
+          // keep the skewed partition intact (splitting would force an extra
+          // shuffle for the agg) — which is itself the documented behavior
+          val j = fact.join(dim, "k")
+            .agg(count(lit(1)).as("n"), sum(when(col("k") === 7, 1L).otherwise(0L)).as("n7"))
+          val row = j.collect()(0) // executes j -> final adaptive plan below
+          assert(row.getAs[Long]("n") == 200000L && row.getAs[Long]("n7") == 190000L)
+          val plan = j.queryExecution.executedPlan.toString
+          assert(plan.contains(join),
+            s"threshold $limit: expected the skew-split $join marker:\n${plan.take(1500)}")
+          assert(plan.contains("AQEShuffleRead skewed"),
+            s"threshold $limit: expected the skewed shuffle read:\n${plan.take(1500)}")
+        }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -308,4 +308,14 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plan = job.build(spark).queryExecution.toString
     assert(plan.nonEmpty) // building the plan must not touch the network
   }
+
+  test("bounds that are not [west, south, east, north] are rejected by name") {
+    val e = intercept[IllegalArgumentException] {
+      LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east), classesJson,
+        imagery = null, labelSource = "http://localhost:1/{z}/{x}/{y}.pbf",
+        mlType = "classification")
+    }
+    assert(e.getMessage.contains("[west, south, east, north]"), e.getMessage)
+    assert(e.getMessage.contains("got 3 values"), e.getMessage)
+  }
 }

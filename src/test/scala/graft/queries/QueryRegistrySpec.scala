@@ -1,0 +1,51 @@
+package graft.queries
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkEntry
+
+/** The registry invariant: each query is defined once, as one [[Query]]
+  * that carries its own oracle, and a name registered twice fails loudly
+  * instead of silently replacing the earlier entry. */
+class QueryRegistrySpec extends AnyFunSuite {
+
+  private val never: (SparkSession, String) => DataFrame =
+    (_, _) => throw new IllegalStateException("never built")
+
+  test("a registry with a repeated name throws and names the duplicate") {
+    val e = intercept[IllegalArgumentException] {
+      Query.registry(Seq(Query("qa_one", None)(never), Query("qb_two", Some("SELECT 1"))(never),
+        Query("qa_one", Some("SELECT 2"))(never)))
+    }
+    assert(e.getMessage.contains("qa_one"), e.getMessage)
+    assert(!e.getMessage.contains("qb_two"), e.getMessage)
+  }
+
+  test("SparkEntry.queries has 350 entries") {
+    assert(SparkEntry.registry.size == 350)
+    assert(SparkEntry.queries.size == 350)
+  }
+
+  test("each query name is written exactly once as a string literal under graft/queries") {
+    val dir = Paths.get("src/main/scala/graft/queries")
+    assert(Files.isDirectory(dir), "run tests from the repo root")
+    // ISO-8859-1 maps every byte to one char, so raw control bytes in a
+    // source file cannot fail the decode
+    val sources = Files.list(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => new String(Files.readAllBytes(p), "ISO-8859-1")).toSeq
+    def literals(name: String): Int = sources.map { src =>
+      val lit = "\"" + name + "\""
+      Iterator.iterate(src.indexOf(lit))(i => src.indexOf(lit, i + 1))
+        .takeWhile(_ >= 0).size
+    }.sum
+    val wrong = SparkEntry.queries.keySet.toSeq.sorted
+      .map(n => n -> literals(n)).filter(_._2 != 1)
+    assert(wrong.isEmpty, s"query names not written exactly once: ${wrong.mkString(", ")}")
+  }
+}

@@ -38,7 +38,7 @@ class RegistryDocsSpec extends AnyFunSuite {
     val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     // qx01: HLL++ has no DuckDB twin by design (its oracle-checkable
     // sibling is the KMV estimator, qx02). qv15's oracle is GENERATED
-    // once its query has run in-JVM (VectorOps.oracleSql scaladoc) — so
+    // once its query has run in-JVM (VectorOps.generatedOracleSql scaladoc) — so
     // it is rows-only here only until some suite in this JVM (e.g.
     // PlanHygieneSpec) has executed it; both states are correct, and
     // every Verify dump carries it.
