@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.sources.TileSources
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -31,35 +32,36 @@ object Multimodal {
 
   // ---- image ----
 
+  /** Decoded pixels: `(width, height, color-model components, rgb)` with
+    * `rgb(y * width + x)` = `getRGB(x, y)`'s 0xRRGGBB, read from the
+    * bytes [[TileSources.decodeImage]] gives (one band is gray: r = g = b).
+    * Throws on undecodable bytes. */
+  private def pixels(bytes: Array[Byte]): (Int, Int, Int, Array[Int]) = {
+    val img = TileSources.readImage(bytes)
+    if (img == null) throw new java.io.IOException("undecodable image")
+    val (h, w, bands, data) = TileSources.rgbBytes(img)
+    val rgb = Array.tabulate(h * w) { p =>
+      if (bands == 1) (data(p) & 0xff) * 0x010101
+      else ((data(p * bands) & 0xff) << 16) | ((data(p * bands + 1) & 0xff) << 8) |
+        (data(p * bands + 2) & 0xff)
+    }
+    (w, h, img.getColorModel.getNumComponents, rgb)
+  }
+
   /** REAL decode for PNG/JPEG bytes; null on undecodable input. */
   def decodeImageMeta(bytes: Array[Byte]): Option[ImageMeta] =
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        var (sr, sg, sb) = (0L, 0L, 0L)
-        val w = img.getWidth
-        val h = img.getHeight
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val p = img.getRGB(x, y)
-            sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        val n = (w.toLong * h).toDouble
-        Some(ImageMeta(w, h, img.getColorModel.getNumComponents,
-          sr / n, sg / n, sb / n))
-      }
+      val (w, h, components, rgb) = pixels(bytes)
+      var (sr, sg, sb) = (0L, 0L, 0L)
+      rgb.foreach { p => sr += (p >> 16) & 0xff; sg += (p >> 8) & 0xff; sb += p & 0xff }
+      val n = (w.toLong * h).toDouble
+      Some(ImageMeta(w, h, components, sr / n, sg / n, sb / n))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** REAL resize: decode -> bilinear scale -> PNG bytes; null if undecodable. */
   def resizeImage(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+      val img = TileSources.readImage(bytes)
       if (img == null) None
       else {
         val out = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -99,40 +101,35 @@ object Multimodal {
     * near-dup, LSH, IVF) for image-dedup pipelines. */
   def imageEmbedding(bytes: Array[Byte], grid: Int = 4): Option[Array[Float]] =
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val sums = new Array[Long](grid * grid * 3)
-        val counts = new Array[Long](grid * grid)
-        var y = 0
-        while (y < h) {
-          val cy = math.min(grid - 1, y * grid / h)
-          var x = 0
-          while (x < w) {
-            val cx = math.min(grid - 1, x * grid / w)
-            val cell = cy * grid + cx
-            val p = img.getRGB(x, y)
-            sums(cell * 3) += (p >> 16) & 0xff
-            sums(cell * 3 + 1) += (p >> 8) & 0xff
-            sums(cell * 3 + 2) += p & 0xff
-            counts(cell) += 1
-            x += 1
-          }
-          y += 1
+      val (w, h, _, rgb) = pixels(bytes)
+      val sums = new Array[Long](grid * grid * 3)
+      val counts = new Array[Long](grid * grid)
+      var y = 0
+      while (y < h) {
+        val cy = math.min(grid - 1, y * grid / h)
+        var x = 0
+        while (x < w) {
+          val cx = math.min(grid - 1, x * grid / w)
+          val cell = cy * grid + cx
+          val p = rgb(y * w + x)
+          sums(cell * 3) += (p >> 16) & 0xff
+          sums(cell * 3 + 1) += (p >> 8) & 0xff
+          sums(cell * 3 + 2) += p & 0xff
+          counts(cell) += 1
+          x += 1
         }
-        val out = new Array[Float](grid * grid * 3)
-        var c = 0
-        while (c < grid * grid) {
-          val n = math.max(1L, counts(c)).toDouble
-          out(c * 3) = (sums(c * 3) / n).toFloat
-          out(c * 3 + 1) = (sums(c * 3 + 1) / n).toFloat
-          out(c * 3 + 2) = (sums(c * 3 + 2) / n).toFloat
-          c += 1
-        }
-        Some(out)
+        y += 1
       }
+      val out = new Array[Float](grid * grid * 3)
+      var c = 0
+      while (c < grid * grid) {
+        val n = math.max(1L, counts(c)).toDouble
+        out(c * 3) = (sums(c * 3) / n).toFloat
+        out(c * 3 + 1) = (sums(c * 3 + 1) / n).toFloat
+        out(c * 3 + 2) = (sums(c * 3 + 2) / n).toFloat
+        c += 1
+      }
+      Some(out)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Adds an `embedding: array<float>` column (patch-mean, see
@@ -159,40 +156,35 @@ object Multimodal {
     * few bits — pair them with [[graft.operators.Dedup.hammingNearDupPairs]]. */
   def aHash64(bytes: Array[Byte]): Option[Long] =
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) None
-      else {
-        val w = img.getWidth
-        val h = img.getHeight
-        val sums = new Array[Long](64)
-        val counts = new Array[Long](64)
-        var y = 0
-        while (y < h) {
-          val cy = math.min(7, y * 8 / h)
-          var x = 0
-          while (x < w) {
-            val cx = math.min(7, x * 8 / w)
-            val p = img.getRGB(x, y)
-            // integer luma (BT.601 weights scaled by 1000) — deterministic
-            val gray = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114)
-            sums(cy * 8 + cx) += gray
-            counts(cy * 8 + cx) += 1
-            x += 1
-          }
-          y += 1
+      val (w, h, _, rgb) = pixels(bytes)
+      val sums = new Array[Long](64)
+      val counts = new Array[Long](64)
+      var y = 0
+      while (y < h) {
+        val cy = math.min(7, y * 8 / h)
+        var x = 0
+        while (x < w) {
+          val cx = math.min(7, x * 8 / w)
+          val p = rgb(y * w + x)
+          // integer luma (BT.601 weights scaled by 1000) — deterministic
+          val gray = (((p >> 16) & 0xff) * 299 + ((p >> 8) & 0xff) * 587 + (p & 0xff) * 114)
+          sums(cy * 8 + cx) += gray
+          counts(cy * 8 + cx) += 1
+          x += 1
         }
-        var total = 0.0
-        val means = Array.tabulate(64)(c => sums(c).toDouble / math.max(1L, counts(c)))
-        means.foreach(total += _)
-        val mean = total / 64
-        var bits = 0L
-        var c = 0
-        while (c < 64) {
-          if (means(c) > mean) bits |= (1L << c)
-          c += 1
-        }
-        Some(bits)
+        y += 1
       }
+      var total = 0.0
+      val means = Array.tabulate(64)(c => sums(c).toDouble / math.max(1L, counts(c)))
+      means.foreach(total += _)
+      val mean = total / 64
+      var bits = 0L
+      var c = 0
+      while (c < 64) {
+        if (means(c) > mean) bits |= (1L << c)
+        c += 1
+      }
+      Some(bits)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Adds an `ahash: bigint` perceptual-hash column decoded per

@@ -798,7 +798,7 @@ object CogReader {
         merged
       case _ => raw // self-contained per-tile streams (no tag 347)
     }
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(stream))
+    val img = TileSources.readImage(stream)
     if (img == null) throw new java.io.IOException("undecodable JPEG tile")
     val tw = ifd.tileWidth
     val th = ifd.tileHeight
@@ -808,17 +808,9 @@ object CogReader {
     val w = math.min(tw, img.getWidth)
     val h = math.min(th, img.getHeight)
     val nb = math.min(spp, r.getNumBands)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val dst = (y * tw + x) * spp
-        var c = 0
-        while (c < nb) { out(dst + c) = r.getSample(x, y, c).toByte; c += 1 }
-        x += 1
-      }
-      y += 1
-    }
+    // ImageIO's JPEG reader always yields an 8-bit pixel-interleaved raster
+    if (!TileSources.copyInterleaved(r, out, w, h, tw * spp, spp, nb))
+      throw new java.io.IOException("JPEG tile decoded to an unsupported raster layout")
     out
   }
 

@@ -6,9 +6,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
+import java.awt.image.{BufferedImage, ColorModel, ComponentColorModel, DataBufferByte,
+  PixelInterleavedSampleModel, Raster}
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, CompletionException}
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
 
 /** HTTP tile sources (SURVEY §2.1 S2/S4/S6/S7).
   *
@@ -36,7 +41,7 @@ object TileSources {
     resp.body()
   }
 
-  private def httpGetAsync(url: String): java.util.concurrent.CompletableFuture[Array[Byte]] = {
+  private def httpGetAsync(url: String): CompletableFuture[Array[Byte]] = {
     val req = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofSeconds(30)).GET().build()
     client.sendAsync(req, HttpResponse.BodyHandlers.ofByteArray()).thenApply { resp =>
@@ -45,6 +50,12 @@ object TileSources {
       resp.body()
     }
   }
+
+  /** `f.join()`, rethrowing a failure as the exception the stage threw
+    * (e.g. `IOException("HTTP 404 for …")`), not wrapped in a
+    * `CompletionException`. */
+  private def await[T](f: CompletableFuture[T]): T =
+    try f.join() catch { case e: CompletionException if e.getCause != null => throw e.getCause }
 
   /** Windowed lookahead over a partition's rows: `start` runs up to
     * `window` rows ahead of the consumer, so the requests it starts
@@ -86,32 +97,102 @@ object TileSources {
   final case class ImageTile(z: Int, x: Int, y: Int,
       height: Int, width: Int, bands: Int, data: Array[Byte])
 
+  /** `ImageIO.read` over an in-memory stream: `ImageIO.read(InputStream)`
+    * would cache every image in a temp file. Null when no reader knows the
+    * format, like `ImageIO.read`. */
+  def readImage(bytes: Array[Byte]): BufferedImage = {
+    val in = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(bytes))
+    val img = ImageIO.read(in) // closes `in` once a reader has claimed it
+    if (img == null) in.close()
+    img
+  }
+
+  /** Decodes an image to bands-last bytes: 1 band for single-component
+    * images, RGBA for images with alpha, else RGB, with `getRGB`'s colors.
+    * An image whose samples are already those colors ([[rgbSamples]]) over
+    * a pixel-interleaved byte raster (JPEG, RGB/RGBA PNG, 24-bit BMP) is
+    * copied straight from the raster; gray, palette, 16-bit and
+    * premultiplied images take `getRGB`. Throws
+    * `IOException("undecodable image")` when no reader knows the bytes.
+    * [[fetch]] runs it on the image's fetch future, inside the prefetch
+    * window. */
   def decodeImage(bytes: Array[Byte]): (Int, Int, Int, Array[Byte]) = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    val img = readImage(bytes)
     if (img == null) throw new java.io.IOException("undecodable image")
+    rgbBytes(img)
+  }
+
+  /** [[decodeImage]] of an already-read image. */
+  def rgbBytes(img: BufferedImage): (Int, Int, Int, Array[Byte]) = {
     val w = img.getWidth
     val h = img.getHeight
-    val hasAlpha = img.getColorModel.hasAlpha
-    val bands = if (img.getColorModel.getNumComponents == 1) 1 else if (hasAlpha) 4 else 3
+    val cm = img.getColorModel
+    val bands = if (cm.getNumComponents == 1) 1 else if (cm.hasAlpha) 4 else 3
     val out = new Array[Byte](h * w * bands)
-    // bulk getRGB: one color-model conversion pass, not one call per pixel
-    val argb = img.getRGB(0, 0, w, h, null, 0, w)
-    var p = 0
-    var i = 0
-    val n = h * w
-    while (p < n) {
-      val v = argb(p)
-      if (bands == 1) { out(i) = (v & 0xff).toByte; i += 1 }
-      else {
-        out(i) = ((v >> 16) & 0xff).toByte
-        out(i + 1) = ((v >> 8) & 0xff).toByte
-        out(i + 2) = (v & 0xff).toByte
-        if (bands == 4) { out(i + 3) = ((v >> 24) & 0xff).toByte; i += 4 } else i += 3
+    if (!(rgbSamples(cm) && copyInterleaved(img.getRaster, out, w, h, w * bands, bands, bands))) {
+      // bulk getRGB: one color-model conversion pass, not one call per pixel
+      val argb = img.getRGB(0, 0, w, h, null, 0, w)
+      var p = 0
+      var i = 0
+      val n = h * w
+      while (p < n) {
+        val v = argb(p)
+        if (bands == 1) { out(i) = (v & 0xff).toByte; i += 1 }
+        else {
+          out(i) = ((v >> 16) & 0xff).toByte
+          out(i + 1) = ((v >> 8) & 0xff).toByte
+          out(i + 2) = (v & 0xff).toByte
+          if (bands == 4) { out(i + 3) = ((v >> 24) & 0xff).toByte; i += 4 } else i += 3
+        }
+        p += 1
       }
-      p += 1
     }
     (h, w, bands, out)
   }
+
+  /** True when `getRGB` returns the raw samples: an 8-bit, non-premultiplied
+    * sRGB [[java.awt.image.ComponentColorModel]] with 3 or 4 components. */
+  private[sources] def rgbSamples(cm: ColorModel): Boolean = cm match {
+    case c: ComponentColorModel => c.getColorSpace.isCS_sRGB && !c.isAlphaPremultiplied &&
+      c.getComponentSize.forall(_ == 8) && (c.getNumComponents == 3 || c.getNumComponents == 4)
+    case _ => false
+  }
+
+  /** Copies bands `0 until nb` of the top-left `w`×`h` window of `r` into
+    * `out`, pixel (x, y) band c at `y * outRow + x * outPixel + c`, straight
+    * from the raster's byte array, and returns true — when `r` is an 8-bit
+    * pixel-interleaved raster over one bank with no sample-model translate.
+    * Otherwise copies nothing and returns false. */
+  private[sources] def copyInterleaved(r: Raster, out: Array[Byte], w: Int, h: Int,
+      outRow: Int, outPixel: Int, nb: Int): Boolean =
+    (r.getSampleModel, r.getDataBuffer) match {
+      case (sm: PixelInterleavedSampleModel, db: DataBufferByte)
+          if db.getNumBanks == 1 && r.getSampleModelTranslateX == 0 &&
+            r.getSampleModelTranslateY == 0 =>
+        val data = db.getData
+        val scan = sm.getScanlineStride
+        val step = sm.getPixelStride
+        val offsets = sm.getBandOffsets
+        var c = 0
+        while (c < nb) {
+          var y = 0
+          while (y < h) {
+            var src = db.getOffset + y * scan + offsets(c)
+            var dst = y * outRow + c
+            var x = 0
+            while (x < w) {
+              out(dst) = data(src)
+              src += step
+              dst += outPixel
+              x += 1
+            }
+            y += 1
+          }
+          c += 1
+        }
+        true
+      case _ => false
+    }
 
   /** WMS URL construction (`utils.py:65-95`): parse version + crs/srs from
     * the query string, project the tile bounds (edges densified with 21
@@ -191,16 +272,21 @@ object TileSources {
 
   /** S2-S7 in one pass, one row per tile (the reference's two Dask tasks
     * per tile, `main.py:90-97`): each tile's label request and image
-    * request start together inside the same prefetch window; then both
-    * are decoded and the tile is emitted whole, so labels and images never
-    * need to be regrouped or joined by tile key.
+    * request start together inside the same prefetch window, and the tile
+    * is emitted whole, so labels and images never need to be regrouped or
+    * joined by tile key. A TMS or WMS image is decoded ([[decodeImage]]) as
+    * the completion stage of its fetch, on the JVM common pool, so the
+    * window's images decode while the consumer labels and sinks earlier
+    * tiles; the label is decoded on the consumer thread, which alone adds
+    * to `failures`.
     *
     * Label fetch or decode errors degrade to an empty feature set
-    * (`main.py:38-44`) and are counted in `failures`. Image errors fail
-    * the task (Spark retries), matching the reference's uncaught image
-    * path (`main.py:50-63`) while keeping at-least-once semantics. The
-    * imagery source is dispatched once, here at plan time; a COG is read
-    * synchronously, tile by tile, as the consumer reaches it. */
+    * (`main.py:38-44`) and are counted in `failures`. Image fetch or decode
+    * errors fail the task (Spark retries) with their own `IOException`,
+    * matching the reference's uncaught image path (`main.py:50-63`) while
+    * keeping at-least-once semantics. The imagery source is dispatched
+    * once, here at plan time; a COG is read synchronously, tile by tile,
+    * as the consumer reaches it. */
   def fetch(tiles: DataFrame, labelSource: Option[String], imagery: Option[String],
       layer: String = "osm",
       failures: Option[LongAccumulator] = None): Dataset[FetchedTile] = {
@@ -215,7 +301,7 @@ object TileSources {
           val image = source.collect {
             case (i, WmsSource) => httpGetAsync(wmsUrl(fillUrl(i, z, x, y), z, x, y))
             case (i, TmsSource) => httpGetAsync(fillUrl(i, z, x, y))
-          }
+          }.map(_.thenApply(decodeImage _))
           (label, image)
         }.map { case ((z, x, y), (label, image)) =>
           val features = label.fold(Seq.empty[TileFeature]) { f =>
@@ -235,7 +321,7 @@ object TileSources {
             }
           }
           val (h, w, bands, data) = (source, image) match {
-            case (_, Some(f)) => decodeImage(f.join())
+            case (_, Some(f)) => await(f)
             case (Some((i, CogSource)), None) => CogReader.tile(i, graft.core.TileKey(z, x, y))
             case _ => (0, 0, 0, null)
           }

@@ -79,7 +79,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
             else if (path.startsWith("/mixed/")) mixedTile(path)
             else if (path.startsWith("/neg/")) negativeBufferTile
             else fixtureTile
-          } else if (path.endsWith(".png") || path.startsWith("/wms")) {
+          } else if (path.startsWith("/junk/")) "200 OK, but not an image".getBytes
+          else if (path.endsWith(".png") || path.startsWith("/wms")) {
             if (path.startsWith("/wms")) wmsHits += 1
             pngBytes
           } else Array.emptyByteArray
@@ -225,8 +226,25 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         mlType = "classification")
       val e = intercept[org.apache.spark.SparkException] { job.collect(spark) }
       assert(e.getMessage != null)
+      assert(causeMessages(e).exists(_.contains("HTTP 404")), causeMessages(e))
     }
   }
+
+  test("an image that answers 200 but does not decode fails the job with its IOException") {
+    withServer { port =>
+      val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
+        classesJson,
+        imagery = s"http://localhost:$port/junk/{z}/{x}/{y}.jpg",
+        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        mlType = "classification")
+      val e = intercept[org.apache.spark.SparkException] { job.collect(spark) }
+      assert(causeMessages(e).exists(_.contains("undecodable image")), causeMessages(e))
+    }
+  }
+
+  /** The messages of `e` and of every exception in its cause chain. */
+  private def causeMessages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
 
   /** Every node of the executed plan, through adaptive query stages. */
   private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[String] =
