@@ -1,6 +1,7 @@
 package graft.filters
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
 
 /** Mapbox-GL filter DSL — abstract syntax tree.
@@ -66,11 +67,12 @@ object GLFilter {
     }
   }
 
-  /** In-memory reference evaluator over the engine's relational feature form
-    * (props stringified to Map[String,String], geometry type, optional id) —
-    * used by property tests to cross-check the Catalyst compilation. The
-    * compiler in [[FilterCompiler]] and this evaluator implement the same
-    * semantics by construction; tests assert they agree on random trees.
+  /** In-memory evaluator over the engine's relational feature form (props
+    * stringified to Map[String,String], geometry type, optional id) — the
+    * predicate of the job's label kernel ([[graft.functions.TileLabels]])
+    * and of segmentation. The compiler in [[FilterCompiler]] and this
+    * evaluator implement the same semantics by construction; tests assert
+    * they agree on random trees.
     *
     * Semantics (matching the reference's *de facto* Python behavior,
     * filter.py:69-98, except where noted in SURVEY §7 R4):
@@ -99,21 +101,22 @@ object GLFilter {
     def eq(a: String, l: Lit): Boolean = l match {
       case SLit(v) => a == v
       case BLit(_) => a == litStr(l)
-      case LLit(v) => a.toDoubleOption.contains(v.toDouble)
-      case DLit(v) => a.toDoubleOption.contains(v)
+      case LLit(v) => toDouble(a).contains(v.toDouble)
+      case DLit(v) => toDouble(a).contains(v)
     }
     def ordered(a: String, l: Lit, o: String): Boolean = {
-      def cmp[T](x: T, y: T)(implicit ord: Ordering[T]): Boolean = o match {
-        case "<" => ord.lt(x, y)
-        case ">" => ord.gt(x, y)
-        case "<=" => ord.lteq(x, y)
-        case ">=" => ord.gteq(x, y)
+      def holds(c: Int): Boolean = o match {
+        case "<" => c < 0
+        case ">" => c > 0
+        case "<=" => c <= 0
+        case ">=" => c >= 0
       }
       l match {
-        case SLit(v) => cmp(a, v)
+        // Spark orders strings by their UTF-8 bytes, not by UTF-16 units
+        case SLit(v) => holds(UTF8String.fromString(a).binaryCompare(UTF8String.fromString(v)))
         case BLit(_) => false
-        case LLit(v) => a.toDoubleOption.exists(cmp(_, v.toDouble))
-        case DLit(v) => a.toDoubleOption.exists(cmp(_, v))
+        case LLit(v) => toDouble(a).exists(d => holds(compareDoubles(d, v.toDouble)))
+        case DLit(v) => toDouble(a).exists(d => holds(compareDoubles(d, v)))
       }
     }
     f match {
@@ -137,4 +140,21 @@ object GLFilter {
         }
     }
   }
+
+  /** A property value as `try_cast(v AS double)` reads it: Java's number
+    * syntax around optional whitespace (`toDoubleOption` accepts what
+    * `parseDouble` does, without throwing), else Spark's case-insensitive
+    * `inf`/`infinity`/`nan` literals (`Cast.processFloatingPointSpecialLiterals`). */
+  private def toDouble(s: String): Option[Double] =
+    s.toDoubleOption.orElse(s.trim.toLowerCase(java.util.Locale.ROOT) match {
+      case "inf" | "+inf" | "infinity" | "+infinity" => Some(Double.PositiveInfinity)
+      case "-inf" | "-infinity" => Some(Double.NegativeInfinity)
+      case "nan" => Some(Double.NaN)
+      case _ => None
+    })
+
+  /** Spark SQL's double order: NaN above everything and equal to itself,
+    * -0.0 equal to 0.0 (`SQLOrderingUtil.compareDoubles`). */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
 }

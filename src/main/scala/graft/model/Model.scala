@@ -9,6 +9,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * bottom-left origin, matching the Python decoder convention). */
 final case class Coord(x: Double, y: Double)
 
+/** What a label reads of one feature, in either of its two forms. */
+sealed trait Feature {
+  def fidx: Int
+  def geomType: String
+  def parts: Seq[Seq[Coord]]
+  def props: Map[String, String]
+  def id: Option[Long]
+}
+
 /** Relational feature form: one row per feature within a tile.
   * `parts` flattens any geometry into coordinate runs (rings for polygons).
   * `fidx` preserves within-tile feature order — label semantics are
@@ -20,7 +29,7 @@ final case class FeatureRow(
     multi: Boolean,
     parts: Seq[Seq[Coord]],
     props: Map[String, String],
-    id: Option[Long])
+    id: Option[Long]) extends Feature
 
 /** One feature nested in its tile's row: a [[FeatureRow]] without the
   * tile key. A fetched tile carries its features as an array of these, in
@@ -31,7 +40,7 @@ final case class TileFeature(
     multi: Boolean,
     parts: Seq[Seq[Coord]],
     props: Map[String, String],
-    id: Option[Long]) {
+    id: Option[Long]) extends Feature {
   def toRow(z: Int, x: Int, y: Int): FeatureRow =
     FeatureRow(z, x, y, fidx, geomType, multi, parts, props, id)
 }

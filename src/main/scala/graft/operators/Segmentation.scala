@@ -1,15 +1,16 @@
 package graft.operators
 
 import graft.filters.GLFilter
-import graft.model.{ClassSpec, Coord, FeatureRow, TileFeature}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import graft.model.{ClassSpec, Coord, Feature, FeatureRow}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, LineString, Point, Polygon}
 
 /** A3 — segmentation label: per-tile 256x256 class-index raster
   * (`label.py:36-54`), computed by [[Segmentation.labelForTile]] with an
-  * in-JVM rasterizer: in place on a fetched tile's row (`tileSegmentation`)
-  * or through a `mapGroups` over a feature table (`segmentation`).
+  * in-JVM rasterizer: on a fetched tile's row by the job's label kernel
+  * ([[graft.functions.TileLabels]]) or through a `mapGroups` over a
+  * feature table (`segmentation`).
   *
   * Faithfulness notes (vs `/root/reference/label_maker_dask/label.py`):
   *  - coordinates convert 0-4096 -> 0-255 with banker's rounding and a
@@ -178,7 +179,7 @@ object Segmentation {
   /** Segmentation label for one tile (features in fidx order),
     * mirroring `label.py:36-54` including the per-class coordinate
     * re-conversion and the `break`-on-topology-error. */
-  def labelForTile(features: Seq[FeatureRow], classes: Seq[ClassSpec]): Array[Byte] = {
+  def labelForTile(features: Seq[Feature], classes: Seq[ClassSpec]): Array[Byte] = {
     val geos = scala.collection.mutable.ArrayBuffer[(Geometry, Int)]()
     features.sortBy(_.fidx).foreach { f =>
       var parts = f.parts
@@ -199,17 +200,6 @@ object Segmentation {
       }
     }
     rasterize(geos.toSeq)
-  }
-
-  /** A3 on a fetched tile row (`TileSources.fetch`): [[labelForTile]]
-    * over the tile's nested `features` array, in place — no regrouping by
-    * tile key and no join; a featureless tile rasterizes to all
-    * background. */
-  def tileSegmentation(z: Column, x: Column, y: Column, features: Column,
-      classes: Seq[ClassSpec]): Column = {
-    val label = udf((z: Int, x: Int, y: Int, fs: Seq[TileFeature]) =>
-      labelForTile(fs.map(_.toRow(z, x, y)), classes))
-    label(z, x, y, features)
   }
 
   /** The distributed operator: tiles left-joined with per-tile rasters;

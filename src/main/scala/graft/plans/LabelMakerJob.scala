@@ -1,8 +1,9 @@
 package graft.plans
 
 import graft.core.BBox
+import graft.functions.TileLabels
 import graft.model.{ClassSpec, MlType}
-import graft.operators.{Labels, Segmentation, TileEnumeration}
+import graft.operators.TileEnumeration
 import graft.sources.TileSources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,10 +48,11 @@ final case class LabelMakerJob(
   /** P2/P3 — the full labeled-tile plan: (z, x, y, label[, height, width,
     * bands, image]). One row per tile from one fetch pass that brings the
     * label tile and the image together (the reference's two Dask tasks per
-    * tile, `main.py:90-97`); the label is computed in place on that row.
-    * The plan is range -> fetch -> label projection: one stage, no shuffle,
-    * no join. Lazy; `explain` it for the reference's `dask.visualize`
-    * equivalent. */
+    * tile, `main.py:90-97`); the label is computed in place on that row by
+    * one native expression ([[graft.functions.TileLabels]]) that reads each
+    * feature once for every class. The plan is range -> fetch -> label
+    * projection: one stage, no shuffle, no join. Lazy; `explain` it for the
+    * reference's `dask.visualize` equivalent. */
   def build(spark: SparkSession): DataFrame =
     build(spark, spark.sparkContext.longAccumulator("label_fetch_failures"))
 
@@ -59,13 +61,7 @@ final case class LabelMakerJob(
   def build(spark: SparkSession, labelFailures: LongAccumulator): DataFrame = {
     val fetched = TileSources.fetch(tiles(spark), Some(labelSource), imagery,
       failures = Some(labelFailures))
-    val features = col("features")
-    val label = mlType match {
-      case MlType.Classification => Labels.tileClassification(features, classes)
-      case MlType.ObjectDetection => Labels.tileObjectDetection(features, classes)
-      case MlType.Segmentation =>
-        Segmentation.tileSegmentation(col("z"), col("x"), col("y"), features, classes)
-    }
+    val label = TileLabels.column(col("features"), classes, mlType)
     val imageCols =
       if (imagery.isEmpty) Nil else Seq("height", "width", "bands", "image").map(col)
     fetched.select(Seq(col("z"), col("x"), col("y"), label.as("label")) ++ imageCols: _*)

@@ -1,6 +1,8 @@
 package graft.filters
 
 import graft.SparkSpec
+import graft.functions.TileLabels
+import graft.model.{ClassSpec, Coord, MlType, TileFeature}
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -58,10 +60,45 @@ class GLFilterSpec extends SparkSpec {
     assert(ev("""["==", "$id", 7]""", p, id = Some(7L)))
   }
 
+  test("numeric property values read as try_cast reads them") {
+    import spark.implicits._
+    val values = Seq("nan", "NaN", "-nan", "inf", "+inf", "-inf", "INF", "Infinity", "-Infinity",
+      " 12 ", "\t7\n", "1e3", "1d", "2.5f", "0x1p3", "-0", "0", "12abc", "abc", "")
+    val df = values.map(v => Map("w" -> v)).toDF("props")
+      .select($"props", lit("Point").as("geomType"), lit(null).cast("bigint").as("id")).cache()
+    for (json <- Seq("""[">", "w", 5]""", """["<", "w", 5]""", """[">=", "w", 1000]""",
+        """["<=", "w", 0]""", """[">=", "w", 0]""", """["==", "w", 12]""", """["!=", "w", 8]""",
+        """["in", "w", 1000, 7]""")) {
+      val ast = GLFilter.parseJson(json)
+      val got = df.filter(FilterCompiler.compile(ast)).collect().map(_.getMap[String, String](0)("w")).toSet
+      val expected = values.filter(v => GLFilter.eval(ast, Map("w" -> v), "Point", None)).toSet
+      assert(got == expected, s"filter $json: spark-only ${got diff expected}, evaluator-only ${expected diff got}")
+    }
+    df.unpersist()
+  }
+
+  test("string property values order as Spark orders them, by UTF-8 bytes") {
+    import spark.implicits._
+    // U+FFFF sorts after U+1F600 in UTF-16 units but before it in UTF-8
+    val values = Seq("\uFFFF", "\uD83D\uDE00", "a", "\u00E9", "")
+    val df = values.map(v => Map("w" -> v)).toDF("props")
+      .select($"props", lit("Point").as("geomType"), lit(null).cast("bigint").as("id")).cache()
+    for (json <- Seq("[\"<\", \"w\", \"\uD83D\uDE00\"]", "[\">=\", \"w\", \"\uFFFF\"]", """[">", "w", "b"]""")) {
+      val ast = GLFilter.parseJson(json)
+      val got = df.filter(FilterCompiler.compile(ast)).collect().map(_.getMap[String, String](0)("w")).toSet
+      val expected = values.filter(v => GLFilter.eval(ast, Map("w" -> v), "Point", None)).toSet
+      assert(got == expected, s"filter $json: spark-only ${got diff expected}, evaluator-only ${expected diff got}")
+    }
+    df.unpersist()
+  }
+
   // --- randomized parity: in-memory evaluator vs Catalyst compilation ---
 
   private val keys = Vector("building", "highway", "width", "surface", "name")
-  private val vals = Vector("yes", "primary", "10", "3.5", "dirt", "asphalt", "true")
+  // the last seven are numbers only to Spark's `try_cast` special-literal
+  // and whitespace rules, which the evaluator must share
+  private val vals = Vector("yes", "primary", "10", "3.5", "dirt", "asphalt", "true",
+    "nan", "inf", "-inf", "NaN", "Infinity", " 12 ", "1e3")
 
   private def randLit(r: Random): String = r.nextInt(4) match {
     case 0 => "\"" + vals(r.nextInt(vals.size)) + "\""
@@ -92,27 +129,52 @@ class GLFilterSpec extends SparkSpec {
     }
   }
 
-  test("random filter trees: evaluator and Catalyst Column agree") {
+  /** 200 random features and 60 random filter trees, one seeded draw. */
+  private lazy val (features, trees) = {
     val r = new Random(42)
-    val features = (0 until 200).map { i =>
+    val fs = (0 until 200).map { i =>
       val props = keys.filter(_ => r.nextBoolean())
         .map(k => k -> vals(r.nextInt(vals.size))).toMap
       val geomType = Vector("Point", "LineString", "Polygon")(r.nextInt(3))
       val id: java.lang.Long = if (r.nextBoolean()) java.lang.Long.valueOf(i.toLong % 10) else null
       (i, props, geomType, id)
     }
+    (fs, Seq.fill(60)(randFilter(r, 3)))
+  }
+
+  /** The features each tree matches, by the in-memory evaluator. */
+  private def evaluated(ast: GLFilter): Set[Int] = features.collect {
+    case (i, props, gt, id) if GLFilter.eval(ast, props, gt, Option(id).map(_.longValue)) => i
+  }.toSet
+
+  test("random filter trees: evaluator and Catalyst Column agree") {
     import spark.implicits._
     val df = features.toDF("fid", "props", "geomType", "id").cache()
-    (1 to 60).foreach { _ =>
-      val json = randFilter(r, 3)
+    trees.foreach { json =>
       val ast = GLFilter.parseJson(json)
-      val expected = features.collect {
-        case (i, props, gt, id) if GLFilter.eval(ast, props, gt, Option(id).map(_.longValue)) => i
-      }.toSet
+      val expected = evaluated(ast)
       val got = df.filter(FilterCompiler.compile(ast))
         .select("fid").collect().map(_.getInt(0)).toSet
       assert(got == expected, s"filter $json: spark=${got.size} mem=${expected.size} diff=${(got diff expected) ++ (expected diff got)}")
     }
     df.unpersist()
+  }
+
+  test("random filter trees: the tile label kernel's classification slots agree with the evaluator") {
+    import spark.implicits._
+    // one tile per feature and one class per tree: slot t+1 of a tile's
+    // label says whether tree t matched its feature
+    val classes = trees.zipWithIndex.map { case (json, t) => ClassSpec(s"t$t", GLFilter.parseJson(json)) }
+    val tiles = features.map { case (i, props, gt, id) =>
+      (i, Seq(TileFeature(0, gt, multi = false, Seq(Seq(Coord(1, 1))), props, Option(id).map(_.longValue))))
+    }.toDF("fid", "features")
+    val labels = tiles.select(col("fid"), TileLabels.column(col("features"), classes, MlType.Classification))
+      .as[(Int, Seq[Int])].collect().toMap
+    classes.zipWithIndex.foreach { case (c, t) =>
+      val got = labels.collect { case (i, l) if l(t + 1) == 1 => i }.toSet
+      val expected = evaluated(c.filter)
+      assert(got == expected, s"filter ${trees(t)}: kernel=${got.size} mem=${expected.size} diff=${(got diff expected) ++ (expected diff got)}")
+    }
+    labels.foreach { case (i, l) => assert(l.head == (if (l.tail.contains(1)) 0 else 1), s"feature $i: $l") }
   }
 }

@@ -5,6 +5,7 @@ import graft.SparkSpec
 import graft.core.BBox
 import graft.sources.Mvt
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, ScalaUDF}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 import java.net.InetSocketAddress
@@ -250,6 +251,10 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[String] =
     collect(df.queryExecution.executedPlan) { case p => p.nodeName }
 
+  /** Every expression of the executed plan, with its subexpressions. */
+  private def planExpressions(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+    collect(df.queryExecution.executedPlan) { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+
   test("the job is one stage: no Exchange, BroadcastExchange or join in any ml_type's plan") {
     withServer { port =>
       for (ml <- Seq("classification", "object-detection", "segmentation");
@@ -262,6 +267,11 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         val nodes = planNodes(df)
         val banned = nodes.filter(n => n.contains("Exchange") || n.contains("Join"))
         assert(banned.isEmpty, s"$ml, imagery=${imagery != null}: ${nodes.mkString(" <- ")}")
+        // the label is one native expression: no interpreted lambda, no UDF
+        val interpreted = planExpressions(df).collect {
+          case e @ (_: HigherOrderFunction | _: ScalaUDF) => e.prettyName
+        }
+        assert(interpreted.isEmpty, s"$ml, imagery=${imagery != null}: ${interpreted.mkString(", ")}")
       }
     }
   }
