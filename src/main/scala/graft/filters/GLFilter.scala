@@ -69,8 +69,9 @@ object GLFilter {
 
   /** In-memory evaluator over the engine's relational feature form (props
     * stringified to Map[String,String], geometry type, optional id) — the
-    * predicate of the job's label kernel ([[graft.functions.TileLabels]])
-    * and of segmentation. The compiler in [[FilterCompiler]] and this
+    * predicate of every per-tile label function the job applies
+    * (`Labels.classificationForTile`, `Labels.objectDetectionForTile`,
+    * `Segmentation.labelForTile`). The compiler in [[FilterCompiler]] and this
     * evaluator implement the same semantics by construction; tests assert
     * they agree on random trees.
     *

@@ -1,26 +1,13 @@
 package graft.operators
 
-import graft.filters.FilterCompiler
-import graft.model.{ClassSpec, Coord, MlType}
+import graft.filters.{FilterCompiler, GLFilter}
+import graft.model.{ClassSpec, Coord, Feature, MlType}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Per-tile label aggregations (SURVEY §2.3, A1/A2/A4/A5).
-  *
-  * Input feature DataFrame schema (the engine's relational feature form):
-  * `z:int, x:int, y:int, fidx:int, geomType:string, multi:boolean,
-  *  parts:array<array<struct<x:double,y:double>>>,
-  *  props:map<string,string>, id:bigint`.
-  * `tiles` is the full keyspace (z,x,y) — tiles without features must still
-  * emit a record with the empty label (A4, `label.py:99-109` + the implicit
-  * every-tile guarantee of `main.py:90-97`).
-  *
-  * All label math here is built-in Column expressions, and each operator
-  * shuffles once on the tile key. The job labels a fetched tile's row in
-  * place with the native [[graft.functions.TileLabels]] kernel instead;
-  * these operators are the reference it is tested against. Rasterization
-  * (A3) lives in [[Segmentation]].
-  */
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
+
 /** 0-4096-space geometry bounds carried out of [[Labels.negBufferBounds]] —
   * top-level (not nested in the object) so the UnsafeProjection's generated
   * code can resolve its accessors: Janino fails method lookup on
@@ -28,6 +15,30 @@ import org.apache.spark.sql.functions._
   * interpreter mode (the [[graft.streaming.SessionState]] lesson). */
 final case class Bounds4096(minx: Double, miny: Double, maxx: Double, maxy: Double)
 
+/** One object-detection box in pixels, `[xmin, ymin, xmax, ymax, cls]`
+  * (`label.py:24-35`) — top-level for the same Janino reason as
+  * [[Bounds4096]]. */
+final case class Box(xmin: Int, ymin: Int, xmax: Int, ymax: Int, cls: Int)
+
+/** Per-tile label aggregations (SURVEY §2.3, A1/A2/A4/A5), in two forms.
+  *
+  * The job labels each fetched tile's features as Scala objects, in the
+  * task that fetched them: [[classificationForTile]],
+  * [[objectDetectionForTile]] and [[Segmentation.labelForTile]].
+  *
+  * The feature-table operators (`classification` and `objectDetection`,
+  * built-in Column expressions, and [[Segmentation.segmentation]]) each
+  * shuffle once on the tile key; they serve the `ql01`/`ql02`/`qseg01`
+  * queries and are the independent reference the per-tile functions are
+  * tested against. Their input schema (the engine's relational feature form):
+  * `z:int, x:int, y:int, fidx:int, geomType:string, multi:boolean,
+  *  parts:array<array<struct<x:double,y:double>>>,
+  *  props:map<string,string>, id:bigint`.
+  * `tiles` is the full keyspace (z,x,y) — tiles without features must still
+  * emit a record with the empty label (A4, `label.py:99-109` + the implicit
+  * every-tile guarantee of `main.py:90-97`). Rasterization (A3) lives in
+  * [[Segmentation]].
+  */
 object Labels {
   private val tileKey = Seq("z", "x", "y")
 
@@ -83,6 +94,69 @@ object Labels {
       val e = g.getEnvelopeInternal
       Some(Bounds4096(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY))
     }
+  }
+
+  /** A1 for one tile's features: slot c+1 = some feature matches class c,
+    * slot 0 = background, 1 iff no class fired (so `[1]` with no classes).
+    * Each class's filter is evaluated at most once per feature, and no
+    * feature is read once every class has fired. */
+  def classificationForTile(features: Seq[Feature], classes: Seq[ClassSpec]): Seq[Int] = {
+    val filters = classes.map(_.filter).toArray
+    val slots = new Array[Int](filters.length + 1)
+    var open = filters.length
+    val it = features.iterator
+    while (open > 0 && it.hasNext) {
+      val f = it.next()
+      var c = 0
+      while (c < filters.length) {
+        if (slots(c + 1) == 0 && GLFilter.eval(filters(c), f.props, f.geomType, f.id)) {
+          slots(c + 1) = 1
+          open -= 1
+        }
+        c += 1
+      }
+    }
+    if (open == filters.length) slots(0) = 1
+    ArraySeq.unsafeWrapArray(slots)
+  }
+
+  /** A2 for one tile's features (in `fidx` order): per feature with
+    * coordinates, one box per matching class in class order — the
+    * reference's feature-then-class emit order. A buffer >= 0 expands the
+    * bounds; a negative one shrinks the real geometry ([[negBufferBounds]]),
+    * and shrunk away gives no box. */
+  def objectDetectionForTile(features: Seq[Feature], classes: Seq[ClassSpec]): Seq[Box] = {
+    val indexed = classes.zipWithIndex
+    val boxes = ArrayBuffer[Box]()
+    features.foreach { f =>
+      var minx, miny = Double.PositiveInfinity
+      var maxx, maxy = Double.NegativeInfinity
+      var points = 0
+      f.parts.foreach(_.foreach { p =>
+        if (p.x < minx) minx = p.x
+        if (p.x > maxx) maxx = p.x
+        if (p.y < miny) miny = p.y
+        if (p.y > maxy) maxy = p.y
+        points += 1
+      })
+      if (points > 0) indexed.foreach { case (cl, c) =>
+        if (GLFilter.eval(cl.filter, f.props, f.geomType, f.id)) {
+          val b = cl.buffer.getOrElse(0.0)
+          if (b >= 0) boxes += pixelBox(minx - b, miny - b, maxx + b, maxy + b, c + 1)
+          else negBufferBounds(f.geomType, f.parts, b)
+            .foreach(nb => boxes += pixelBox(nb.minx, nb.miny, nb.maxx, nb.maxy, c + 1))
+        }
+      }
+    }
+    boxes.toSeq
+  }
+
+  /** [[pixelBboxCols]] on Scala doubles: `Math.rint` is Python `round` and
+    * Spark `bround` on these magnitudes. */
+  private def pixelBox(minx: Double, miny: Double, maxx: Double, maxy: Double, cls: Int): Box = {
+    def px(v: Double): Int = Math.rint(v * 255.0 / 4096.0).toInt
+    def clamp(v: Int): Int = math.max(0, math.min(255, v))
+    Box(clamp(px(minx) - 4), clamp(255 - px(maxy) - 4), clamp(px(maxx) + 4), clamp(255 - px(miny) + 4), cls)
   }
 
   /** [[negBufferBounds]] as a UDF: a GEOS-style buffer is not expressible

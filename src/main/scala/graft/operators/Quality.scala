@@ -1955,8 +1955,9 @@ object Quality {
     * caller's critical value (3 841 459 ≈ χ²₀.₀₅,df=1).
     *
     * Scale shape: ONE map-side-combined groupBy on the arm column,
-    * left-joined to the broadcast |weights|-row allocation table, one
-    * 1-row total broadcast, one ≤ |weights|-row rollup. BIGINT
+    * the |weights|-row allocation table left-joined to it (and broadcast
+    * into the unweighted-arm anti join), one 1-row total broadcast, one
+    * ≤ |weights|-row rollup. BIGINT
     * contract: 10⁶·(W·n)² < 2⁶³ — W·n ≲ 3 M assignment rows; past
     * that, divide counts by a common factor first (the ratio is
     * scale-free). */
@@ -1968,7 +1969,7 @@ object Quality {
       "duplicate arm in weights")
     val spark = df.sparkSession
     import spark.implicits._
-    val wdf = broadcast(weights.toDF("arm", "w"))
+    val wdf = weights.toDF("arm", "w")
     val obs = df.select(armCol.cast("string").as("arm"))
       .filter(col("arm").isNotNull)
       .groupBy("arm").agg(count(lit(1)).as("o"))
@@ -1977,7 +1978,7 @@ object Quality {
     // as a NULL-weight row the chi2 sum turns NULL (loud, not dropped)
     val joined = wdf.join(obs, Seq("arm"), "left_outer")
       .select(col("arm"), col("w"), coalesce(col("o"), lit(0L)).as("o"))
-      .unionByName(obs.join(wdf, Seq("arm"), "left_anti")
+      .unionByName(obs.join(broadcast(wdf), Seq("arm"), "left_anti")
         .select(col("arm"), lit(null).cast("long").as("w"), col("o")))
     val tot = broadcast(joined.agg(sum("o").as("n"),
       sum("w").as("bigw"), count(lit(1)).as("n_arms")))
@@ -2156,8 +2157,8 @@ object Quality {
     * magnitudes; the caller scales decimals to integers first).
     *
     * Scale shape: one first-digit projection + ONE map-side-combined
-    * 9-key groupBy, a broadcast 9-row digit table (zero-count digits
-    * stay in the statistic), a 1-row total broadcast. */
+    * 9-key groupBy, a 9-row digit table left-joined to it (zero-count
+    * digits stay in the statistic), a 1-row total broadcast. */
   def benfordAudit(df: DataFrame, valueCol: Column): DataFrame = {
     val spark = df.sparkSession
     val base = df.select(valueCol.cast("long").as("v"))
@@ -2166,7 +2167,7 @@ object Quality {
       .select(expr("CAST(substring(CAST(v AS STRING), 1, 1) AS BIGINT)")
         .as("digit"))
       .groupBy("digit").agg(count(lit(1)).as("o"))
-    val digits = broadcast(spark.range(1, 10).select(col("id").as("digit")))
+    val digits = spark.range(1, 10).select(col("id").as("digit"))
     val filled = digits.join(obs, Seq("digit"), "left_outer")
       .select(col("digit"), coalesce(col("o"), lit(0L)).as("o"))
     val tot = broadcast(filled.agg(sum("o").as("n")))

@@ -8,9 +8,9 @@ import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, LineStr
 
 /** A3 — segmentation label: per-tile 256x256 class-index raster
   * (`label.py:36-54`), computed by [[Segmentation.labelForTile]] with an
-  * in-JVM rasterizer: on a fetched tile's row by the job's label kernel
-  * ([[graft.functions.TileLabels]]) or through a `mapGroups` over a
-  * feature table (`segmentation`).
+  * in-JVM rasterizer: on a fetched tile's features as Scala objects, in
+  * the job's typed `map` after the fetch ([[graft.plans.LabelMakerJob]]),
+  * or through a `mapGroups` over a feature table (`segmentation`).
   *
   * Faithfulness notes (vs `/root/reference/label_maker_dask/label.py`):
   *  - coordinates convert 0-4096 -> 0-255 with banker's rounding and a

@@ -1,13 +1,14 @@
 package graft.plans
 
 import graft.core.BBox
-import graft.functions.TileLabels
-import graft.model.{ClassSpec, MlType}
-import graft.operators.TileEnumeration
+import graft.model.{ClassSpec, Feature, MlType}
+import graft.operators.{Labels, Segmentation, TileEnumeration}
 import graft.sources.TileSources
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.util.LongAccumulator
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** The reference's job API (`LabelMakerJob`, `main.py:69-111`) re-expressed
   * as a lazy Dataset plan (P1-P6, SURVEY §2.4).
@@ -48,11 +49,13 @@ final case class LabelMakerJob(
   /** P2/P3 — the full labeled-tile plan: (z, x, y, label[, height, width,
     * bands, image]). One row per tile from one fetch pass that brings the
     * label tile and the image together (the reference's two Dask tasks per
-    * tile, `main.py:90-97`); the label is computed in place on that row by
-    * one native expression ([[graft.functions.TileLabels]]) that reads each
-    * feature once for every class. The plan is range -> fetch -> label
-    * projection: one stage, no shuffle, no join. Lazy; `explain` it for the
-    * reference's `dask.visualize` equivalent. */
+    * tile, `main.py:90-97`); the label is a plain Scala function of the
+    * fetched tile's features ([[Labels.classificationForTile]],
+    * [[Labels.objectDetectionForTile]], [[Segmentation.labelForTile]]),
+    * applied in a typed `map` straight after the fetch, so the features
+    * pass from fetch to label as objects and are never encoded into rows.
+    * The plan is range -> fetch -> label: one stage, no shuffle, no join.
+    * Lazy; `explain` it for the reference's `dask.visualize` equivalent. */
   def build(spark: SparkSession): DataFrame =
     build(spark, spark.sparkContext.longAccumulator("label_fetch_failures"))
 
@@ -61,10 +64,21 @@ final case class LabelMakerJob(
   def build(spark: SparkSession, labelFailures: LongAccumulator): DataFrame = {
     val fetched = TileSources.fetch(tiles(spark), Some(labelSource), imagery,
       failures = Some(labelFailures))
-    val label = TileLabels.column(col("features"), classes, mlType)
-    val imageCols =
-      if (imagery.isEmpty) Nil else Seq("height", "width", "bands", "image").map(col)
-    fetched.select(Seq(col("z"), col("x"), col("y"), label.as("label")) ++ imageCols: _*)
+    val cs = classes
+    // no Column expression may sit between the fetch and this map: it
+    // would make Spark encode every feature into the row and read it back
+    def labeled[L: TypeTag](label: Seq[Feature] => L): DataFrame = {
+      import spark.implicits._
+      fetched.map(t => (t.z, t.x, t.y, label(t.features), t.height, t.width, t.bands, t.image))
+        .toDF("z", "x", "y", "label", "height", "width", "bands", "image")
+    }
+    val df = mlType match {
+      case MlType.Classification => labeled(Labels.classificationForTile(_, cs))
+      case MlType.ObjectDetection => labeled(Labels.objectDetectionForTile(_, cs))
+      case MlType.Segmentation => labeled(Segmentation.labelForTile(_, cs))
+    }
+    val imageCols = if (imagery.isEmpty) Nil else Seq("height", "width", "bands", "image")
+    df.select((Seq("z", "x", "y", "label") ++ imageCols).map(col): _*)
   }
 
   /** P6 — execute into a parquet sink (the scale path). */

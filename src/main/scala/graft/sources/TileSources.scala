@@ -242,7 +242,7 @@ object TileSources {
     * imagery path on every task, `utils.py:98-127`): `{bbox}` -> WMS;
     * .tif/.tiff/.vrt suffix -> COG; otherwise TMS.
     *
-    * With `probeContent` (what [[images]] passes), a concrete (placeholder-
+    * With `probeContent` (what [[fetch]] passes), a concrete (placeholder-
     * free) path with no recognizable extension is probed by its first 4
     * bytes via one ranged read — the reference checks file CONTENT
     * (rasterio driver in {GTiff, VRT}, `utils.py:98-113`), so a COG behind
@@ -282,11 +282,14 @@ object TileSources {
     *
     * Label fetch or decode errors degrade to an empty feature set
     * (`main.py:38-44`) and are counted in `failures`. Image fetch or decode
-    * errors fail the task (Spark retries) with their own `IOException`,
-    * matching the reference's uncaught image path (`main.py:50-63`) while
-    * keeping at-least-once semantics. The imagery source is dispatched
-    * once, here at plan time; a COG is read synchronously, tile by tile,
-    * as the consumer reaches it. */
+    * errors fail the task with their own `IOException`, matching the
+    * reference's uncaught image path (`main.py:50-63`): on `local[n]`
+    * (`GraftSession.local`) a failed task is not retried, so the job
+    * fails; on a cluster Spark retries the task up to
+    * `spark.task.maxFailures` times before failing the job. The imagery
+    * source is dispatched once, here at plan time (with `probeContent`);
+    * a COG is read synchronously, tile by tile, as the consumer reaches
+    * it. */
   def fetch(tiles: DataFrame, labelSource: Option[String], imagery: Option[String],
       layer: String = "osm",
       failures: Option[LongAccumulator] = None): Dataset[FetchedTile] = {

@@ -1899,7 +1899,7 @@ object EventStream {
     val hours = tsNanos(events)
       .select(expr("(ts div 1000) div 3600000000").as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
-    val bounds = broadcast(hours.agg(min("h").as("lo"), max("h").as("hi")))
+    val bounds = hours.agg(min("h").as("lo"), max("h").as("hi"))
     val dense = bounds.select(explode(expr("sequence(lo, hi)")).as("h"))
       .join(hours, Seq("h"), "left_outer")
       .select(col("h"), coalesce(col("c"), lit(0L)).as("c"))

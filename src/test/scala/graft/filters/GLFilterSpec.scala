@@ -1,8 +1,8 @@
 package graft.filters
 
 import graft.SparkSpec
-import graft.functions.TileLabels
-import graft.model.{ClassSpec, Coord, MlType, TileFeature}
+import graft.model.{ClassSpec, Coord, TileFeature}
+import graft.operators.Labels
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
@@ -161,15 +161,13 @@ class GLFilterSpec extends SparkSpec {
   }
 
   test("random filter trees: the tile label kernel's classification slots agree with the evaluator") {
-    import spark.implicits._
     // one tile per feature and one class per tree: slot t+1 of a tile's
     // label says whether tree t matched its feature
     val classes = trees.zipWithIndex.map { case (json, t) => ClassSpec(s"t$t", GLFilter.parseJson(json)) }
-    val tiles = features.map { case (i, props, gt, id) =>
-      (i, Seq(TileFeature(0, gt, multi = false, Seq(Seq(Coord(1, 1))), props, Option(id).map(_.longValue))))
-    }.toDF("fid", "features")
-    val labels = tiles.select(col("fid"), TileLabels.column(col("features"), classes, MlType.Classification))
-      .as[(Int, Seq[Int])].collect().toMap
+    val labels = features.map { case (i, props, gt, id) =>
+      i -> Labels.classificationForTile(
+        Seq(TileFeature(0, gt, multi = false, Seq(Seq(Coord(1, 1))), props, Option(id).map(_.longValue))), classes)
+    }.toMap
     classes.zipWithIndex.foreach { case (c, t) =>
       val got = labels.collect { case (i, l) if l(t + 1) == 1 => i }.toSet
       val expected = evaluated(c.filter)

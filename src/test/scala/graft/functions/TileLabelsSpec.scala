@@ -2,16 +2,17 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.model.{ClassSpec, Coord, MlType, TileFeature}
-import graft.operators.{Labels, Segmentation}
+import graft.operators.{Box, Labels, Segmentation}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 
 import scala.util.Random
 
-/** The job's label kernel against the feature-table operators: for each
-  * ml_type, [[TileLabels]] over a tile's nested `features` array must give
-  * the label `Labels.classification`, `Labels.objectDetection` or
-  * `Segmentation.segmentation` gives over the same features as rows. */
+/** The job's per-tile label functions against the feature-table operators:
+  * for each ml_type, `Labels.classificationForTile`,
+  * `Labels.objectDetectionForTile` or `Segmentation.labelForTile` over a
+  * tile's features must give the label `Labels.classification`,
+  * `Labels.objectDetection` or `Segmentation.segmentation` gives over the
+  * same features as rows. */
 class TileLabelsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -97,22 +98,33 @@ class TileLabelsSpec extends SparkSpec {
     }
   }
 
-  /** tile key -> label, as a comparable Scala value. */
+  /** A label as a comparable Scala value: a raster as its bytes, a box as
+    * its five ints. */
+  private def comparable(label: Any): Any = label match {
+    case b: Array[Byte] => b.toSeq
+    case bs: scala.collection.Seq[_] => bs.toSeq.map {
+      case box: Row => (0 until 5).map(box.getInt)
+      case Box(x0, y0, x1, y1, cls) => Seq(x0, y0, x1, y1, cls)
+      case v => v
+    }
+  }
+
+  /** tile key -> label of a feature-table operator's output. */
   private def labels(df: DataFrame): Map[(Int, Int, Int), Any] =
     df.collect().map { r =>
-      val key = (r.getInt(r.fieldIndex("z")), r.getInt(r.fieldIndex("x")), r.getInt(r.fieldIndex("y")))
-      key -> (r.get(r.fieldIndex("label")) match {
-        case b: Array[Byte] => b.toSeq
-        case bs: scala.collection.Seq[_] => bs.toSeq.map {
-          case box: Row => (0 until 5).map(box.getInt)
-          case v => v
-        }
-      })
+      (r.getInt(r.fieldIndex("z")), r.getInt(r.fieldIndex("x")), r.getInt(r.fieldIndex("y"))) ->
+        comparable(r.get(r.fieldIndex("label")))
     }.toMap
 
-  private def kernel(ts: Seq[((Int, Int, Int), Seq[TileFeature])], cs: Seq[ClassSpec], ml: String): DataFrame =
-    ts.map { case ((z, x, y), fs) => (z, x, y, fs) }.toDF("z", "x", "y", "features")
-      .select(col("z"), col("x"), col("y"), TileLabels.column(col("features"), cs, ml).as("label"))
+  /** tile key -> label of the per-tile function, called on each tile's features. */
+  private def kernel(ts: Seq[((Int, Int, Int), Seq[TileFeature])], cs: Seq[ClassSpec], ml: String): Map[(Int, Int, Int), Any] =
+    ts.map { case (k, fs) =>
+      k -> comparable(ml match {
+        case MlType.Classification => Labels.classificationForTile(fs, cs)
+        case MlType.ObjectDetection => Labels.objectDetectionForTile(fs, cs)
+        case MlType.Segmentation => Segmentation.labelForTile(fs, cs)
+      })
+    }.toMap
 
   private def featureTable(ts: Seq[((Int, Int, Int), Seq[TileFeature])], cs: Seq[ClassSpec], ml: String): DataFrame = {
     val keys = ts.map(_._1).toDF("z", "x", "y")
@@ -128,7 +140,7 @@ class TileLabelsSpec extends SparkSpec {
     test(s"$ml, $name: the kernel equals the feature-table operator on seeded tiles") {
       (1 to 3).foreach { seed =>
         val ts = tiles(seed, 24)
-        val got = labels(kernel(ts, cs, ml))
+        val got = kernel(ts, cs, ml)
         val want = labels(featureTable(ts, cs, ml))
         assert(got.keySet == want.keySet)
         ts.foreach { case (k, fs) => assert(got(k) == want(k), s"seed $seed, tile $k, ${fs.size} features") }
@@ -143,29 +155,11 @@ class TileLabelsSpec extends SparkSpec {
     assert(fs.exists(_.parts.flatten.isEmpty), "a feature with no coordinates")
     assert(fs.exists(_.parts.flatten.exists(c => c.x < 0 || c.x > 4096)), "a feature across the tile edge")
     assert(halfPixels.size >= 5, "bounds on half pixels")
-    val od = labels(kernel(tiles(1, 24), classes, MlType.ObjectDetection)).values
+    val od = kernel(tiles(1, 24), classes, MlType.ObjectDetection).values
       .flatMap(_.asInstanceOf[Seq[Seq[Int]]])
     assert(classes.indices.forall(c => od.exists(_(4) == c + 1)), "a box for every class")
     val shrunk = fs.filter(f => f.props.get("building").contains("yes") && f.parts.flatten.nonEmpty)
       .map(f => Labels.negBufferBounds(f.geomType, f.parts, -500))
     assert(shrunk.contains(None) && shrunk.exists(_.isDefined), "the -500 buffer keeps some buildings, not all")
-  }
-
-  test("the interpreted path equals the generated one") {
-    val ts = tiles(4, 24)
-    val generated = MlTypes.map(ml => labels(kernel(ts, classes, ml)))
-    val conf = spark.conf
-    Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-      .foreach { case (k, v) => conf.set(k, v) }
-    try assert(MlTypes.map(ml => labels(kernel(ts, classes, ml))) == generated)
-    finally Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode").foreach(conf.unset)
-  }
-
-  test("a null features array labels like an empty tile") {
-    val df = Seq((14, 0, 0, Option.empty[Seq[TileFeature]])).toDF("z", "x", "y", "features")
-    val row = df.select(MlTypes.map(ml => TileLabels.column(col("features"), classes, ml)): _*).head()
-    assert(row.getSeq[Int](0) == Seq(1, 0, 0, 0, 0, 0))
-    assert(row.getSeq[Row](1).isEmpty)
-    assert(row.getAs[Array[Byte]](2).sameElements(new Array[Byte](Segmentation.Size * Segmentation.Size)))
   }
 }

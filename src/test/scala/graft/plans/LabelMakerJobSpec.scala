@@ -267,11 +267,16 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         val nodes = planNodes(df)
         val banned = nodes.filter(n => n.contains("Exchange") || n.contains("Join"))
         assert(banned.isEmpty, s"$ml, imagery=${imagery != null}: ${nodes.mkString(" <- ")}")
-        // the label is one native expression: no interpreted lambda, no UDF
+        // the label is plain Scala in a typed map: no interpreted lambda, no UDF
         val interpreted = planExpressions(df).collect {
           case e @ (_: HigherOrderFunction | _: ScalaUDF) => e.prettyName
         }
         assert(interpreted.isEmpty, s"$ml, imagery=${imagery != null}: ${interpreted.mkString(", ")}")
+        // the fetched features reach the label as objects: never encoded into a row
+        val encoded = collect(df.queryExecution.executedPlan) {
+          case p if p.output.exists(_.name == "features") => p.nodeName
+        }
+        assert(encoded.isEmpty, s"$ml, imagery=${imagery != null}: features encoded by ${encoded.mkString(", ")}")
       }
     }
   }

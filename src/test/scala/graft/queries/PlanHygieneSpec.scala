@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join}
 
 /** Blanket plan-hygiene net over EVERY registered query: the failure modes
   * that silently kill a 100 TB run must never enter any plan.
@@ -12,6 +14,10 @@ import graft.SparkSpec
   *    is broadcast on purpose (a scalar subquery's 1 row, a query vector,
   *    8 hyperplane rows) — whitelisted explicitly so a new query can't
   *    sneak one in unreviewed.
+  *  - A broadcast hint on a join side Spark cannot build (the preserved
+  *    side of an outer join, the left of a semi or anti join): Spark
+  *    logs a warning, ignores it and plans as if it were absent, so the
+  *    hint only reads as a plan guarantee that does not hold.
   */
 class PlanHygieneSpec extends SparkSpec {
 
@@ -117,6 +123,20 @@ class PlanHygieneSpec extends SparkSpec {
         Option.when(p.contains("BroadcastNestedLoopJoin") && !bnljWhitelist(name))(
           s"$name: unapproved BroadcastNestedLoopJoin")
       ).flatten
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
+  test("no broadcast hint sits on a join side Spark cannot build") {
+    def broadcast(h: Option[HintInfo]): Boolean = h.exists(_.strategy.contains(BROADCAST))
+    val dir = sf("sf0.001")
+    val problems = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      fn(spark, dir).queryExecution.optimizedPlan.collectWithSubqueries {
+        case j: Join if broadcast(j.hint.leftHint) && Seq(LeftOuter, LeftSemi, LeftAnti).contains(j.joinType) =>
+          s"$name: broadcast hint on the left of a ${j.joinType.sql} join"
+        case j: Join if broadcast(j.hint.rightHint) && j.joinType == RightOuter =>
+          s"$name: broadcast hint on the right of a ${j.joinType.sql} join"
+      }
     }
     assert(problems.isEmpty, problems.mkString("\n"))
   }
