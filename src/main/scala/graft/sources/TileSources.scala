@@ -60,10 +60,11 @@ object TileSources {
   /** Windowed lookahead over a partition's rows: `start` runs up to
     * `window` rows ahead of the consumer, so the requests it starts
     * overlap instead of serializing on per-request latency (network RTT,
-    * server stalls). Order-preserving; the consumer joins what `start`
-    * returned. This is what makes HTTP-bound fetches latency-tolerant at
-    * any partition count — the knob that matters when the fetch, not the
-    * CPU, is the bottleneck. */
+    * server stalls). A FIFO: rows come out in input order, the first
+    * `hasNext` starts `min(window, n)` rows, and each later row starts
+    * only when the consumer takes one, so at most `window` started rows
+    * are ever unconsumed. A slow head row therefore holds back the rows
+    * behind it. The consumer joins what `start` returned. */
   private[sources] def prefetched[A, B](it: Iterator[A], window: Int)(start: A => B): Iterator[(A, B)] = {
     val queue = scala.collection.mutable.Queue[(A, B)]()
     new Iterator[(A, B)] {
@@ -77,8 +78,13 @@ object TileSources {
     }
   }
 
-  /** Tiles per partition whose requests are in flight at once. */
-  val FetchWindow = 16
+  /** Tiles per partition whose requests are in flight at once. Per
+    * running task that is at most 64 label requests plus 64 image
+    * requests, and at most 64 decoded images held (a 256×256 RGB tile is
+    * 192 KiB, so about 12 MiB); on `local[4]`, up to 512 connections.
+    * Deep enough that per-request stalls (a tile CDN's round trip, a
+    * ~40 ms delayed-ACK stall) overlap instead of holding up the consumer. */
+  val FetchWindow = 64
 
   /** `str.format`-style URL templating (`utils.py:27-29`) with the
     * SafeDict ACCESS_TOKEN substitution (`utils.py:19-24,46-48`): unknown
@@ -272,7 +278,8 @@ object TileSources {
 
   /** S2-S7 in one pass, one row per tile (the reference's two Dask tasks
     * per tile, `main.py:90-97`): each tile's label request and image
-    * request start together inside the same prefetch window, and the tile
+    * request start together inside the same [[FetchWindow]]-tile prefetch
+    * window ([[prefetched]], so tiles leave in input order), and the tile
     * is emitted whole, so labels and images never need to be regrouped or
     * joined by tile key. A TMS or WMS image is decoded ([[decodeImage]]) as
     * the completion stage of its fetch, on the JVM common pool, so the

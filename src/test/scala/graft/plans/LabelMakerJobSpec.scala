@@ -3,12 +3,12 @@ package graft.plans
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.SparkSpec
 import graft.core.BBox
-import graft.sources.Mvt
+import graft.sources.{Mvt, TileSources}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, ScalaUDF}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-import java.net.InetSocketAddress
+import java.net.{InetAddress, InetSocketAddress}
 
 /** Pipeline e2e (SURVEY §5.3): local HTTP stub serving fixture MVT + PNG
   * tiles -> full LabelMakerJob on local[4] -> per-tile records. */
@@ -69,7 +69,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   private def withServer[T](f: Int => T): T = {
-    val server = HttpServer.create(new InetSocketAddress(0), 0)
+    val server = HttpServer.create(new InetSocketAddress(InetAddress.getLoopbackAddress, 0),
+      2 * TileSources.FetchWindow)
     @volatile var wmsHits = 0
     server.createContext("/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -102,8 +103,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     withServer { port =>
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
-        imagery = s"http://localhost:$port/img/{z}/{x}/{y}.png",
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        imagery = s"http://127.0.0.1:$port/img/{z}/{x}/{y}.png",
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "classification")
       assert(job.nTiles == 4)
       val rows = job.collect(spark)
@@ -124,13 +125,13 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     withServer { port =>
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson, imagery = null,
-        labelSource = s"http://localhost:$port/bad/{z}/{x}/{y}.pbf",
+        labelSource = s"http://127.0.0.1:$port/bad/{z}/{x}/{y}.pbf",
         mlType = "object-detection")
       val rows = job.collect(spark)
       assert(rows.length == 4)
       rows.foreach(r => assert(r.getSeq[Row](r.fieldIndex("label")).isEmpty))
 
-      val good = job.copy(labelSource = s"http://localhost:$port/ok/{z}/{x}/{y}.pbf")
+      val good = job.copy(labelSource = s"http://127.0.0.1:$port/ok/{z}/{x}/{y}.pbf")
       val rows2 = good.collect(spark)
       rows2.foreach { r =>
         val bbs = r.getSeq[Row](r.fieldIndex("label"))
@@ -144,8 +145,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     withServer { port =>
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
-        imagery = s"http://localhost:$port/wms?version=1.1.1&srs=EPSG:3857&bbox={bbox}&request=GetMap",
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        imagery = s"http://127.0.0.1:$port/wms?version=1.1.1&srs=EPSG:3857&bbox={bbox}&request=GetMap",
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "segmentation")
       val rows = job.collect(spark)
       assert(rows.length == 4)
@@ -174,7 +175,7 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
         imagery = cogPath,
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "classification")
       val rows = job.collect(spark)
       assert(rows.length == 4)
@@ -201,7 +202,7 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
         imagery = cogPath,
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "classification")
       val rows = job.collect(spark)
       assert(rows.length == 4)
@@ -222,8 +223,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     withServer { port =>
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
-        imagery = s"http://localhost:$port/missing/{z}/{x}/{y}.gif", // 404s
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        imagery = s"http://127.0.0.1:$port/missing/{z}/{x}/{y}.gif", // 404s
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "classification")
       val e = intercept[org.apache.spark.SparkException] { job.collect(spark) }
       assert(e.getMessage != null)
@@ -235,8 +236,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     withServer { port =>
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classesJson,
-        imagery = s"http://localhost:$port/junk/{z}/{x}/{y}.jpg",
-        labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf",
+        imagery = s"http://127.0.0.1:$port/junk/{z}/{x}/{y}.jpg",
+        labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf",
         mlType = "classification")
       val e = intercept[org.apache.spark.SparkException] { job.collect(spark) }
       assert(causeMessages(e).exists(_.contains("undecodable image")), causeMessages(e))
@@ -258,10 +259,10 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("the job is one stage: no Exchange, BroadcastExchange or join in any ml_type's plan") {
     withServer { port =>
       for (ml <- Seq("classification", "object-detection", "segmentation");
-           imagery <- Seq(s"http://localhost:$port/img/{z}/{x}/{y}.png", null)) {
+           imagery <- Seq(s"http://127.0.0.1:$port/img/{z}/{x}/{y}.png", null)) {
         val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
           classesJson, imagery = imagery,
-          labelSource = s"http://localhost:$port/labels/{z}/{x}/{y}.pbf", mlType = ml)
+          labelSource = s"http://127.0.0.1:$port/labels/{z}/{x}/{y}.pbf", mlType = ml)
         val df = job.build(spark)
         assert(df.collect().length == 4)
         val nodes = planNodes(df)
@@ -286,8 +287,8 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // 7x7 tiles: 12-13 per partition on local[4], inside one fetch window
       val b = BBox(-44.4836, -23.0266, -44.2, -22.75)
       val job = LabelMakerJob(13, Seq(b.west, b.south, b.east, b.north), classesJson,
-        imagery = s"http://localhost:$port/img/{z}/{x}/{y}.png",
-        labelSource = s"http://localhost:$port/mixed/{z}/{x}/{y}.pbf",
+        imagery = s"http://127.0.0.1:$port/img/{z}/{x}/{y}.png",
+        labelSource = s"http://127.0.0.1:$port/mixed/{z}/{x}/{y}.pbf",
         mlType = "classification")
       val failures = spark.sparkContext.longAccumulator("label_fetch_failures")
       val rows = job.build(spark, failures).collect()
@@ -314,7 +315,7 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           |]""".stripMargin
       val job = LabelMakerJob(13, Seq(bbox.west, bbox.south, bbox.east, bbox.north),
         classes, imagery = null,
-        labelSource = s"http://localhost:$port/neg/{z}/{x}/{y}.pbf",
+        labelSource = s"http://127.0.0.1:$port/neg/{z}/{x}/{y}.pbf",
         mlType = "object-detection")
       def boxes(df: org.apache.spark.sql.DataFrame): Map[(Int, Int), Seq[Seq[Int]]] =
         df.collect().map { r =>
@@ -324,7 +325,7 @@ class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       val got = boxes(job.build(spark))
       val tiles = job.tiles(spark)
       val want = boxes(graft.operators.Labels.objectDetection(tiles,
-        graft.sources.TileSources.vectorFeatures(tiles, job.labelSource).toDF(), job.classes))
+        TileSources.vectorFeatures(tiles, job.labelSource).toDF(), job.classes))
       assert(got.size == 4)
       assert(got == want)
       // the road and the small building shrink away: the large building

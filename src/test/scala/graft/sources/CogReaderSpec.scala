@@ -91,7 +91,8 @@ class CogReaderSpec extends AnyFunSuite {
     writeCovering(p, cover, 512, deflate = true)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
     val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress(0), 0)
+      new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0),
+      2 * TileSources.FetchWindow)
     @volatile var honorRange = true
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val range = Option(ex.getRequestHeaders.getFirst("Range"))
@@ -110,13 +111,13 @@ class CogReaderSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val url = s"http://localhost:${server.getAddress.getPort}/imagery.tif"
+      val url = s"http://127.0.0.1:${server.getAddress.getPort}/imagery.tif"
       val (_, _, _, viaHttp) = CogReader.tile(url, cover)
       val (_, _, _, viaFile) = CogReader.tile(p, cover)
       assert(viaHttp.sameElements(viaFile))
       // Range-ignoring server: must fail, not corrupt
       honorRange = false
-      val url2 = s"http://localhost:${server.getAddress.getPort}/imagery2.tif"
+      val url2 = s"http://127.0.0.1:${server.getAddress.getPort}/imagery2.tif"
       val e = intercept[java.io.IOException] { CogReader.tile(url2, cover) }
       assert(e.getMessage.contains("206"))
     } finally server.stop(0)
@@ -523,7 +524,8 @@ class CogReaderSpec extends AnyFunSuite {
     writeCovering(p, cover, 512, deflate = true)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
     val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress(0), 0)
+      new java.net.InetSocketAddress(java.net.InetAddress.getLoopbackAddress, 0),
+      2 * TileSources.FetchWindow)
     server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
       val body: Array[Byte] = ex.getRequestURI.getPath match {
         case "/signed-imagery" => // COG behind an extension-less signed URL
@@ -549,7 +551,7 @@ class CogReaderSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val base = s"http://localhost:${server.getAddress.getPort}"
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
       // extension regex says TMS; the magic-byte probe corrects it
       assert(TileSources.dispatch(s"$base/signed-imagery?sig=abc") == TileSources.TmsSource)
       assert(TileSources.dispatch(s"$base/signed-imagery?sig=abc", probeContent = true) == TileSources.CogSource)
