@@ -12,8 +12,6 @@ object GraftSession {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries timestamp[ns]; Spark reads it as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // r11 (guide §3.1): let AQE rewrite a planned sort-merge join to a
       // shuffled-hash join at runtime when the MEASURED per-partition map
       // output fits comfortably in memory — unlike preferSortMergeJoin

@@ -27,9 +27,9 @@ object MiscQueries {
       AsOfJoin.asofBackward(purchases, errors, Seq("user_id"), "ts", "rts",
           Seq("err_value", "rts"))
         .select(col("event_id"), col("user_id"),
-          expr("ts div 1000").as("ts_us"),
+          col("ts").as("ts_us"),
           col("asof_err_value").as("err_value"),
-          expr("asof_rts div 1000").as("err_ts_us"))
+          col("asof_rts").as("err_ts_us"))
         .orderBy("event_id")
     },
     // Salted skew join under the oracle: the salt fan-out/fan-in must be
@@ -135,7 +135,7 @@ object MiscQueries {
       val errors = ev.filter(col("event_type") === "error")
         .select(col("user_id"), col("event_id").as("error_id"), col("ts").as("ets"))
       graft.operators.RangeJoin.binnedRangeJoin(
-          purchases, errors, Seq("user_id"), "ts", "ets", 600L * 1000 * 1000 * 1000)
+          purchases, errors, Seq("user_id"), "ts", "ets", 600L * 1000 * 1000)
         .select("user_id", "purchase_id", "error_id")
         .orderBy("purchase_id", "error_id")
     },
@@ -157,11 +157,11 @@ object MiscQueries {
         .select(col("user_id"), col("ts").as("rts"), col("value").as("err_value"))
       graft.operators.AsOfJoin.asofBackward(purchases, errors, Seq("user_id"),
           "ts", "rts", Seq("err_value", "rts"),
-          tolerance = Some(300L * 1000 * 1000 * 1000)) // 5 min in ns
+          tolerance = Some(300L * 1000 * 1000)) // 5 min in micros
         .select(col("event_id"), col("user_id"),
-          expr("ts div 1000").as("ts_us"),
+          col("ts").as("ts_us"),
           col("asof_err_value").as("err_value"),
-          expr("asof_rts div 1000").as("err_ts_us"))
+          col("asof_rts").as("err_ts_us"))
         .orderBy("event_id")
     },
     // FORWARD as-of join (pandas merge_asof direction='forward'): the
@@ -182,9 +182,9 @@ object MiscQueries {
       AsOfJoin.asofForward(purchases, errors, Seq("user_id"), "ts", "rts",
           Seq("err_value", "rts"))
         .select(col("event_id"), col("user_id"),
-          expr("ts div 1000").as("ts_us"),
+          col("ts").as("ts_us"),
           col("asof_err_value").as("err_value"),
-          expr("asof_rts div 1000").as("err_ts_us"))
+          col("asof_rts").as("err_ts_us"))
         .orderBy("event_id")
     },
     // Sketch aggregates (approximate - no cross-engine oracle; the driver
@@ -660,13 +660,11 @@ object MiscQueries {
         |UNION ALL SELECT 'value_bucket', n_buckets, t2 // 2 FROM h3
         |ORDER BY feature""".stripMargin)) { (s, d) =>
       val ev = t(s, d, "events")
-      // bounded 1-row gather picks the deterministic split point
-      val bounds = ev.agg(min("ts"), max("ts")).head()
-      val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
+      val mid = graft.streaming.EventStream.midpointMicros(ev)
       graft.operators.Quality.hellingerGate(
         ev.filter(col("ts") < mid), ev.filter(col("ts") >= mid), Seq(
           "event_type" -> col("event_type"),
-          "hour_of_day" -> expr("(ts div 3600000000000L) % 24"),
+          "hour_of_day" -> expr("(ts div 3600000000L) % 24"),
           "value_bucket" ->
             expr("cast(greatest(floor(value), 0L) as bigint) div 20")))
         .orderBy("feature")
@@ -2538,8 +2536,8 @@ object MiscQueries {
         |  FROM events GROUP BY event_type)
         |SELECT np.grp, n_fine_parts, est_distinct
         |FROM np JOIN sk ON sk.grp = np.grp ORDER BY np.grp""".stripMargin)) { (s, d) =>
-      val ev = graft.streaming.EventStream.tsNanos(t(s, d, "events"))
-        .withColumn("day", expr("(ts div 1000) div 86400000000"))
+      val ev = t(s, d, "events")
+        .withColumn("day", expr("ts div 86400000000"))
       graft.operators.Sketches.kmvMergeRollup(ev, "user_id", "day",
           "event_type", k = 64)
         .orderBy("grp")
@@ -3558,9 +3556,7 @@ object MiscQueries {
         |    AS reduction_ppm
         |FROM t4 ORDER BY arm""".stripMargin)) { (s, d) =>
       val ev = t(s, d, "events")
-      // bounded 1-row gather picks the deterministic pre/post split
-      val bounds = ev.agg(min("ts"), max("ts")).head()
-      val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
+      val mid = graft.streaming.EventStream.midpointMicros(ev)
       graft.streaming.EventStream.cuped(ev, mid).orderBy("arm")
     },
     // Top-20 leaderboard drift between the two event-time halves:
@@ -3603,8 +3599,7 @@ object MiscQueries {
         |  churn.n_exited, rbo.rbo_ppm
         |FROM churn, rbo""".stripMargin)) { (s, d) =>
       val ev = t(s, d, "events")
-      val bounds = ev.agg(min("ts"), max("ts")).head()
-      val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
+      val mid = graft.streaming.EventStream.midpointMicros(ev)
       graft.operators.Quality.rboTopkDrift(
         ev.filter(col("ts") < mid), ev.filter(col("ts") >= mid),
         "user_id", k = 20)
@@ -3657,8 +3652,7 @@ object MiscQueries {
         |SELECT 'overall' AS bin, n_users, conf_ppm, acc_ppm, gap_ppm
         |FROM ov ORDER BY bin""".stripMargin)) { (s, d) =>
       val ev = t(s, d, "events")
-      val bounds = ev.agg(min("ts"), max("ts")).head()
-      val mid = (bounds.getLong(0) + bounds.getLong(1)) / 2
+      val mid = graft.streaming.EventStream.midpointMicros(ev)
       graft.streaming.EventStream.calibration(ev, mid).orderBy("bin")
     },
     // Discrete survival curve with right-censoring: per-lifetime risk

@@ -14,10 +14,9 @@ import org.apache.spark.sql.expressions.Window
 object Relational {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
-    // events.ts arrives as either int64 nanos or micros TIMESTAMP_NTZ
-    // depending on testdata vintage; canonicalize to long nanos here so
-    // every downstream `ts div …` site is schema-independent
-    if (name == "events") graft.streaming.EventStream.tsNanos(df) else df
+    // the one event-time unit: events.ts leaves the scan as long epoch
+    // micros, what every oracle reads as epoch_us(ts)
+    if (name == "events") graft.streaming.EventStream.tsMicros(df) else df
   }
 
   /** SUM(measure) with exact decimal accumulation, emitted as double. */
@@ -364,7 +363,7 @@ object Relational {
         |FROM al a LEFT JOIN per p ON p.user_id = a.user_id AND p.bkt = a.bkt
         |ORDER BY a.user_id, a.bkt""".stripMargin)) { (s, d) =>
       val ev = t(s, d, "events").filter(col("user_id") < 40)
-        .withColumn("bkt", expr("ts div 3600000000000"))
+        .withColumn("bkt", expr("ts div 3600000000"))
       val per = ev.groupBy("user_id", "bkt").agg(count(lit(1)).as("n"))
       val span = ev.groupBy("user_id").agg(min("bkt").as("b0"), max("bkt").as("b1"))
       span.select(col("user_id"), explode(sequence(col("b0"), col("b1"))).as("bkt"))

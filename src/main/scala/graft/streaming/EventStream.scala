@@ -4,6 +4,12 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+/** Open-session state for [[EventStream.sessionize]] — top-level (not
+  * nested/private) so the streaming state-store encoder's generated code
+  * can construct and read it. */
+final case class SessionState(startMicros: Long, lastMicros: Long,
+    nEvents: Int, sumValue: Double)
+
 /** Structured Streaming slice over the `events` table (SURVEY §7.9).
   *
   * The reference is batch-only; these operators give the engine the
@@ -11,37 +17,34 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermarks, and custom session state via flatMapGroupsWithState. Each
   * transform is defined against a DataFrame so the same code serves
   * `spark.read` (batch parity tests) and `spark.readStream`.
+  *
+  * Event time: every operator here takes `ts` as LONG EPOCH MICROS, the
+  * unit [[tsMicros]] gives it at the scan (`Relational.t` for batch
+  * reads, [[runStreamingCounts]] for the parquet stream) and the unit
+  * the DuckDB oracles read as `epoch_us(ts)`. No operator converts it.
   */
-/** Open-session state for [[EventStream.sessionize]] — top-level (not
-  * nested/private) so the streaming state-store encoder's generated code
-  * can construct and read it. */
-final case class SessionState(startMicros: Long, lastMicros: Long,
-    nEvents: Int, sumValue: Double)
-
 object EventStream {
 
-  /** Schema-adaptive canonicalization of the events `ts` column to LONG
-    * EPOCH NANOS, the unit every downstream `ts div …` site assumes.
-    * The driver's parquet has shipped two encodings across rounds:
-    *   - int64 timestamp[ns] — read as long nanos under
-    *     `spark.sql.legacy.parquet.nanosAsLong` → already canonical;
-    *   - native micros TIMESTAMP_NTZ (r7+) — read as TimestampNTZType
-    *     → convert via `unix_micros` (sessions run UTC, so the naive
-    *     micros equal DuckDB's `epoch_us(ts)`) and scale to nanos.
-    * Long-typed frames (including test MemoryStreams) pass through
-    * untouched; pure projection, so it works on streaming frames too. */
-  def tsNanos(events: DataFrame): DataFrame =
-    if (!events.columns.contains("ts")) events
-    else events.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => events
-      case _ => events.withColumn("ts",
-        unix_micros(col("ts").cast("timestamp")) * lit(1000L))
-    }
+  /** The events `ts` column as LONG EPOCH MICROS. The parquet carries
+    * `timestamp[us]` (read as TimestampNTZType); sessions run in UTC, so
+    * `unix_micros` equals DuckDB's `epoch_us(ts)`. A pure projection, so
+    * it serves streaming sources too. */
+  def tsMicros(events: DataFrame): DataFrame =
+    events.withColumn("ts", unix_micros(col("ts").cast("timestamp")))
 
-  /** events with a proper timestamp column, from canonical long nanos. */
+  /** events with a proper timestamp column `ets` beside the micros `ts`. */
   def withTs(events: DataFrame): DataFrame =
-    // integer `div`, not `/`: int64 nanos exceed double's 53-bit mantissa
-    tsNanos(events).withColumn("ets", timestamp_micros(expr("ts div 1000")))
+    events.withColumn("ets", timestamp_micros(col("ts")))
+
+  /** The split point of the two event-time halves: the earliest micros
+    * `m` with `2·m >= min(ts) + max(ts)`, so `ts < m` is the first half
+    * exactly when the oracles' nanos midpoint `500·(min + max)` puts an
+    * event there (an event at the floor of an odd sum's half stays in
+    * the first half). One bounded 1-row gather. */
+  def midpointMicros(events: DataFrame): Long = {
+    val b = events.agg(min("ts"), max("ts")).head()
+    Math.floorDiv(b.getLong(0) + b.getLong(1) + 1, 2L)
+  }
 
   /** Tumbling-window counts + sums per event_type with a 10-minute
     * watermark. Works on a batch or streaming events DataFrame. */
@@ -357,10 +360,10 @@ object EventStream {
     require(trailing >= 1 && trailing <= 100, s"trailing out of range: $trailing")
     require(scale >= 1 && scale <= 1000000000000L)
     val winUs = windowMinutes * 60L * 1000000L
-    val counts = tsNanos(events)
-      .select((col("ts") - pmod(col("ts"), lit(winUs * 1000L))).as("wns"),
+    val counts = events
+      .select((col("ts") - pmod(col("ts"), lit(winUs))).as("wstart_us"),
         col("event_type"))
-      .groupBy(expr("wns div 1000").as("wstart_us"), col("event_type"))
+      .groupBy("wstart_us", "event_type")
       .agg(count(lit(1)).as("n"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy("wstart_us")
@@ -546,8 +549,8 @@ object EventStream {
     require(stages.size >= 2, "a funnel needs at least 2 stages")
     require(stages.distinct.size == stages.size, "stages must be distinct")
     val winUs = windowMinutes * 60L * 1000000L
-    val ev = tsNanos(events).select(col("user_id"), col("event_type"),
-      expr("ts div 1000").as("us"))
+    val ev = events.select(col("user_id"), col("event_type"),
+      col("ts").as("us"))
     val first = ev.filter(col("event_type") === stages.head)
       .groupBy("user_id").agg(min("us").as("t"))
     val reached = stages.tail.scanLeft(first) { (prev, st) =>
@@ -569,9 +572,9 @@ object EventStream {
     * user_id, so the join reuses one partitioning; weeks are integer
     * epoch arithmetic (identical in any engine). */
   def retentionCohorts(events: DataFrame): DataFrame = {
-    val ev = tsNanos(events)
+    val ev = events
       .select(col("user_id"),
-        expr("(ts div 1000) div 604800000000").as("wk"))
+        expr("ts div 604800000000").as("wk"))
       .distinct()
     val first = ev.groupBy("user_id").agg(min("wk").as("cohort_wk"))
     ev.join(first, "user_id")
@@ -600,31 +603,30 @@ object EventStream {
   def attribution(events: DataFrame, convType: String,
       lookbackMinutes: Long = 1440): DataFrame = {
     require(lookbackMinutes >= 1, s"lookbackMinutes >= 1: $lookbackMinutes")
-    val lookbackNs = lookbackMinutes * 60L * 1000000000L
-    val ev = tsNanos(events)
-    val convs = ev.filter(col("event_type") === convType)
+    val lookbackUs = lookbackMinutes * 60L * 1000000L
+    val convs = events.filter(col("event_type") === convType)
       .select(col("event_id").as("conv_id"), col("user_id"), col("ts"))
-    val touches = ev.filter(col("event_type") =!= convType)
+    val touches = events.filter(col("event_type") =!= convType)
       .select(col("user_id"), col("event_id").as("touch_id"),
         col("event_type").as("touch_type"), col("ts").as("tts"))
       .withColumn("tend", col("tts"))
     val pairs = graft.operators.RangeJoin.intervalOverlapJoin(
-      convs.withColumn("ws", col("ts") - lit(lookbackNs))
+      convs.withColumn("ws", col("ts") - lit(lookbackUs))
         .withColumn("we", col("ts") - 1),
       touches, "ws", "we", "tts", "tend",
-      binSize = lookbackNs, keys = Seq("user_id"))
+      binSize = lookbackUs, keys = Seq("user_id"))
     val agg = pairs.groupBy("conv_id")
       .agg(count(lit(1)).as("n_touches"),
         min(struct(col("tts"), col("touch_id"), col("touch_type"))).as("ft"),
         max(struct(col("tts"), col("touch_id"), col("touch_type"))).as("lt"))
     convs.join(agg.hint("shuffle_hash"), Seq("conv_id"), "left")
       .select(col("conv_id"), col("user_id"),
-        expr("ts div 1000").as("ts_us"),
+        col("ts").as("ts_us"),
         coalesce(col("n_touches"), lit(0L)).as("n_touches"),
         col("ft.touch_type").as("first_touch"),
-        expr("ft.tts div 1000").as("first_ts_us"),
+        col("ft.tts").as("first_ts_us"),
         col("lt.touch_type").as("last_touch"),
-        expr("lt.tts div 1000").as("last_ts_us"))
+        col("lt.tts").as("last_ts_us"))
   }
 
   /** First-order Markov transition matrix over each user's event
@@ -645,7 +647,7 @@ object EventStream {
     require(scale >= 1 && scale <= 1000000000L, s"scale out of range: $scale")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val counts = tsNanos(events)
+    val counts = events
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
@@ -675,8 +677,8 @@ object EventStream {
     * (clamped to their day), so no carry-in pass is needed; the final
     * per-day aggregation reads the windowed relation once. */
   def peakConcurrency(events: DataFrame): DataFrame = {
-    val iv = tsNanos(events)
-      .select(col("user_id"), expr("ts div 1000").as("tus"))
+    val iv = events
+      .select(col("user_id"), col("ts").as("tus"))
       .withColumn("day", expr("tus div 86400000000"))
       .groupBy("user_id", "day")
       .agg(min("tus").as("s"), max("tus").as("e"))
@@ -712,8 +714,8 @@ object EventStream {
     require(halflifeBuckets >= 1 && halflifeBuckets <= 10000)
     require(scale >= 1 && scale <= 1000000000000L)
     val winUs = windowMinutes * 60L * 1000000L
-    val counts = tsNanos(events)
-      .select(expr(s"(ts div 1000) div ${winUs}L").as("bucket"),
+    val counts = events
+      .select(expr(s"ts div ${winUs}L").as("bucket"),
         col("event_type"))
       .groupBy("event_type", "bucket").agg(count(lit(1)).as("n"))
     val ref = counts.agg(max("bucket").as("ref_bucket"))
@@ -744,8 +746,8 @@ object EventStream {
     require(minGapUs >= 0 && burstPerMin >= 1)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("tus"), col("event_id"))
-    val base = tsNanos(events)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"),
+    val base = events
+      .select(col("user_id"), col("event_id"), col("ts").as("tus"),
         col("event_type"))
       .withColumn("gap_us", col("tus") - lag(col("tus"), 1).over(w))
     val perUser = base.groupBy("user_id").agg(
@@ -778,8 +780,8 @@ object EventStream {
   def dwellTimes(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("tus"), col("event_id"))
-    tsNanos(events)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"),
+    events
+      .select(col("user_id"), col("event_id"), col("ts").as("tus"),
         col("event_type"))
       .withColumn("dwell_us", lead(col("tus"), 1).over(w) - col("tus"))
       .filter(col("dwell_us").isNotNull)
@@ -809,8 +811,8 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("tus"), col("event_id"))
     val steps = (1 until pathLen).foldLeft(
-      tsNanos(events).select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tus"), col("event_type").as("t0"))) {
+      events.select(col("user_id"), col("event_id"),
+        col("ts").as("tus"), col("event_type").as("t0"))) {
       (acc, i) => acc.withColumn(s"t$i", lead(col("t0"), i).over(w))
     }
     val full = steps.filter((1 until pathLen)
@@ -840,8 +842,8 @@ object EventStream {
     * T11 summary-sort discipline. Reference time is a one-row broadcast. */
   def rfmSegments(events: DataFrame,
       eventType: String = "purchase"): DataFrame = {
-    val base = tsNanos(events).filter(col("event_type") === eventType)
-      .select(col("user_id"), expr("ts div 1000").as("tus"), col("value"))
+    val base = events.filter(col("event_type") === eventType)
+      .select(col("user_id"), col("ts").as("tus"), col("value"))
     val ref = broadcast(base.agg(max("tus").as("ref_tus")))
     val perUser = base.groupBy("user_id")
       .agg(max("tus").as("last_tus"), count(lit(1)).as("freq"),
@@ -880,8 +882,8 @@ object EventStream {
       .partitionBy("user_id").orderBy(col("tus"), col("event_id"))
     val wCum = wOrd.rowsBetween(
       org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val sessions = tsNanos(events)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"),
+    val sessions = events
+      .select(col("user_id"), col("event_id"), col("ts").as("tus"),
         col("event_type"))
       .withColumn("new_s",
         when(col("tus") - lag(col("tus"), 1).over(wOrd) > gapUs, 1L)
@@ -923,8 +925,8 @@ object EventStream {
   def changePoints(events: DataFrame,
       windowMinutes: Long = 60): DataFrame = {
     val winUs = windowMinutes * 60L * 1000000L
-    val counts = tsNanos(events)
-      .select((expr("ts div 1000") - pmod(expr("ts div 1000"), lit(winUs)))
+    val counts = events
+      .select((col("ts") - pmod(col("ts"), lit(winUs)))
         .as("w"), col("event_type"))
       .groupBy("event_type", "w").agg(count(lit(1)).as("x"))
     val stats = counts.groupBy("event_type")
@@ -960,8 +962,8 @@ object EventStream {
   def trendSlopes(events: DataFrame,
       windowMinutes: Long = 1440): DataFrame = {
     val winUs = windowMinutes * 60L * 1000000L
-    tsNanos(events)
-      .select(expr(s"(ts div 1000) div ${winUs}L").as("x"), col("event_type"))
+    events
+      .select(expr(s"ts div ${winUs}L").as("x"), col("event_type"))
       .groupBy("event_type", "x").agg(count(lit(1)).as("y"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_windows"), sum("x").as("sx"),
@@ -1006,8 +1008,8 @@ object EventStream {
   def interArrivalHistogram(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("tus"), col("event_id"))
-    val gaps = tsNanos(events)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"),
+    val gaps = events
+      .select(col("user_id"), col("event_id"), col("ts").as("tus"),
         col("event_type"))
       .withColumn("gap_us", col("tus") - lag(col("tus"), 1).over(w))
       .filter(col("gap_us").isNotNull)
@@ -1044,8 +1046,8 @@ object EventStream {
   def runningUserFeatures(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val typed = tsNanos(events).select(col("user_id"),
-        expr("ts div 1000").as("tus"),
+    val typed = events.select(col("user_id"),
+        col("ts").as("tus"),
         (col("value").cast("decimal(30,2)") * 100).cast("long").as("cents"))
       .as[UserFeatIn]
     if (!events.isStreaming) {
@@ -1078,8 +1080,8 @@ object EventStream {
     * percentile aggregate over the O(users) latency relation. */
   def conversionLatency(events: DataFrame, fromType: String = "signup",
       toType: String = "purchase"): DataFrame = {
-    val base = tsNanos(events)
-      .select(col("user_id"), expr("ts div 1000").as("tus"),
+    val base = events
+      .select(col("user_id"), col("ts").as("tus"),
         col("event_type"))
     val from = base.filter(col("event_type") === fromType)
       .groupBy("user_id").agg(min("tus").as("s"))
@@ -1105,9 +1107,9 @@ object EventStream {
     * Scale shape: one (type, dow) count aggregation (≤ 7·|types| rows);
     * type totals rejoin broadcast. */
   def weekdayProfile(events: DataFrame): DataFrame = {
-    val counts = tsNanos(events)
+    val counts = events
       .select(col("event_type"),
-        expr("((ts div 1000) div 86400000000 + 3) % 7").as("dow"))
+        expr("(ts div 86400000000 + 3) % 7").as("dow"))
       .groupBy("event_type", "dow").agg(count(lit(1)).as("n"))
     val totals = counts.groupBy("event_type").agg(sum("n").as("tot"))
     counts.join(broadcast(totals), "event_type")
@@ -1138,9 +1140,9 @@ object EventStream {
     def prior(tpe: String) =
       coalesce(sum(when(col("event_type") === tpe, 1L).otherwise(0L)).over(w),
         lit(0L))
-    tsNanos(events)
+    events
       .select(col("event_id"), col("user_id"),
-        expr("ts div 1000").as("tus"), col("event_type"))
+        col("ts").as("tus"), col("event_type"))
       .withColumn("prior_views", prior("view"))
       .withColumn("prior_clicks", prior("click"))
       .withColumn("prior_errors", prior("error"))
@@ -1165,8 +1167,8 @@ object EventStream {
     * offset) aggregation, then a window over the TINY aggregate table
     * (≤ cohorts × weeks rows) for the cumulative. */
   def ltvCohorts(events: DataFrame): DataFrame = {
-    val base = tsNanos(events).select(col("user_id"),
-      expr("(ts div 1000) div 604800000000").as("wk"),
+    val base = events.select(col("user_id"),
+      expr("ts div 604800000000").as("wk"),
       col("event_type"), col("value"))
     val cohorts = base.filter(col("event_type") === "signup")
       .groupBy("user_id").agg(min("wk").as("cohort_week"))
@@ -1197,9 +1199,9 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("event_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    tsNanos(events)
+    events
       .select(col("event_id"), col("user_id"),
-        expr("ts div 1000").as("tus"), col("event_type"))
+        col("ts").as("tus"), col("event_type"))
       .withColumn("late_us",
         greatest(coalesce(max("tus").over(w) - col("tus"), lit(0L)), lit(0L)))
       .groupBy("event_type")
@@ -1228,9 +1230,9 @@ object EventStream {
   def seasonalAnomaly(events: DataFrame,
       thresholdPpm: Long = 300000L): DataFrame = {
     require(thresholdPpm >= 0, s"thresholdPpm out of range: $thresholdPpm")
-    val daily = tsNanos(events)
+    val daily = events
       .select(col("event_type"),
-        expr("(ts div 1000) div 86400000000").as("day"))
+        expr("ts div 86400000000").as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
       .withColumn("dow", expr("(day + 3) % 7"))
     val base = daily.groupBy("event_type", "dow")
@@ -1255,8 +1257,8 @@ object EventStream {
     * broadcast. */
   def conversionCurve(events: DataFrame, fromType: String = "signup",
       toType: String = "purchase"): DataFrame = {
-    val base = tsNanos(events)
-      .select(col("user_id"), expr("ts div 1000").as("tus"),
+    val base = events
+      .select(col("user_id"), col("ts").as("tus"),
         col("event_type"))
     val from = base.filter(col("event_type") === fromType)
       .groupBy("user_id").agg(min("tus").as("s"))
@@ -1288,9 +1290,9 @@ object EventStream {
     * self-equi-join on (type, day − 7) over the tiny daily table. */
   def naiveBacktest(events: DataFrame, lagDays: Int = 7): DataFrame = {
     require(lagDays >= 1, s"lagDays out of range: $lagDays")
-    val daily = tsNanos(events)
+    val daily = events
       .select(col("event_type"),
-        expr("(ts div 1000) div 86400000000").as("day"))
+        expr("ts div 86400000000").as("day"))
       .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
     val pred = daily.select(col("event_type"),
       (col("day") + lagDays).as("day"), col("n").as("pred"))
@@ -1319,9 +1321,9 @@ object EventStream {
   def dauWau(events: DataFrame, windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1 && windowDays <= 370,
       s"windowDays out of range: $windowDays")
-    val ud = tsNanos(events)
+    val ud = events
       .select(col("user_id"),
-        expr("(ts div 1000) div 86400000000").as("day")).distinct()
+        expr("ts div 86400000000").as("day")).distinct()
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))
     val wau = ud
       .select(col("user_id"),
@@ -1348,7 +1350,7 @@ object EventStream {
     * pure per-row hash. */
   def abAssignment(events: DataFrame, convType: String = "purchase",
       salt: String = "exp1"): DataFrame = {
-    val perUser = tsNanos(events)
+    val perUser = events
       .groupBy("user_id")
       .agg(max(when(col("event_type") === convType, 1L).otherwise(0L))
         .as("converted"))
@@ -1374,9 +1376,9 @@ object EventStream {
   def markovAccuracy(events: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("tus", "event_id")
-    val bi = tsNanos(events)
+    val bi = events
       .select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tus"), col("event_type").as("prev"))
+        col("ts").as("tus"), col("event_type").as("prev"))
       .withColumn("next", lead("prev", 1).over(w))
       .filter(col("next").isNotNull)
       .groupBy("prev", "next").agg(count(lit(1)).as("c"))
@@ -1421,8 +1423,8 @@ object EventStream {
     * newest timestamp is a one-row broadcast rejoined to the tiny
     * per-type table. */
   def freshnessLag(events: DataFrame): DataFrame = {
-    val per = tsNanos(events)
-      .select(col("event_type"), expr("ts div 1000").as("tus"))
+    val per = events
+      .select(col("event_type"), col("ts").as("tus"))
       .groupBy("event_type")
       .agg(min("tus").as("first_us"), max("tus").as("last_us"),
         count(lit(1)).as("n"))
@@ -1450,7 +1452,7 @@ object EventStream {
     require(cap >= 1, s"cap out of range: $cap")
     val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
       .orderBy("h", "event_id")
-    tsNanos(events)
+    events
       .select(col("event_id"), col("user_id"), col("event_type"),
         md5(concat(lit("fc_"), col("event_id").cast("string"))).as("h"))
       .withColumn("rk", row_number().over(w))
@@ -1478,9 +1480,9 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("event_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val late = tsNanos(events)
+    val late = events
       .select(col("event_id"), col("user_id"),
-        expr("ts div 1000").as("tus"), col("event_type"))
+        col("ts").as("tus"), col("event_type"))
       .withColumn("late_us",
         greatest(coalesce(max("tus").over(w) - col("tus"), lit(0L)), lit(0L)))
     val cand = array(candidatesUs.map(lit): _*)
@@ -1502,9 +1504,9 @@ object EventStream {
     * Scale shape: distinct on (user, day) then two partial-aggregated
     * groupBys, each on its natural key; nothing driver-side. */
   def activityHistogram(events: DataFrame): DataFrame =
-    tsNanos(events)
+    events
       .select(col("user_id"),
-        expr("(ts div 1000) div 86400000000").as("day")).distinct()
+        expr("ts div 86400000000").as("day")).distinct()
       .groupBy("user_id").agg(count(lit(1)).as("days_active"))
       .groupBy("days_active").agg(count(lit(1)).as("n_users"))
 
@@ -1532,8 +1534,8 @@ object EventStream {
       shortHours: Int = 1, longHours: Int = 6): DataFrame = {
     require(budgetPpm >= 1 && shortHours >= 1 && longHours > shortHours,
       s"bad burn config: $budgetPpm/$shortHours/$longHours")
-    val hourly = tsNanos(events)
-      .select(expr("(ts div 1000) div 3600000000").as("hr"),
+    val hourly = events
+      .select(expr("ts div 3600000000").as("hr"),
         (col("event_type") === "error").cast("long").as("e"))
       .groupBy("hr")
       .agg(count(lit(1)).as("tot"), coalesce(sum("e"), lit(0L)).as("err"))
@@ -1569,9 +1571,9 @@ object EventStream {
     * everything after is two windows on the user key and one
     * weeks-sized groupBy. The global last week is a 1-row broadcast. */
   def growthAccounting(events: DataFrame): DataFrame = {
-    val uw = tsNanos(events)
+    val uw = events
       .select(col("user_id"),
-        expr("((ts div 1000) div 86400000000) div 7").as("wk"))
+        expr("(ts div 86400000000) div 7").as("wk"))
       .distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("wk")
@@ -1650,8 +1652,8 @@ object EventStream {
     * (same contract as the span-days CDF window). */
   def outageScan(events: DataFrame, minMissing: Int = 1): DataFrame = {
     require(minMissing >= 1, s"minMissing out of range: $minMissing")
-    val minutes = tsNanos(events)
-      .select(expr("ts div 60000000000").as("m")).distinct()
+    val minutes = events
+      .select(expr("ts div 60000000").as("m")).distinct()
     val w = org.apache.spark.sql.expressions.Window.orderBy("m")
     minutes.withColumn("prev", lag("m", 1).over(w))
       .filter(col("prev").isNotNull &&
@@ -1692,8 +1694,8 @@ object EventStream {
   def runStreamingCounts(spark: SparkSession, dir: String, name: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // the file source needs a directory; glob-filter to the events table
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = tsMicros(spark.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir))
     val q = tumblingCounts(stream).writeStream
       .outputMode("complete").format("memory").queryName(name).start()
     q.processAllAvailable()
@@ -1704,7 +1706,7 @@ object EventStream {
   /** CUPED variance-reduced experiment readout — Deng, Xu, Kohavi & Walker,
     * WSDM 2013 ("Improving the sensitivity of online controlled
     * experiments"): per user, X = pre-period activity (events before
-    * `splitNanos`), Y = experiment-period activity; arms from the
+    * `splitMicros`), Y = experiment-period activity; arms from the
     * [[abAssignment]] md5 coin; theta = cov(X,Y)/var(X) over ALL users;
     * the adjusted metric Y − θ(X − X̄) keeps each arm's mean comparison
     * unbiased while shrinking its variance by the pre-period correlation
@@ -1720,12 +1722,12 @@ object EventStream {
     * ONE arm groupBy folds the five arm moments; the 1-row pooled-moment
     * relation broadcasts into the 2-row arm table. No second pass over
     * raw events — var(Y−θX) expands through the moments. */
-  def cuped(events: DataFrame, splitNanos: Long,
+  def cuped(events: DataFrame, splitMicros: Long,
       salt: String = "exp1"): DataFrame = {
-    val perUser = tsNanos(events)
+    val perUser = events
       .groupBy("user_id")
-      .agg(sum(when(col("ts") < splitNanos, 1L).otherwise(0L)).as("x"),
-        sum(when(col("ts") >= splitNanos, 1L).otherwise(0L)).as("y"))
+      .agg(sum(when(col("ts") < splitMicros, 1L).otherwise(0L)).as("x"),
+        sum(when(col("ts") >= splitMicros, 1L).otherwise(0L)).as("y"))
       .withColumn("arm",
         when(conv(substring(md5(concat(lit(s"ab_${salt}_"),
           col("user_id").cast("string"))), 1, 13), 16, 10)
@@ -1773,7 +1775,7 @@ object EventStream {
     * whether the score's VALUE means what it says (a 0.30 bucket should
     * convert 30% of the time). The "model" is the honest baseline a
     * feature table supports: a view-count → purchase-rate table learned on
-    * the pre-`splitNanos` half, applied to post-split users, compared
+    * the pre-`splitMicros` half, applied to post-split users, compared
     * against their actual post-split outcomes. Rates live as integer ppm
     * from birth, so every bin moment is an exact BIGINT sum — no
     * order-dependent float anywhere, identical in any engine. Output: one
@@ -1786,24 +1788,23 @@ object EventStream {
     * combine; the rate table is ≤ maxBucket+1 rows and broadcast-joins
     * onto test users; the global-fallback rate is a 1-row broadcast; the
     * bin rollup is ≤ 11 rows. No second pass over raw events. */
-  def calibration(events: DataFrame, splitNanos: Long,
+  def calibration(events: DataFrame, splitMicros: Long,
       maxBucket: Int = 20): DataFrame = {
     require(maxBucket >= 1 && maxBucket <= 1000,
       s"maxBucket out of range: $maxBucket")
-    val ev = tsNanos(events)
-    def half(pred: org.apache.spark.sql.Column): DataFrame = ev.filter(pred)
+    def half(pred: org.apache.spark.sql.Column): DataFrame = events.filter(pred)
       .groupBy("user_id")
       .agg(least(sum(when(col("event_type") === "view", 1L).otherwise(0L)),
         lit(maxBucket.toLong)).as("fb"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("y"))
-    val rates = half(col("ts") < splitNanos)
+    val rates = half(col("ts") < splitMicros)
       .groupBy("fb").agg(count(lit(1)).as("n_tr"), sum("y").as("pos_tr"))
       .select(col("fb"), expr("(1000000L * pos_tr) div n_tr").as("rate_ppm"))
-    val fallback = broadcast(half(col("ts") < splitNanos)
+    val fallback = broadcast(half(col("ts") < splitMicros)
       .agg(count(lit(1)).as("n_g"), sum("y").as("pos_g"))
       .select(expr("(1000000L * pos_g) div greatest(1L, n_g)").as("g_ppm")))
-    val scored = half(col("ts") >= splitNanos)
+    val scored = half(col("ts") >= splitMicros)
       .join(broadcast(rates), Seq("fb"), "left_outer")
       .crossJoin(fallback)
       .select(col("y"),
@@ -1855,8 +1856,8 @@ object EventStream {
   def survivalCurve(events: DataFrame, horizonDays: Int = 7): DataFrame = {
     require(horizonDays >= 1 && horizonDays <= 3650,
       s"horizonDays out of range: $horizonDays")
-    val day = 86400L * 1000000000L
-    val perUser = tsNanos(events).groupBy("user_id")
+    val day = 86400L * 1000000L
+    val perUser = events.groupBy("user_id")
       .agg(min("ts").as("first_ts"), max("ts").as("last_ts"))
     val edge = broadcast(perUser.agg(max("last_ts").as("g_max")))
     val durations = perUser.crossJoin(edge)
@@ -1896,8 +1897,8 @@ object EventStream {
       lags: Seq[Int] = Seq(1, 24, 168)): DataFrame = {
     require(lags.nonEmpty && lags.forall(l => l >= 1 && l <= 100000),
       s"lags out of range: $lags")
-    val hours = tsNanos(events)
-      .select(expr("(ts div 1000) div 3600000000").as("h"))
+    val hours = events
+      .select(expr("ts div 3600000000").as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
     val bounds = hours.agg(min("h").as("lo"), max("h").as("hi"))
     val dense = bounds.select(explode(expr("sequence(lo, hi)")).as("h"))
@@ -1947,7 +1948,7 @@ object EventStream {
     * 2-row arm rollup carrying the five cross-moments. */
   def ratioMetricCi(events: DataFrame, numType: String = "purchase",
       salt: String = "exp1"): DataFrame = {
-    val perUser = tsNanos(events)
+    val perUser = events
       .select(col("user_id"),
         when(col("event_type") === numType,
           (col("value").cast("decimal(30,6)") * 1000000)
@@ -2020,8 +2021,8 @@ object EventStream {
     val capMicro = capacity * 1000000L
     val spark = events.sparkSession
     import spark.implicits._
-    val typed = tsNanos(events).select(col("user_id"), col("event_id"),
-        expr("ts div 1000").as("tus")).as[RateLimitIn]
+    val typed = events.select(col("user_id"), col("event_id"),
+        col("ts").as("tus")).as[RateLimitIn]
     def fold(st0: RateLimitState, rs: Seq[RateLimitIn])
         : (RateLimitState, Seq[RateLimitOut]) = {
       var st = st0
@@ -2082,7 +2083,7 @@ object EventStream {
     * arm) distinct + a metric groupBy; arm totals are a 1-row
     * broadcast; the MDE projection runs on the |metrics|-row table. */
   def powerReadout(events: DataFrame, salt: String = "exp1"): DataFrame = {
-    val armed = tsNanos(events)
+    val armed = events
       .select(col("user_id"), col("event_type"),
         (conv(substring(md5(concat(lit(s"ab_${salt}_"),
           col("user_id").cast("string"))), 1, 13), 16, 10)
@@ -2127,7 +2128,7 @@ object EventStream {
   def fdrGate(events: DataFrame, alphaPpm: Long = 50000L,
       salt: String = "exp1"): DataFrame = {
     require(alphaPpm > 0 && alphaPpm < 1000000L, s"alphaPpm: $alphaPpm")
-    val armed = tsNanos(events)
+    val armed = events
       .select(col("user_id"), col("event_type"),
         (conv(substring(md5(concat(lit(s"ab_${salt}_"),
           col("user_id").cast("string"))), 1, 13), 16, 10)

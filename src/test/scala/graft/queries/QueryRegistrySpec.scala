@@ -48,4 +48,19 @@ class QueryRegistrySpec extends AnyFunSuite {
       .map(n => n -> literals(n)).filter(_._2 != 1)
     assert(wrong.isEmpty, s"query names not written exactly once: ${wrong.mkString(", ")}")
   }
+
+  test("one event-time unit: no nanos conversion is written under src/main/scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), "run tests from the repo root")
+    // `ts` leaves the events scan as epoch micros; a nanos helper, the
+    // nanos parquet option or a nanos-to-micros `div` is a second unit
+    val secondUnit = "tsNanos|nanosAsLong|ts div 1000(?!\\d)".r
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "ISO-8859-1")
+        secondUnit.findAllIn(src).map(m => s"$p: $m")
+      }.distinct
+    assert(hits.isEmpty, hits.mkString("; "))
+  }
 }

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 
 class EventStreamSpec extends SparkSpec {
 
-  // tsNanos: canonical long-nanos ts regardless of testdata vintage
-  private def events =
-    EventStream.tsNanos(spark.read.parquet(s"${sf()}/events.parquet"))
+  // the canonical events scan: ts as long epoch micros
+  private def events = graft.queries.Relational.t(spark, sf(), "events")
 
   test("streaming tumbling counts equal the batch plan") {
     val streamed = EventStream.runStreamingCounts(spark, sf(), "stream_counts")
@@ -19,11 +18,11 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("streaming sliding counts equal the batch plan") {
-    // raw on-disk schema (the stream reads the raw dir); tsNanos inside
-    // the operator canonicalizes either vintage
+    // raw on-disk schema (the stream reads the raw dir); tsMicros at the
+    // source gives the operator the same micros ts as the batch scan
     val schema = spark.read.parquet(s"${sf()}/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sf())
+    val stream = EventStream.tsMicros(spark.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(sf()))
     val q = EventStream.slidingCounts(stream).writeStream
       .outputMode("complete").format("memory").queryName("slide_counts").start()
     q.processAllAvailable()
@@ -81,7 +80,7 @@ class EventStreamSpec extends SparkSpec {
     // spot-check one user against a direct computation
     val u = sessions.map(_.user_id).head
     val times = events.filter(col("user_id") === u)
-      .select((col("ts") / 1000).cast("long")).collect().map(_.getLong(0)).sorted
+      .select(col("ts")).collect().map(_.getLong(0)).sorted
     var expected = 1
     times.sliding(2).foreach {
       case Array(a, b) => if (b - a > 30L * 60 * 1000000) expected += 1
@@ -223,7 +222,7 @@ class EventStreamSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val h = 3600L * 1000000000L // an hour in nanos (ts column is nanos)
+    val h = 3600L * 1000000L // an hour in micros
     val mem = MemoryStream[(Long, String, Long)]
     val q = EventStream.funnelTransitions(
         mem.toDF.toDF("user_id", "event_type", "ts"),
@@ -247,8 +246,7 @@ class EventStreamSpec extends SparkSpec {
     val user7 = spark.table("funnel_evict")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3)))
       .filter(_._1 == 7L).sortBy(_._3)
-    val us = 3600L * 1000000L // an hour in micros (output `us` column)
-    assert(user7.toSeq == Seq((7L, 1, 1L * us), (7L, 1, 102L * us)),
+    assert(user7.toSeq == Seq((7L, 1, 1L * h), (7L, 1, 102L * h)),
       s"expected re-anchor after eviction, got ${user7.toSeq}")
   }
 
@@ -273,7 +271,7 @@ class EventStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = events.select("user_id", "ts")
       .as[(Long, Long)].collect().sortBy(_._2)
-    val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000000L
+    val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000L
     val mem = MemoryStream[(Long, Long)]
     val q = EventStream.kmvDistinctWindowed(
         mem.toDF.toDF("user_id", "ts"), "user_id")
@@ -284,7 +282,7 @@ class EventStreamSpec extends SparkSpec {
         rows.slice(2 * n / 3, n).toSeq, Seq((999999L, sentinelTs)))
       .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
     q.stop()
-    val sentinelW = sentinelTs / 1000 - (sentinelTs / 1000) % 3600000000L
+    val sentinelW = sentinelTs - sentinelTs % 3600000000L
     val streamed = spark.table("kmv_win")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
       .filter(_._1 < sentinelW)
@@ -297,7 +295,7 @@ class EventStreamSpec extends SparkSpec {
   test("rateSpikes: integer trailing-mean ratio, partial histories suppressed") {
     val s = spark
     import s.implicits._
-    val h = 3600L * 1000000000L // one hour in nanos
+    val h = 3600L * 1000000L // one hour in micros
     // one type, hourly counts 2, 2, 2, 8: only window 4 has a full
     // trailing-3 history; its ratio = 8*3*1e6/6 = 4e6 (a 4x spike)
     val rows = (0 until 2).map(i => (1L + i, "x", 0L * h + i)) ++
@@ -337,7 +335,7 @@ class EventStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = events.select("event_type", "ts")
       .as[(String, Long)].collect().sortBy(_._2)
-    val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000000L
+    val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000L
     val mem = MemoryStream[(String, Long)]
     val q = EventStream.cmsCountersWindowed(
         mem.toDF.toDF("event_type", "ts"), "event_type", width = 64)
@@ -348,7 +346,7 @@ class EventStreamSpec extends SparkSpec {
         rows.slice(2 * n / 3, n).toSeq, Seq(("zzz", sentinelTs)))
       .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
     q.stop()
-    val sentinelW = sentinelTs / 1000 - (sentinelTs / 1000) % 3600000000L
+    val sentinelW = sentinelTs - sentinelTs % 3600000000L
     val streamed = spark.table("cms_win")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3)))
       .filter(_._1 < sentinelW)
@@ -381,8 +379,8 @@ class EventStreamSpec extends SparkSpec {
     // pair them
     val (_, pv, pc) = batch.find { case (_, v, c) => c > v }
       .getOrElse(fail("no strictly-ordered pair in the fixture"))
-    val cutNs = (pv + pc) / 2 * 1000
-    val (c1, c2) = rows.partition(_._3 <= cutNs)
+    val cut = (pv + pc) / 2
+    val (c1, c2) = rows.partition(_._3 <= cut)
     assert(c1.nonEmpty && c2.nonEmpty)
     Seq(c1, c2).foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
     q.stop()
@@ -409,7 +407,7 @@ class EventStreamSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val rows = events.select("user_id", "event_type", "ts", "value")
       .as[(Long, String, Long, Double)].collect().sortBy(_._3)
-    val sentinelTs = rows.map(_._3).max + 10L * 24 * 3600 * 1000000000L
+    val sentinelTs = rows.map(_._3).max + 10L * 24 * 3600 * 1000000L
     val mem = MemoryStream[(Long, String, Long, Double)]
     val q = EventStream.intervalJoinOuter(
         mem.toDF.toDF("user_id", "event_type", "ts", "value"),
@@ -435,7 +433,7 @@ class EventStreamSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val h = 3600L * 1000000000L // an hour in nanos (ts column is nanos)
+    val h = 3600L * 1000000L // an hour in micros
     val mem = MemoryStream[(Long, String, Long)]
     val q = EventStream.funnelTransitions(
         mem.toDF.toDF("user_id", "event_type", "ts"),
@@ -446,10 +444,10 @@ class EventStreamSpec extends SparkSpec {
       mem.addData(rows: _*); q.processAllAvailable()
     }
     // b1: user 5 completes the funnel at t=1h (view + click)
-    feed((5L, "view", 1L * h), (5L, "click", 1L * h + 60L * 1000000000L))
+    feed((5L, "view", 1L * h), (5L, "click", 1L * h + 60L * 1000000L))
     // b2: user 5 views AGAIN, still inside the attempt's 60-min window —
     // the tombstone must swallow it (batch's single-anchor pass would)
-    feed((5L, "view", 1L * h + 120L * 1000000000L))
+    feed((5L, "view", 1L * h + 120L * 1000000L))
     // b3-b4: filler advances the watermark far past 1h + 60min, the
     // tombstone's timeout fires and evicts it
     feed((99L, "view", 100L * h))
@@ -460,19 +458,18 @@ class EventStreamSpec extends SparkSpec {
     val user5 = spark.table("funnel_tomb")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3)))
       .filter(_._1 == 5L).sortBy(_._3)
-    val us = 3600L * 1000000L
     assert(user5.toSeq == Seq(
-      (5L, 1, 1L * us),            // original anchor
-      (5L, 2, 1L * us + 60000000L), // completion
-      (5L, 1, 102L * us)),          // re-anchor only AFTER eviction
+      (5L, 1, 1L * h),            // original anchor
+      (5L, 2, 1L * h + 60000000L), // completion
+      (5L, 1, 102L * h)),          // re-anchor only AFTER eviction
       s"expected tombstoned completion then post-window re-anchor, got ${user5.toSeq}")
   }
 
   test("funnel: strict ordering, per-step window, monotone narrowing") {
     val s = spark
     import s.implicits._
-    val m = 60L * 1000000L // a minute in micros; ts column is nanos
-    def ev(user: Long, typ: String, minute: Long) = (user, typ, minute * m * 1000)
+    val m = 60L * 1000000L // a minute in micros
+    def ev(user: Long, typ: String, minute: Long) = (user, typ, minute * m)
     val events = Seq(
       ev(1, "view", 0), ev(1, "click", 10), ev(1, "purchase", 20), // full convert
       ev(2, "view", 0), ev(2, "click", 10), //                        no purchase
@@ -489,7 +486,7 @@ class EventStreamSpec extends SparkSpec {
   test("attribution: window bounds, tie-break, zero-touch conversions") {
     val s = spark
     import s.implicits._
-    val m = 60L * 1000000000L // one minute in nanos
+    val m = 60L * 1000000L // one minute in micros
     // user 1: touches at t=1,5,9 min around a conversion at t=10 min with
     // a 5-minute lookback -> touches at 5 (edge: ts-lookback inclusive)
     // and 9 qualify; t=1 is too old; a touch AT t=10 is excluded (strict <)
@@ -518,7 +515,7 @@ class EventStreamSpec extends SparkSpec {
   test("transitionMatrix: hand-traced sequences; last events drop; ppm rows sum right") {
     val s = spark
     import s.implicits._
-    val m = 60L * 1000000000L
+    val m = 60L * 1000000L
     // user 1: a b a b ; user 2: a b  -> transitions a->b x3, b->a x1
     val ev = Seq(
       (1L, 1L, "a", 1 * m), (2L, 1L, "b", 2 * m),
@@ -534,7 +531,7 @@ class EventStreamSpec extends SparkSpec {
   test("peakConcurrency: sweep-line peak, starts-before-ends ties, per-day partition") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L // ns
+    val sec = 1000000L // micros
     val day = 86400L * sec
     val ev = Seq(
       // day 0: u1 [600s, 3000s], u2 [2400s, 4800s], u3 point at 3000s
@@ -557,7 +554,7 @@ class EventStreamSpec extends SparkSpec {
   test("decayedCounts: power-of-two half-life decay, newest bucket is the reference") {
     val s = spark
     import s.implicits._
-    val h = 3600L * 1000000000L // one hour in ns
+    val h = 3600L * 1000000L // one hour in micros
     // type a: 8 events 24h old + 1 now; type b: 4 events now.
     // halflife = 24 buckets -> the old 8 decay to 8>>1 = 4 (scale 1):
     // a = 4 + 1 = 5, b = 4.
@@ -577,7 +574,7 @@ class EventStreamSpec extends SparkSpec {
   test("botSignals: gap/burst rules, single-event user keeps a NULL gap") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     val ev = Seq(
       // u1: 3 events, min gap 0.5 s  -> gap rule fires
       (1L, 1L, "a", 10 * sec), (2L, 1L, "b", 10 * sec + sec / 2),
@@ -606,7 +603,7 @@ class EventStreamSpec extends SparkSpec {
   test("dwellTimes: dwell attributed to the state being left; last events drop") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     // u1: browse(0s) -> buy(10s) -> browse(15s, last)
     // u2: browse(0s) -> browse(30s, last)
     val ev = Seq(
@@ -625,7 +622,7 @@ class EventStreamSpec extends SparkSpec {
   test("topPaths: overlapping windows counted, cross-user paths never form, rank caps") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     // u1: a b c b c -> abc, bcb, cbc ; u2: a b c -> abc
     val ev = (Seq(("a", 1), ("b", 2), ("c", 3), ("b", 4), ("c", 5))
         .zipWithIndex.map { case ((t, ts), i) => (i.toLong, 1L, t, ts * sec) } ++
@@ -645,7 +642,7 @@ class EventStreamSpec extends SparkSpec {
   test("rfmSegments: quintiles split a 5-user population one per bucket; segment concatenates") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     // 5 users: user i has i+1 purchases at times i*100s.. and value 10*(i+1)
     val ev = (0 until 5).flatMap { i =>
       (0 to i).map(j => ((i * 10 + j).toLong, i.toLong, "purchase",
@@ -669,7 +666,7 @@ class EventStreamSpec extends SparkSpec {
   test("bounceRates: gap splits sessions; single-event session bounces; exit accounting") {
     val s = spark
     import s.implicits._
-    val min = 60L * 1000000000L
+    val min = 60L * 1000000L
     val ev = Seq(
       // u1 session 1: a(0) b(5m) -> entry a, exit b, no bounce
       (1L, 1L, "a", 0 * min), (2L, 1L, "b", 5 * min),
@@ -688,7 +685,7 @@ class EventStreamSpec extends SparkSpec {
   test("changePoints: the drawup peaks where the level shift ends; flat series peaks at 0") {
     val s = spark
     import s.implicits._
-    val h = 3600L * 1000000000L
+    val h = 3600L * 1000000L
     // type a: hours 0-3 at 1 event, hours 4-7 at 5 events
     // n=8, sx=24; dev = 8x-24: low hours -16, high hours +16
     // S: -16,-32,-48,-64,-48,-32,-16,0; runmin tracks -64
@@ -710,7 +707,7 @@ class EventStreamSpec extends SparkSpec {
   test("trendSlopes: exact unit slope, flat series reports 0, single window guarded") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     // type a: 1,2,3 events on days 0,1,2 -> slope exactly +1/day
     val a = (0 until 3).flatMap(i => (0 to i).map(j =>
       ((i * 10 + j).toLong, 1L, "a", i * day)))
@@ -748,12 +745,11 @@ class EventStreamSpec extends SparkSpec {
   test("interArrivalHistogram: octave = binary length of the micro gap; shares sum") {
     val s = spark
     import s.implicits._
-    val us = 1000L // ns per us
     // gaps for type a: 1us (bin '1' -> octave 1), 3us ('11' -> 2),
     // 8us ('1000' -> 4); plus a zero gap -> octave 0
     val ev = Seq(
-      (1L, 1L, "a", 0L), (2L, 1L, "a", 1 * us), (3L, 1L, "a", 4 * us),
-      (4L, 1L, "a", 12 * us), (5L, 1L, "a", 12 * us)
+      (1L, 1L, "a", 0L), (2L, 1L, "a", 1L), (3L, 1L, "a", 4L),
+      (4L, 1L, "a", 12L), (5L, 1L, "a", 12L)
     ).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.interArrivalHistogram(ev)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
@@ -767,7 +763,7 @@ class EventStreamSpec extends SparkSpec {
   test("runningUserFeatures: 3-batch streaming replay converges to the batch aggregate") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     val rows = Seq((1L, 1 * sec, 1.25), (1L, 3 * sec, 2.50),
       (2L, 2 * sec, 10.00), (1L, 5 * sec, 0.25), (2L, 9 * sec, 0.01))
     val batchDf = rows.toDF("user_id", "ts", "value")
@@ -799,7 +795,7 @@ class EventStreamSpec extends SparkSpec {
   test("conversionLatency: only purchases at-or-after the first signup count; exact quartiles") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     val ev = Seq(
       (1L, 1L, "purchase", 5 * sec),  // BEFORE u1's signup: ignored
       (2L, 1L, "signup", 10 * sec), (3L, 1L, "purchase", 30 * sec),
@@ -817,11 +813,11 @@ class EventStreamSpec extends SparkSpec {
   test("weekdayProfile: epoch day 0 is Thursday (dow 3); shares in ppm") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     val ev = Seq(
       (1L, 1L, "a", 0 * day),       // 1970-01-01 Thu -> dow 3
       (2L, 1L, "a", 4 * day),       // Monday -> dow 0
-      (3L, 1L, "a", 4 * day + 1000L),
+      (3L, 1L, "a", 4 * day + 1L),
       (4L, 1L, "a", 11 * day)       // next Monday -> dow 0
     ).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.weekdayProfile(ev)
@@ -833,7 +829,7 @@ class EventStreamSpec extends SparkSpec {
   test("pitFeatures: strictly-earlier frame — the label event never sees itself") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     val ev = Seq(
       (1L, 1L, "view", 1 * sec), (2L, 1L, "click", 2 * sec),
       (3L, 1L, "purchase", 3 * sec), // sees 1 view, 1 click, 0 purchases
@@ -851,7 +847,7 @@ class EventStreamSpec extends SparkSpec {
   test("ltvCohorts: offsets anchor to first-signup week; cumulative is exact") {
     val s = spark
     import s.implicits._
-    val week = 7L * 86400 * 1000000000L
+    val week = 7L * 86400 * 1000000L
     val ev = Seq(
       (1L, 1L, "signup", 0L, 0.0),
       (2L, 1L, "purchase", week / 2, 10.5),     // offset 0
@@ -870,7 +866,7 @@ class EventStreamSpec extends SparkSpec {
   test("conversionCurve: first-conversion day offsets; CDF over ALL signups") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     val ev = Seq(
       (1L, 1L, "signup", 0L), (2L, 1L, "purchase", day / 2),  // day 0
       (3L, 2L, "signup", 0L), (4L, 2L, "purchase", 3 * day),  // day 3
@@ -888,11 +884,10 @@ class EventStreamSpec extends SparkSpec {
   test("watermarkSweep: drop counts fall as the watermark grows; zero at the max lateness") {
     val s = spark
     import s.implicits._
-    val us = 1000L
     val ev = Seq(
-      (1L, 1L, "a", 1000 * us),
-      (2L, 1L, "a", 400 * us),  // 600us late
-      (3L, 1L, "a", 995 * us)   // 5us late
+      (1L, 1L, "a", 1000L),
+      (2L, 1L, "a", 400L),  // 600us late
+      (3L, 1L, "a", 995L)   // 5us late
     ).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.watermarkSweep(ev,
         candidatesUs = Seq(0L, 10L, 1000L))
@@ -905,9 +900,9 @@ class EventStreamSpec extends SparkSpec {
   test("naiveBacktest: WAPE against same-weekday-last-week; lead-in days excluded") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     def burst(d: Long, n: Int) = (1 to n).map(i =>
-      (d * 1000 + i, 1L, "a", d * day + i * 1000L))
+      (d * 1000 + i, 1L, "a", d * day + i))
     // day 0: 10; day 7: 15; day 14: 15
     val ev = (burst(0, 10) ++ burst(7, 15) ++ burst(14, 15))
       .toDF("event_id", "user_id", "event_type", "ts")
@@ -921,7 +916,7 @@ class EventStreamSpec extends SparkSpec {
   test("dauWau: trailing-7 window via fan-out; stickiness exact") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     val ev = Seq(
       (1L, 1L, "a", 0 * day), (2L, 2L, "a", 0 * day), // day 0: u1, u2
       (3L, 1L, "a", 3 * day),                         // day 3: u1
@@ -942,8 +937,8 @@ class EventStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val ev = (1L to 40L).flatMap(u => Seq(
-      (u * 10, u, "view", u * 1000L),
-      (u * 10 + 1, u, if (u % 4 == 0) "purchase" else "click", u * 2000L)))
+      (u * 10, u, "view", u),
+      (u * 10 + 1, u, if (u % 4 == 0) "purchase" else "click", u * 2L)))
       .toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.abAssignment(ev).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -958,7 +953,7 @@ class EventStreamSpec extends SparkSpec {
   test("markovAccuracy: majority successor per state with name tie-break") {
     val s = spark
     import s.implicits._
-    val sec = 1000000000L
+    val sec = 1000000L
     // user 1: a->b, a->b, a->c  => top(a)=b, 2/3
     val ev = Seq(
       (1L, 1L, "a", 1 * sec), (2L, 1L, "b", 2 * sec),
@@ -975,10 +970,10 @@ class EventStreamSpec extends SparkSpec {
   test("seasonalAnomaly: deviation judged against the same weekday's baseline") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     // Mondays (epoch days 4, 11, 18): counts 10, 10, 40 -> base 20
     def burst(d: Long, n: Int) = (1 to n).map(i =>
-      (d * 1000 + i, 1L, "a", d * day + i * 1000L))
+      (d * 1000 + i, 1L, "a", d * day + i))
     val ev = (burst(4, 10) ++ burst(11, 10) ++ burst(18, 40))
       .toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.seasonalAnomaly(ev, thresholdPpm = 400000L)
@@ -990,13 +985,13 @@ class EventStreamSpec extends SparkSpec {
   test("alertEpisodes: consecutive flagged days coalesce; a gap splits episodes") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     // same-dow baseline across 4 weeks: days 0,7,14,21 with counts
     // 10, 40, 40, 10 -> base 25, all four deviate 60% -> all flagged;
     // two NON-adjacent day pairs (0,7) vs (14,21) are 7 apart, so each
     // flagged day is its own episode (gap > 1)
     def burst(d: Long, n: Int) = (1 to n).map(i =>
-      (d * 1000 + i, 1L, "a", d * day + i * 1000L))
+      (d * 1000 + i, 1L, "a", d * day + i))
     val ev = (burst(0, 10) ++ burst(7, 40) ++ burst(14, 40) ++ burst(21, 10))
       .toDF("event_id", "user_id", "event_type", "ts")
     val eps = EventStream.alertEpisodes(ev, thresholdPpm = 400000L)
@@ -1015,10 +1010,9 @@ class EventStreamSpec extends SparkSpec {
   test("freshnessLag: per-type staleness vs the global newest event") {
     val s = spark
     import s.implicits._
-    val us = 1000L
     val ev = Seq(
-      (1L, 1L, "a", 100 * us), (2L, 1L, "a", 500 * us),
-      (3L, 1L, "b", 200 * us)
+      (1L, 1L, "a", 100L), (2L, 1L, "a", 500L),
+      (3L, 1L, "b", 200L)
     ).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.freshnessLag(ev).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
@@ -1030,7 +1024,7 @@ class EventStreamSpec extends SparkSpec {
   test("freqCappedSample: per-user cap, deterministic md5 choice") {
     val s = spark
     import s.implicits._
-    val ev = ((1 to 10).map(i => (i.toLong, 1L, "a", i * 1000L)) ++
+    val ev = ((1 to 10).map(i => (i.toLong, 1L, "a", i.toLong)) ++
       Seq((100L, 2L, "b", 1L))).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.freqCappedSample(ev, cap = 4).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -1046,13 +1040,12 @@ class EventStreamSpec extends SparkSpec {
   test("disorderAudit: lateness vs per-user running max in arrival (event_id) order") {
     val s = spark
     import s.implicits._
-    val us = 1000L // ns per us
     val ev = Seq(
-      (1L, 1L, "a", 100 * us), // first arrival: never late
-      (2L, 1L, "a", 50 * us),  // 50us behind the running max (100)
-      (3L, 1L, "a", 200 * us), // ahead: on time
-      (4L, 1L, "a", 180 * us), // 20us behind max (200)
-      (5L, 2L, "b", 10 * us)   // other user, single event
+      (1L, 1L, "a", 100L), // first arrival: never late
+      (2L, 1L, "a", 50L),  // 50us behind the running max (100)
+      (3L, 1L, "a", 200L), // ahead: on time
+      (4L, 1L, "a", 180L), // 20us behind max (200)
+      (5L, 2L, "b", 10L)   // other user, single event
     ).toDF("event_id", "user_id", "event_type", "ts")
     val out = EventStream.disorderAudit(ev).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
@@ -1064,7 +1057,7 @@ class EventStreamSpec extends SparkSpec {
   test("activityHistogram: distinct days per user, then user counts per day-count") {
     val s = spark
     import s.implicits._
-    val day = 86400L * 1000000000L
+    val day = 86400L * 1000000L
     val ev = Seq(
       (1L, 1L, "a", 0L), (2L, 1L, "a", 100L), // same day twice -> 1 day
       (3L, 1L, "a", day), (4L, 2L, "a", 2 * day)
@@ -1077,7 +1070,7 @@ class EventStreamSpec extends SparkSpec {
   test("outageScan: silent-minute gaps become rows; contiguous traffic doesn't") {
     val s = spark
     import s.implicits._
-    val min = 60000000000L // a minute of nanos
+    val min = 60000000L // a minute of micros
     // active minutes 0,1,2, 5, 9 -> gaps [3,4] (2 min) and [6,8] (3 min)
     val ev = Seq(0L, 1L, 1L, 2L, 5L, 9L).map(m => (m, m * min))
       .toDF("user_id", "ts")
@@ -1125,14 +1118,14 @@ class EventStreamSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val hour = 3600L * 1000000000L
+    val hour = 3600L * 1000000L
     // hour 0: users 1,2,1 -> 2 distinct; hour 1: users 1,3,4,4 -> 3
     val data = Seq((1L, 0L), (2L, hour / 4), (1L, hour / 2),
       (1L, hour + 1L), (3L, hour + 2L), (4L, hour + 3L), (4L, hour + 4L))
     val batch = EventStream.distinctWindowed(
         data.toDF("user_id", "ts"), "user_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(batch == Map(0L -> 2L, hour / 1000L -> 3L))
+    assert(batch == Map(0L -> 2L, hour -> 3L))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val mem = MemoryStream[(Long, Long)]
     val q = EventStream.distinctWindowed(
@@ -1147,7 +1140,7 @@ class EventStreamSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     val streamed = s.table("distinct_windowed_spec")
-      .filter($"wstart_us" < 50L * hour / 1000L)
+      .filter($"wstart_us" < 50L * hour)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamed == batch)
   }
@@ -1155,10 +1148,10 @@ class EventStreamSpec extends SparkSpec {
   test("growthAccounting: new/retained/resurrected partition actives; churn reads forward") {
     val s = spark
     import s.implicits._
-    val wkNanos = 7L * 86400L * 1000000000L
+    val wkMicros = 7L * 86400L * 1000000L
     // u1 active wk 0,1,3 ; u2 active wk 1 only ; u3 active wk 0,3
     val ev = Seq((1L, 0L), (1L, 1L), (1L, 3L), (2L, 1L), (3L, 0L), (3L, 3L))
-      .map { case (u, w) => (u, w * wkNanos + 5L) }
+      .map { case (u, w) => (u, w * wkMicros + 5L) }
       .toDF("user_id", "ts")
     val out = EventStream.growthAccounting(ev)
       .collect().map(r => r.getLong(0) ->
@@ -1177,7 +1170,7 @@ class EventStreamSpec extends SparkSpec {
   test("burnRate: trailing RANGE windows span silent hours; page needs both windows hot") {
     val s = spark
     import s.implicits._
-    val hr = 3600L * 1000000000L
+    val hr = 3600L * 1000000L
     // hour 0: 10 ok; hour 1: 10 errors (fast burn); hour 7: 10 ok
     // (hour 7 is > 6h after hour 1, so its long window forgets the burn)
     val ev = ((1 to 10).map(i => (0L, "view")) ++
@@ -1208,7 +1201,7 @@ class EventStreamSpec extends SparkSpec {
         (1 to m).map(i => (u.toLong, 1000L + i.toLong * 10L))
     }
     val ev = rows.toDF("user_id", "ts")
-    val out = EventStream.cuped(ev, splitNanos = 500L)
+    val out = EventStream.cuped(ev, splitMicros = 500L)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(4), r.getLong(7))).toMap
     assert(out.keySet == Set("A", "B"))
@@ -1221,7 +1214,7 @@ class EventStreamSpec extends SparkSpec {
     val flat = (1 to 20).flatMap { u =>
       Seq((u.toLong, 10L)) ++ (1 to u % 5 + 1).map(i => (u.toLong, 1000L + i))
     }.toDF("user_id", "ts")
-    val f = EventStream.cuped(flat, splitNanos = 500L).collect()
+    val f = EventStream.cuped(flat, splitMicros = 500L).collect()
     f.foreach { r =>
       assert(r.getLong(4) == 0L) // theta_ppm
       assert(r.getLong(7) == 0L) // reduction_ppm
@@ -1243,7 +1236,7 @@ class EventStreamSpec extends SparkSpec {
       // user 100: 5 views, second half ONLY -> fb=5 unseen in train
       (1 to 5).map(i => (100L, 1000L + i.toLong, "view")))
       .toDF("user_id", "ts", "event_type")
-    val out = EventStream.calibration(ev, splitNanos = 500L)
+    val out = EventStream.calibration(ev, splitMicros = 500L)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     // fb=1 -> rate 500000 -> bin 5; fb=2 -> 1000000 -> bin 10: both exact
@@ -1258,7 +1251,7 @@ class EventStreamSpec extends SparkSpec {
   test("survivalCurve: censored users stay in the risk set without a churn event") {
     val s = spark
     import s.implicits._
-    val D = 86400000000000L // one day of nanos
+    val D = 86400000000L // one day of micros
     val ev = Seq(
       (1L, 90 * D), (1L, 100 * D), // duration 10, last == edge: censored
       (2L, 0L), (2L, 2 * D), //       duration 2, churned
@@ -1283,7 +1276,7 @@ class EventStreamSpec extends SparkSpec {
     // densifier must re-insert those as zeros), 1 event otherwise
     val rows = (0 until 200).flatMap { h =>
       val n = if (h % 24 == 0) 5 else if (h % 24 == 7) 0 else 1
-      (1 to n).map(i => (h.toLong * 3600000000000L, i.toLong))
+      (1 to n).map(i => (h.toLong * 3600000000L, i.toLong))
     }
     val out = EventStream.autocorrelation(
         rows.toDF("ts", "event_id"), lags = Seq(1, 24))
@@ -1322,7 +1315,7 @@ class EventStreamSpec extends SparkSpec {
     // capacity 3, refill 1 token/s; events at 0, .1s, .2s, .3s, 10s
     val tsUs = Seq(0L, 100000L, 200000L, 300000L, 10000000L)
     val batchDf = tsUs.zipWithIndex
-      .map { case (t, i) => (1L, i.toLong + 1, t * 1000) }
+      .map { case (t, i) => (1L, i.toLong + 1, t) }
       .toDF("user_id", "event_id", "ts")
     val batch = EventStream.rateLimit(batchDf, capacity = 3,
         refillPerSec = 1)
@@ -1339,8 +1332,7 @@ class EventStreamSpec extends SparkSpec {
         capacity = 3, refillPerSec = 1)
       .writeStream.outputMode("append").format("memory")
       .queryName("rl_sink").start()
-    val rows = tsUs.zipWithIndex.map { case (t, i) =>
-      (1L, i.toLong + 1, t * 1000) }
+    val rows = tsUs.zipWithIndex.map { case (t, i) => (1L, i.toLong + 1, t) }
     Seq(rows.slice(0, 2), rows.slice(2, 4), rows.slice(4, 5))
       .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
     q.stop()
