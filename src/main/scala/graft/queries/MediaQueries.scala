@@ -10,7 +10,7 @@ object MediaQueries {
 
   /** Unique memory-sink names across reps (Bench runs each query 3×). */
   private val cdcSinkSeq = new java.util.concurrent.atomic.AtomicInteger
-  import Relational.t
+  import Relational.{hex52, t}
 
   private def hexv(c: Column): Column = instr(lit("0123456789abcdef"), c) - 1
 
@@ -882,12 +882,10 @@ object MediaQueries {
     // The oracle replays the per-window KMV formula — digit-identical
     // because the estimate is a pure function of the k smallest hashes.
     Query("qx05_kmv_windowed", Some(
-      """WITH d AS (SELECT DISTINCT epoch_us(date_trunc('hour', ts)) AS w,
+      s"""WITH d AS (SELECT DISTINCT epoch_us(date_trunc('hour', ts)) AS w,
         |  md5(CAST(user_id AS VARCHAR)) AS h FROM events WHERE user_id < 300),
         |r AS (SELECT w, h, ROW_NUMBER() OVER (PARTITION BY w ORDER BY h) AS rn FROM d),
-        |kk AS (SELECT w, CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |    CAST(instr('0123456789abcdef', substr(h, CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS hi
+        |kk AS (SELECT w, ${hex52("h")} AS hi
         |  FROM r WHERE rn <= 64)
         |SELECT w AS wstart_us, CAST(COUNT(*) AS INT) AS n_hashes,
         | CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
@@ -1521,23 +1519,17 @@ object MediaQueries {
     // per-window bucket counters replayed from raw events, probed by the
     // distinct value set — the qx06 hex-prefix formula per window
     Query("qs09_cms_windowed", Some(
-      """WITH ev AS (SELECT epoch_us(ts) AS us,
+      s"""WITH ev AS (SELECT epoch_us(ts) AS us,
         |    CAST(event_type AS VARCHAR) AS v FROM events),
         |w AS (SELECT us - us % 3600000000 AS wstart_us, v FROM ev),
         |b AS (SELECT wstart_us, v, i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef',
-        |        substr(md5('c' || i || '_' || v), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 64 AS bkt
+        |    ${hex52("md5('c' || i || '_' || v)")} % 64 AS bkt
         |  FROM w CROSS JOIN (SELECT unnest([0, 1]) AS i)),
         |counters AS (SELECT wstart_us, i, bkt, CAST(COUNT(*) AS BIGINT) AS c
         |  FROM b GROUP BY 1, 2, 3),
         |vals AS (SELECT DISTINCT v FROM ev),
         |probe AS (SELECT v, i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef',
-        |        substr(md5('c' || i || '_' || v), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 64 AS bkt
+        |    ${hex52("md5('c' || i || '_' || v)")} % 64 AS bkt
         |  FROM vals CROSS JOIN (SELECT unnest([0, 1]) AS i)),
         |est AS (SELECT c.wstart_us, p.v, MIN(c.c) AS cms_est,
         |    COUNT(*) AS nr

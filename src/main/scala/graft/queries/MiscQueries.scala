@@ -1,13 +1,147 @@
 package graft.queries
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Breadth beyond the core checklist: as-of join (custom operator),
   * exact percentiles, grouping sets. */
 object MiscQueries {
-  import Relational.t
+  import Relational.{hex52, t}
+
+  /** The co-purchase graph's vertices: every order sampled by
+    * `l_orderkey % m = 0` with each of its distinct parts, as (o, p). */
+  private def orderParts(s: SparkSession, d: String, m: Int): DataFrame =
+    t(s, d, "lineitem").filter(col("l_orderkey") % m === 0)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+
+  /** The co-purchase graph: one edge per two parts (a.p < b.p) bought in
+    * the same order of `pp` ([[orderParts]]), as columns `a`, `b`. */
+  private def coPurchaseEdges(pp: DataFrame, a: String = "pa",
+      b: String = "pb"): DataFrame =
+    pp.as("a").join(pp.as("b"),
+        col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+      .select(col("a.p").as(a), col("b.p").as(b))
+
+  /** The oracle twin of [[orderParts]]: the CTE `name` of sampled (o, p).
+    * No trailing comma. */
+  private def orderPartsCte(m: Int, name: String = "pp"): String =
+    s"""$name AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+       |  WHERE l_orderkey % $m = 0)""".stripMargin
+
+  /** pp → edges: the oracle twin of [[orderParts]] and [[coPurchaseEdges]],
+    * each edge once as (u < v) in the CTE named `edges`. No trailing comma. */
+  private def coPurchaseCtes(m: Int, edges: String = "edges"): String =
+    s"""${orderPartsCte(m)},
+       |$edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
+       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p)""".stripMargin
+
+  /** pp → e0 (each edge once, u < v) → edges (both directions): the graph
+    * the qg18/qg09 BFS oracles walk. No trailing comma. */
+  private def coPurchaseBothWaysCtes: String =
+    s"""${orderPartsCte(50)},
+       |e0 AS (SELECT a.p AS u, b.p AS v FROM pp a JOIN pp b
+       |  ON a.o = b.o AND a.p < b.p),
+       |edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0)""".stripMargin
+
+  /** pp → e0 → adj (both directions) → r (each neighbour's rank `rn` and
+    * the degree `deg` of `s`): the walk table of the qg19/qg20 oracles.
+    * No trailing comma. */
+  private def walkStepCtes: String =
+    s"""${orderPartsCte(50)},
+       |e0 AS (SELECT DISTINCT a.p AS u, b.p AS v FROM pp a JOIN pp b
+       |  ON a.o = b.o AND a.p < b.p),
+       |adj AS (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
+       |r AS (SELECT s, t, ROW_NUMBER() OVER (PARTITION BY s ORDER BY t) AS rn,
+       |    COUNT(*) OVER (PARTITION BY s) AS deg FROM adj)""".stripMargin
+
+  /** The qa18 experiment's arm test over `user_id` (true = arm A): the md5
+    * of `ab_exp1_<user_id>` read as a 52-bit integer is even. */
+  private def abArm: Column =
+    conv(substring(md5(concat(lit("ab_exp1_"), col("user_id").cast("string"))), 1, 13),
+      16, 10).cast("long") % 2 === 0
+
+  /** The oracle twin of [[abArm]]. */
+  private def abArmSql: String =
+    s"""${hex52("md5('ab_exp1_' || CAST(user_id AS VARCHAR))")} % 2 = 0"""
+
+  /** The inputs of the as-of joins qa01, qa03 and qa04: purchases
+    * (event_id, user_id, ts, value) and errors (user_id, rts, err_value). */
+  private def asofInputs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = t(s, d, "events")
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+    val errors = ev.filter(col("event_type") === "error")
+      .select(col("user_id"), col("ts").as("rts"), col("value").as("err_value"))
+    (purchases, errors)
+  }
+
+  /** An as-of join of [[asofInputs]] in the oracles' columns and order. */
+  private def asofOutput(joined: DataFrame): DataFrame =
+    joined.select(col("event_id"), col("user_id"),
+        col("ts").as("ts_us"),
+        col("asof_err_value").as("err_value"),
+        col("asof_rts").as("err_ts_us"))
+      .orderBy("event_id")
+
+  /** The closing select of a pairwise correlation oracle: r² in ppm and
+    * the sign of r for each `pairs` row (col_a, col_b, n, cov, vv). */
+  private def corrPairsSelect: String =
+    """SELECT col_a, col_b, n,
+      |  CASE WHEN vv = 0 THEN NULL
+      |    ELSE CAST(FLOOR(cov * cov / vv * 1000000.0) AS BIGINT)
+      |  END AS r2_ppm,
+      |  CAST(SIGN(cov) AS BIGINT) AS sgn
+      |FROM pairs ORDER BY col_a, col_b""".stripMargin
+
+  /** The Spearman tail of qq40 and qq47 over `rows0` (vq, vp, vd): exact
+    * 2x average ranks per column, their moments and the pairwise r². */
+  private def spearmanOracleTail: String = {
+    def rank(c: String) =
+      s"""g$c AS (SELECT v$c, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
+         |r$c AS (SELECT v$c, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY v$c
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+         |    + c + 1 AS r FROM g$c)""".stripMargin
+    s"""${rank("q")},
+       |${rank("p")},
+       |${rank("d")},
+       |jn AS (SELECT rq.r AS xq, rp.r AS xp, rd.r AS xd
+       |  FROM rows0 JOIN rq USING (vq) JOIN rp USING (vp) JOIN rd USING (vd)),
+       |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(COUNT(*) AS BIGINT) AS nb,
+       |    CAST(SUM(xq) AS DOUBLE) AS sq, CAST(SUM(xp) AS DOUBLE) AS sp,
+       |    CAST(SUM(xd) AS DOUBLE) AS sd,
+       |    CAST(SUM(xq*xq) AS DOUBLE) AS sqq, CAST(SUM(xp*xp) AS DOUBLE) AS spp,
+       |    CAST(SUM(xd*xd) AS DOUBLE) AS sdd,
+       |    CAST(SUM(xq*xp) AS DOUBLE) AS sqp, CAST(SUM(xq*xd) AS DOUBLE) AS sqd,
+       |    CAST(SUM(xp*xd) AS DOUBLE) AS spd
+       |  FROM jn),
+       |pairs AS (
+       |  SELECT 'qty' AS col_a, 'price' AS col_b, nb AS n,
+       |    n*sqp - sq*sp AS cov, (n*sqq - sq*sq) * (n*spp - sp*sp) AS vv FROM m
+       |  UNION ALL SELECT 'qty', 'disc', nb,
+       |    n*sqd - sq*sd, (n*sqq - sq*sq) * (n*sdd - sd*sd) FROM m
+       |  UNION ALL SELECT 'price', 'disc', nb,
+       |    n*spd - sp*sd, (n*spp - sp*sp) * (n*sdd - sd*sd) FROM m)
+       |$corrPairsSelect""".stripMargin
+  }
+
+  /** The qq11 audit of one functional dependency `keys -> dep` on
+    * lineitem: per key group its rows and distinct `dep` values (NULL
+    * counted as a value) in `f<i>`, the violation summary in `a<i>`. */
+  private def fdAuditCtes(i: Int, dep: String, keys: String): String =
+    s"""f$i AS (SELECT CAST(COUNT(*) AS BIGINT) AS nrows,
+       |    CAST(COUNT(DISTINCT $dep)
+       |      + MAX(CASE WHEN $dep IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nd
+       |  FROM lineitem GROUP BY $keys),
+       |a$i AS (SELECT '${keys.replace(" ", "")}->$dep' AS fd,
+       |    CAST(COUNT(*) AS BIGINT) AS n_groups,
+       |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN 1 END), 0) AS BIGINT)
+       |      AS violating_groups,
+       |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN nrows END), 0) AS BIGINT)
+       |      AS violating_rows,
+       |    CAST(MAX(nd) AS BIGINT) AS max_distinct_dep
+       |  FROM f$i)""".stripMargin
 
   val queries: Seq[Query] = Seq(
     // Custom operator: backward as-of join (purchases <- latest prior
@@ -19,18 +153,9 @@ object MiscQueries {
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
         |  ON l.user_id = r.user_id AND l.ts >= r.ts
         |ORDER BY l.event_id""".stripMargin)) { (s, d) =>
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts").as("rts"), col("value").as("err_value"))
-      AsOfJoin.asofBackward(purchases, errors, Seq("user_id"), "ts", "rts",
-          Seq("err_value", "rts"))
-        .select(col("event_id"), col("user_id"),
-          col("ts").as("ts_us"),
-          col("asof_err_value").as("err_value"),
-          col("asof_rts").as("err_ts_us"))
-        .orderBy("event_id")
+      val (purchases, errors) = asofInputs(s, d)
+      asofOutput(AsOfJoin.asofBackward(purchases, errors, Seq("user_id"), "ts", "rts",
+        Seq("err_value", "rts")))
     },
     // Salted skew join under the oracle: the salt fan-out/fan-in must be
     // invisible in the result — checked against a plain SQL join/agg.
@@ -150,19 +275,10 @@ object MiscQueries {
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
         |  ON l.user_id = r.user_id AND l.ts >= r.ts
         |ORDER BY l.event_id""".stripMargin)) { (s, d) =>
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts").as("rts"), col("value").as("err_value"))
-      graft.operators.AsOfJoin.asofBackward(purchases, errors, Seq("user_id"),
+      val (purchases, errors) = asofInputs(s, d)
+      asofOutput(AsOfJoin.asofBackward(purchases, errors, Seq("user_id"),
           "ts", "rts", Seq("err_value", "rts"),
-          tolerance = Some(300L * 1000 * 1000)) // 5 min in micros
-        .select(col("event_id"), col("user_id"),
-          col("ts").as("ts_us"),
-          col("asof_err_value").as("err_value"),
-          col("asof_rts").as("err_ts_us"))
-        .orderBy("event_id")
+          tolerance = Some(300L * 1000 * 1000))) // 5 min in micros
     },
     // FORWARD as-of join (pandas merge_asof direction='forward'): the
     // EARLIEST error at-or-after each purchase, vs DuckDB's native
@@ -174,18 +290,9 @@ object MiscQueries {
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') r
         |  ON l.user_id = r.user_id AND l.ts <= r.ts
         |ORDER BY l.event_id""".stripMargin)) { (s, d) =>
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("ts").as("rts"), col("value").as("err_value"))
-      AsOfJoin.asofForward(purchases, errors, Seq("user_id"), "ts", "rts",
-          Seq("err_value", "rts"))
-        .select(col("event_id"), col("user_id"),
-          col("ts").as("ts_us"),
-          col("asof_err_value").as("err_value"),
-          col("asof_rts").as("err_ts_us"))
-        .orderBy("event_id")
+      val (purchases, errors) = asofInputs(s, d)
+      asofOutput(AsOfJoin.asofForward(purchases, errors, Seq("user_id"), "ts", "rts",
+        Seq("err_value", "rts")))
     },
     // Sketch aggregates (approximate - no cross-engine oracle; the driver
     // records a rows-only check for these by design).
@@ -202,12 +309,10 @@ object MiscQueries {
     // hashes, reproduced exactly by DuckDB): per returnflag, the exact
     // distinct part count alongside the k=64 KMV estimate.
     Query("qx02_kmv_distinct", Some(
-      """WITH d AS (SELECT DISTINCT l_returnflag AS grp,
+      s"""WITH d AS (SELECT DISTINCT l_returnflag AS grp,
         |  md5(CAST(l_partkey AS VARCHAR)) AS h FROM lineitem),
         |r AS (SELECT grp, h, ROW_NUMBER() OVER (PARTITION BY grp ORDER BY h) AS rn FROM d),
-        |kk AS (SELECT grp, CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |    CAST(instr('0123456789abcdef', substr(h, CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS hi
+        |kk AS (SELECT grp, ${hex52("h")} AS hi
         |  FROM r WHERE rn <= 64),
         |sk AS (SELECT grp, CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
         |    ELSE CAST(63 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE) / CAST(MAX(hi) AS DOUBLE)
@@ -335,11 +440,7 @@ object MiscQueries {
     // Double-sweep diameter: BFS from the min vertex, re-BFS from the
     // farthest reached — the standard two-sweep lower bound.
     Query("qg18_diameter", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |e0 AS (SELECT a.p AS u, b.p AS v FROM pp a JOIN pp b
-        |  ON a.o = b.o AND a.p < b.p),
-        |edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+      s"""WITH RECURSIVE ${coPurchaseBothWaysCtes},
         |s0 AS (SELECT MIN(u) AS n FROM e0),
         |r1(n, dd) AS (SELECT n, 0 FROM s0
         |  UNION SELECT e.v, r.dd + 1 FROM r1 r JOIN edges e ON e.u = r.n
@@ -357,15 +458,10 @@ object MiscQueries {
         |  CAST((SELECT n FROM far2) AS BIGINT) AS sweep2_far,
         |  CAST((SELECT dist FROM far2) AS BIGINT) AS diameter_lb,
         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM d2) AS n_reached""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
       // materialized once (r11 opt): the seed gather and BOTH BFS sweeps
       // consume this relation — left lazy, the lineitem scan + self-join
       // ran 3x per query (guide §2.4: remove repeated subtree execution)
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
         .localCheckpoint()
       // bounded 1-row gather picks the deterministic start vertex
       val seed = edges.agg(min("pa")).head().getLong(0)
@@ -398,10 +494,7 @@ object MiscQueries {
     // >= 2 triangles with surviving edges); output = survivors with
     // their support in the FINAL graph.
     Query("qg17_ktruss", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 20 = 0),
-        |e0 AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(20, "e0")},
         |a0 AS (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
         |s0 AS (SELECT e.u, e.v, COUNT(*) AS sup
         |  FROM e0 e JOIN a0 x ON x.s = e.u
@@ -422,12 +515,7 @@ object MiscQueries {
         |SELECT e.u, e.v, COALESCE(s.sup, 0) AS support
         |FROM e2 e LEFT JOIN s2 s ON s.u = e.u AND s.v = e.v
         |ORDER BY e.u, e.v""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 20 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 20))
       graft.operators.Graphs.kTruss(edges, "pa", "pb", k = 4, iters = 2)
         .orderBy("u", "v")
     },
@@ -438,14 +526,10 @@ object MiscQueries {
     // priority sampling, md5 coin): 100 documents drawn with selection
     // odds proportional to length — the data-mixing shard draw.
     Query("qx20_priority_sample", Some(
-      """SELECT key, weight, priority FROM (
+      s"""SELECT key, weight, priority FROM (
         |  SELECT CAST(doc_id AS VARCHAR) AS key,
         |    CAST(n_chars AS BIGINT) AS weight,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ps:'
-        |          || CAST(doc_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT)
+        |    ${hex52("md5('ps:' || CAST(doc_id AS VARCHAR))")}
         |      // CAST(n_chars AS BIGINT) AS priority
         |  FROM documents
         |  WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0)
@@ -512,34 +596,19 @@ object MiscQueries {
     // DeepWalk training corpus: 2 deterministic 3-step random walks from
     // every vertex of the co-purchase graph.
     Query("qg19_random_walks", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |e0 AS (SELECT DISTINCT a.p AS u, b.p AS v FROM pp a JOIN pp b
-        |  ON a.o = b.o AND a.p < b.p),
-        |adj AS (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
-        |r AS (SELECT s, t, ROW_NUMBER() OVER (PARTITION BY s ORDER BY t) AS rn,
-        |    COUNT(*) OVER (PARTITION BY s) AS deg FROM adj),
+      s"""WITH RECURSIVE ${walkStepCtes},
         |seeds AS (SELECT DISTINCT s FROM r),
         |wk(walk_id, seed, step, node) AS (
         |  SELECT s * 2 + w, s, 0, s FROM seeds, unnest([0, 1]) tt(w)
         |  UNION ALL
         |  SELECT wk.walk_id, wk.seed, wk.step + 1, r.t
         |  FROM wk JOIN r ON r.s = wk.node
-        |    AND r.rn = 1 + (CAST(list_sum(list_transform(generate_series(1, 13),
-        |      j -> CAST(instr('0123456789abcdef', substr(md5('rw:'
-        |          || CAST(wk.walk_id AS VARCHAR) || ':'
-        |          || CAST(wk.step + 1 AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT)
+        |    AND r.rn = 1 + (${hex52("md5('rw:' || CAST(wk.walk_id AS VARCHAR) || ':' || CAST(wk.step + 1 AS VARCHAR))")}
         |      % r.deg)
         |  WHERE wk.step < 3)
         |SELECT walk_id, seed, CAST(step AS BIGINT) AS step, node
         |FROM wk ORDER BY walk_id, step""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.randomWalks(edges, "pa", "pb",
           len = 3, walksPerNode = 2)
         .orderBy("walk_id", "step")
@@ -547,13 +616,7 @@ object MiscQueries {
     // node2vec corpus: deterministic second-order biased walks (return 1,
     // triangle 4, outward 2) over the co-purchase graph.
     Query("qg20_node2vec", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |e0 AS (SELECT DISTINCT a.p AS u, b.p AS v FROM pp a JOIN pp b
-        |  ON a.o = b.o AND a.p < b.p),
-        |adj AS (SELECT u AS s, v AS t FROM e0 UNION ALL SELECT v, u FROM e0),
-        |r AS (SELECT s, t, ROW_NUMBER() OVER (PARTITION BY s ORDER BY t) AS rn,
-        |    COUNT(*) OVER (PARTITION BY s) AS deg FROM adj),
+      s"""WITH RECURSIVE ${walkStepCtes},
         |cu AS (SELECT CAST(-1 AS BIGINT) AS prev, s AS cur, t,
         |    CAST(1 AS BIGINT) AS w, CAST(rn AS BIGINT) AS cum,
         |    CAST(deg AS BIGINT) AS tot FROM r),
@@ -574,27 +637,14 @@ object MiscQueries {
         |  UNION ALL
         |  SELECT wk.walk_id, wk.seed, wk.step + 1, wk.node, c.t
         |  FROM wk JOIN cand c ON c.cur = wk.node AND c.prev = wk.prev
-        |    AND (CAST(list_sum(list_transform(generate_series(1, 13),
-        |        j -> CAST(instr('0123456789abcdef', substr(md5('n2v:'
-        |            || CAST(wk.walk_id AS VARCHAR) || ':'
-        |            || CAST(wk.step + 1 AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |          AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT)
+        |    AND (${hex52("md5('n2v:' || CAST(wk.walk_id AS VARCHAR) || ':' || CAST(wk.step + 1 AS VARCHAR))")}
         |      % c.tot) >= c.cum - c.w
-        |    AND (CAST(list_sum(list_transform(generate_series(1, 13),
-        |        j -> CAST(instr('0123456789abcdef', substr(md5('n2v:'
-        |            || CAST(wk.walk_id AS VARCHAR) || ':'
-        |            || CAST(wk.step + 1 AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |          AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT)
+        |    AND (${hex52("md5('n2v:' || CAST(wk.walk_id AS VARCHAR) || ':' || CAST(wk.step + 1 AS VARCHAR))")}
         |      % c.tot) < c.cum
         |  WHERE wk.step < 3)
         |SELECT walk_id, seed, CAST(step AS BIGINT) AS step, node
         |FROM wk ORDER BY walk_id, step""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.node2vecWalks(edges, "pa", "pb",
           len = 3, walksPerNode = 1, wReturn = 1, wCommon = 4, wOut = 2)
         .orderBy("walk_id", "step")
@@ -704,12 +754,8 @@ object MiscQueries {
     },
     // Hash-block jackknife CI for the mean extended price, micro-units.
     Query("qq34_jackknife", Some(
-      """WITH rows0 AS (SELECT
-        |    CAST(list_sum(list_transform(generate_series(1, 13),
-        |      j -> CAST(instr('0123456789abcdef', substr(md5('jk:'
-        |          || CAST(l_orderkey AS VARCHAR) || ':'
-        |          || CAST(l_linenumber AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 32 AS blk,
+      s"""WITH rows0 AS (SELECT
+        |    ${hex52("md5('jk:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR))")} % 32 AS blk,
         |    CAST(l_extendedprice * 1000000 AS BIGINT) AS v
         |  FROM lineitem),
         |b AS (SELECT blk, CAST(COUNT(*) AS BIGINT) AS nb,
@@ -751,12 +797,8 @@ object MiscQueries {
     // Deterministic block-bootstrap percentile CI for the mean extended
     // price — the skew-seeing complement to qq34's jackknife.
     Query("qq39_bootstrap_ci", Some(
-      """WITH rows0 AS (SELECT
-        |    CAST(list_sum(list_transform(generate_series(1, 13),
-        |      j -> CAST(instr('0123456789abcdef', substr(md5('jk:'
-        |          || CAST(l_orderkey AS VARCHAR) || ':'
-        |          || CAST(l_linenumber AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 32 AS blk,
+      s"""WITH rows0 AS (SELECT
+        |    ${hex52("md5('jk:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR))")} % 32 AS blk,
         |    CAST(ROUND(l_extendedprice * 1000000) AS BIGINT) AS v
         |  FROM lineitem),
         |b AS (SELECT blk, CAST(COUNT(*) AS BIGINT) AS nb,
@@ -795,48 +837,14 @@ object MiscQueries {
     // Spearman rank correlation over the qq20 feature set: monotone
     // association, outlier-immune, exact 2x-rank integers.
     Query("qq40_spearman", Some(
-      """WITH rows0 AS (SELECT
+      s"""WITH rows0 AS (SELECT
         |    CAST(ROUND(l_quantity * 1000000) AS BIGINT) AS vq,
         |    CAST(ROUND(l_extendedprice * 1000000) AS BIGINT) AS vp,
         |    CAST(ROUND(l_discount * 1000000) AS BIGINT) AS vd
         |  FROM lineitem
         |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
         |    AND l_discount IS NOT NULL),
-        |gq AS (SELECT vq, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rq AS (SELECT vq, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vq
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gq),
-        |gp AS (SELECT vp, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rp AS (SELECT vp, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vp
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gp),
-        |gd AS (SELECT vd, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rd AS (SELECT vd, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vd
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gd),
-        |jn AS (SELECT rq.r AS xq, rp.r AS xp, rd.r AS xd
-        |  FROM rows0 JOIN rq USING (vq) JOIN rp USING (vp) JOIN rd USING (vd)),
-        |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(COUNT(*) AS BIGINT) AS nb,
-        |    CAST(SUM(xq) AS DOUBLE) AS sq, CAST(SUM(xp) AS DOUBLE) AS sp,
-        |    CAST(SUM(xd) AS DOUBLE) AS sd,
-        |    CAST(SUM(xq*xq) AS DOUBLE) AS sqq, CAST(SUM(xp*xp) AS DOUBLE) AS spp,
-        |    CAST(SUM(xd*xd) AS DOUBLE) AS sdd,
-        |    CAST(SUM(xq*xp) AS DOUBLE) AS sqp, CAST(SUM(xq*xd) AS DOUBLE) AS sqd,
-        |    CAST(SUM(xp*xd) AS DOUBLE) AS spd
-        |  FROM jn),
-        |pairs AS (
-        |  SELECT 'qty' AS col_a, 'price' AS col_b, nb AS n,
-        |    n*sqp - sq*sp AS cov, (n*sqq - sq*sq) * (n*spp - sp*sp) AS vv FROM m
-        |  UNION ALL SELECT 'qty', 'disc', nb,
-        |    n*sqd - sq*sd, (n*sqq - sq*sq) * (n*sdd - sd*sd) FROM m
-        |  UNION ALL SELECT 'price', 'disc', nb,
-        |    n*spd - sp*sd, (n*spp - sp*sp) * (n*sdd - sd*sd) FROM m)
-        |SELECT col_a, col_b, n,
-        |  CASE WHEN vv = 0 THEN NULL
-        |    ELSE CAST(FLOOR(cov * cov / vv * 1000000.0) AS BIGINT)
-        |  END AS r2_ppm,
-        |  CAST(SIGN(cov) AS BIGINT) AS sgn
-        |FROM pairs ORDER BY col_a, col_b""".stripMargin)) { (s, d) =>
+        |$spearmanOracleTail""".stripMargin)) { (s, d) =>
       graft.operators.Quality.spearmanMatrix(t(s, d, "lineitem"), Seq(
           "qty" -> expr("cast(round(l_quantity * 1000000) as bigint)"),
           "price" -> expr("cast(round(l_extendedprice * 1000000) as bigint)"),
@@ -849,7 +857,7 @@ object MiscQueries {
     // fails its loud ANSI overflow (ROUND11 §5). Monotone statistics
     // are bucket-stable.
     Query("qq47_spearman_bucketed", Some(
-      """WITH raw0 AS (SELECT
+      s"""WITH raw0 AS (SELECT
         |    CAST(ROUND(l_quantity * 1000000) AS BIGINT) AS wq,
         |    CAST(ROUND(l_extendedprice * 1000000) AS BIGINT) AS wp,
         |    CAST(ROUND(l_discount * 1000000) AS BIGINT) AS wd
@@ -866,41 +874,7 @@ object MiscQueries {
         |    LEAST(1023, ((wd - lod) * 1024) // GREATEST(hid - lod + 1, 1))
         |      AS vd
         |  FROM raw0, mm),
-        |gq AS (SELECT vq, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rq AS (SELECT vq, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vq
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gq),
-        |gp AS (SELECT vp, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rp AS (SELECT vp, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vp
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gp),
-        |gd AS (SELECT vd, CAST(COUNT(*) AS BIGINT) AS c FROM rows0 GROUP BY 1),
-        |rd AS (SELECT vd, 2 * COALESCE(CAST(SUM(c) OVER (ORDER BY vd
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-        |    + c + 1 AS r FROM gd),
-        |jn AS (SELECT rq.r AS xq, rp.r AS xp, rd.r AS xd
-        |  FROM rows0 JOIN rq USING (vq) JOIN rp USING (vp) JOIN rd USING (vd)),
-        |m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(COUNT(*) AS BIGINT) AS nb,
-        |    CAST(SUM(xq) AS DOUBLE) AS sq, CAST(SUM(xp) AS DOUBLE) AS sp,
-        |    CAST(SUM(xd) AS DOUBLE) AS sd,
-        |    CAST(SUM(xq*xq) AS DOUBLE) AS sqq, CAST(SUM(xp*xp) AS DOUBLE) AS spp,
-        |    CAST(SUM(xd*xd) AS DOUBLE) AS sdd,
-        |    CAST(SUM(xq*xp) AS DOUBLE) AS sqp, CAST(SUM(xq*xd) AS DOUBLE) AS sqd,
-        |    CAST(SUM(xp*xd) AS DOUBLE) AS spd
-        |  FROM jn),
-        |pairs AS (
-        |  SELECT 'qty' AS col_a, 'price' AS col_b, nb AS n,
-        |    n*sqp - sq*sp AS cov, (n*sqq - sq*sq) * (n*spp - sp*sp) AS vv FROM m
-        |  UNION ALL SELECT 'qty', 'disc', nb,
-        |    n*sqd - sq*sd, (n*sqq - sq*sq) * (n*sdd - sd*sd) FROM m
-        |  UNION ALL SELECT 'price', 'disc', nb,
-        |    n*spd - sp*sd, (n*spp - sp*sp) * (n*sdd - sd*sd) FROM m)
-        |SELECT col_a, col_b, n,
-        |  CASE WHEN vv = 0 THEN NULL
-        |    ELSE CAST(FLOOR(cov * cov / vv * 1000000.0) AS BIGINT)
-        |  END AS r2_ppm,
-        |  CAST(SIGN(cov) AS BIGINT) AS sgn
-        |FROM pairs ORDER BY col_a, col_b""".stripMargin)) { (s, d) =>
+        |$spearmanOracleTail""".stripMargin)) { (s, d) =>
       graft.operators.Quality.spearmanBucketed(t(s, d, "lineitem"), Seq(
           "qty" -> expr("cast(round(l_quantity * 1000000) as bigint)"),
           "price" -> expr("cast(round(l_extendedprice * 1000000) as bigint)"),
@@ -1205,10 +1179,7 @@ object MiscQueries {
         .orderBy("slice")
     },
     Query("qg01_triangles", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 20 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(20)},
         |deg AS (SELECT x AS n, COUNT(*) AS d FROM (
         |  SELECT u AS x FROM edges UNION ALL SELECT v FROM edges) GROUP BY x),
         |ori AS (SELECT CASE WHEN (da.d, e.u) < (db.d, e.v) THEN e.u ELSE e.v END AS s,
@@ -1220,36 +1191,21 @@ object MiscQueries {
         |SELECT (SELECT COUNT(*) FROM edges) AS n_edges,
         |       (SELECT COUNT(*) FROM wedge) AS n_wedges,
         |       (SELECT nt FROM tri) AS n_triangles""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 20 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 20))
       graft.operators.Graphs.triangleStats(edges, "pa", "pb")
     },
     // The connected-components operator REUSED beyond dedup: components
     // of a (sparser) co-purchase graph via the same Boruvka contraction
     // that resolves duplicate clusters; oracle = recursive closure.
     Query("qg03_graph_components", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 50 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH RECURSIVE ${coPurchaseCtes(50)},
         |und AS (SELECT u AS a, v AS b FROM edges UNION SELECT v, u FROM edges),
         |reach AS (
         |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
         |  UNION
         |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
         |SELECT a AS n, MIN(b) AS component FROM reach GROUP BY a ORDER BY n""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("id_a"), col("b.p").as("id_b")).distinct()
+      val edges = coPurchaseEdges(orderParts(s, d, 50), "id_a", "id_b").distinct()
       graft.operators.Dedup.duplicateClusters(edges)
         .select(col("id").as("n"), col("comp").as("component"))
         .orderBy("n")
@@ -1258,10 +1214,7 @@ object MiscQueries {
     // triangle attribution via a 3-way explode of the closed wedges
     // (cost ∝ triangles, not wedges).
     Query("qg02_clustering_coeff", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 20 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(20)},
         |deg AS (SELECT x AS n, COUNT(*) AS d FROM (
         |  SELECT u AS x FROM edges UNION ALL SELECT v FROM edges) GROUP BY x),
         |ori AS (SELECT CASE WHEN (da.d, e.u) < (db.d, e.v) THEN e.u ELSE e.v END AS s,
@@ -1276,13 +1229,7 @@ object MiscQueries {
         |  CASE WHEN deg.d < 2 THEN 0.0
         |       ELSE 2.0 * COALESCE(perv.triangles, 0) / (deg.d * (deg.d - 1)) END AS coeff
         |FROM deg LEFT JOIN perv ON perv.z = deg.n ORDER BY deg.n""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 20 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 20))
       graft.operators.Graphs.clusteringCoefficients(edges, "pa", "pb")
         .orderBy("n")
     },
@@ -1312,13 +1259,7 @@ object MiscQueries {
     // scaled integer arithmetic — bit-exact under an oracle that
     // unrolls the same five power-iteration rounds.
     Query("qg04_pagerank", Some(pageRankOracle(iters = 5, scale = 1000000000000L))) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.pageRank(edges, "pa", "pb", iters = 5)
         .withColumnRenamed("rank", "pagerank")
         .orderBy("n")
@@ -1327,13 +1268,7 @@ object MiscQueries {
     // neighbour label, ties to the smallest), 4 rounds, checked against
     // an unrolled ROW_NUMBER oracle.
     Query("qg05_label_prop", Some(labelPropOracle(iters = 4))) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.labelPropagation(edges, "pa", "pb", iters = 4)
         .orderBy("n")
     },
@@ -1341,8 +1276,7 @@ object MiscQueries {
     // graph: exact-integer merge gains (min-degree target, least-label
     // coalescing), modularity of the resulting partition.
     Query("qg21_louvain", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
+      s"""WITH ${orderPartsCte(50)},
         |e0 AS (SELECT a.p AS pa, b.p AS pb FROM pp a
         |  JOIN pp b ON a.o = b.o AND a.p < b.p),
         |edges AS (SELECT DISTINCT LEAST(pa, pb) AS u, GREATEST(pa, pb) AS v
@@ -1384,25 +1318,13 @@ object MiscQueries {
         |SELECT mv.n_vertices, m.m AS n_edges, mv.n_merged,
         |  mv.n_communities, qq.modularity_ppm
         |FROM mv, m, qq""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.louvainSweep(edges, "pa", "pb")
     },
     // Fixed-round 3-core peeling on the same co-purchase graph; the
     // oracle unrolls the identical peel rounds.
     Query("qg06_kcore", Some(kCoreOracle(k = 3, rounds = 3))) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.kCore(edges, "pa", "pb", k = 3, rounds = 3)
         .orderBy("n")
     },
@@ -1410,10 +1332,7 @@ object MiscQueries {
     // non-adjacent pairs scored by common neighbours + Σ scale/deg(z),
     // hubs above maxDeg excluded as intermediates (the scale bound).
     Query("qg07_link_pred", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 50 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(50)},
         |dir AS (SELECT u AS z, v AS n FROM edges UNION ALL SELECT v, u FROM edges),
         |deg AS (SELECT z, COUNT(*) AS deg FROM dir GROUP BY z),
         |nb AS (SELECT d.z, d.n, g.deg FROM dir d JOIN deg g USING (z)
@@ -1424,13 +1343,7 @@ object MiscQueries {
         |SELECT u, v, common, ra_score FROM pr
         |WHERE NOT EXISTS (SELECT 1 FROM edges e WHERE e.u = pr.u AND e.v = pr.v)
         |ORDER BY u, v""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.linkPrediction(edges, "pa", "pb",
           scale = 1000000L, maxDeg = 64)
         .orderBy("u", "v")
@@ -1439,23 +1352,13 @@ object MiscQueries {
     // %97 seed parts, 4 hops max — frontier expansion with per-round
     // checkpoints, vs a recursive-CTE min-distance oracle.
     Query("qg09_bfs_hops", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
-        |e0 AS (SELECT a.p AS u, b.p AS v FROM pp a JOIN pp b
-        |  ON a.o = b.o AND a.p < b.p),
-        |edges AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+      s"""WITH RECURSIVE ${coPurchaseBothWaysCtes},
         |seeds AS (SELECT DISTINCT u AS n FROM edges WHERE u % 97 = 0),
         |reach(n, dd) AS (SELECT n, 0 FROM seeds
         |  UNION SELECT e.v, r.dd + 1 FROM reach r JOIN edges e ON e.u = r.n
         |  WHERE r.dd < 4)
         |SELECT n, MIN(dd) AS dist FROM reach GROUP BY n ORDER BY n""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       val seeds = edges.select(col("pa").as("n"))
         .unionAll(edges.select(col("pb").as("n")))
         .filter(col("n") % 97 === 0).distinct()
@@ -1512,13 +1415,7 @@ object MiscQueries {
     // Personalized PageRank from the %97 seed parts: random walk with
     // restart, scaled-integer power iteration, unrolled-SQL oracle.
     Query("qg10_ppr", Some(pprOracle(iters = 4, scale = 1000000000000L))) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       val seeds = edges.select(col("pa").as("n"))
         .unionAll(edges.select(col("pb").as("n")))
         .filter(col("n") % 97 === 0).distinct()
@@ -1587,12 +1484,9 @@ object MiscQueries {
     // cardinality); estimates are md5-deterministic, so the oracle
     // replays every digit. est >= exact always (no false negatives).
     Query("qx06_cms_heavy", Some(
-      """WITH vals AS (SELECT CAST(l_partkey AS VARCHAR) AS v FROM lineitem),
+      s"""WITH vals AS (SELECT CAST(l_partkey AS VARCHAR) AS v FROM lineitem),
         |b AS (SELECT v, i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef',
-        |        substr(md5('c' || i || '_' || v), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 256 AS bkt
+        |    ${hex52("md5('c' || i || '_' || v)")} % 256 AS bkt
         |  FROM vals CROSS JOIN (SELECT unnest([0, 1, 2]) AS i)),
         |counters AS (SELECT i, bkt, CAST(COUNT(*) AS BIGINT) AS c
         |  FROM b GROUP BY 1, 2),
@@ -1636,13 +1530,10 @@ object MiscQueries {
     // probability ∝ n_chars via the md5-priority trick — a pure function
     // of the (id, weight) set, so the oracle draws the identical rows.
     Query("qx08_priority_sample", Some(
-      """WITH w AS (SELECT CAST(doc_id AS VARCHAR) AS id,
+      s"""WITH w AS (SELECT CAST(doc_id AS VARCHAR) AS id,
         |    CAST(n_chars AS BIGINT) AS weight FROM documents),
         |u AS (SELECT id, weight,
-        |  CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |    CAST(instr('0123456789abcdef',
-        |      substr(md5('ps_' || id), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |    * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS uv FROM w)
+        |  ${hex52("md5('ps_' || id)")} AS uv FROM w)
         |SELECT id, weight, uv // greatest(weight, 1) AS priority FROM u
         |ORDER BY priority, id LIMIT 100""".stripMargin)) { (s, d) =>
       graft.operators.Sketches.prioritySample(
@@ -1847,10 +1738,7 @@ object MiscQueries {
     // co-purchase graph — the community-quality score (a hash null
     // model scores near zero; real communities score positive).
     Query("qg11_modularity", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 50 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(50)},
         |asg AS (SELECT DISTINCT p AS n, p % 16 AS c FROM pp),
         |m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
         |ein AS (SELECT au.c AS community, CAST(COUNT(*) AS BIGINT) AS e_in
@@ -1869,11 +1757,8 @@ object MiscQueries {
         |SELECT community, n_nodes, e_in, d_sum, intra_ppm, exp_ppm, contrib_ppm,
         |  (SELECT CAST(SUM(contrib_ppm) AS BIGINT) FROM g) AS modularity_ppm
         |FROM g ORDER BY community""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val pp = orderParts(s, d, 50)
+      val edges = coPurchaseEdges(pp)
       val assign = pp.select(col("p").as("n")).distinct()
         .withColumn("c", col("n") % 16)
       graft.operators.Graphs.modularity(edges, "pa", "pb", assign, "n", "c")
@@ -2002,42 +1887,9 @@ object MiscQueries {
     // (orderkey, linenumber) really a key for partkey, does the order
     // pin its line status — violation accounting per declared FD.
     Query("qq11_fd_audit", Some(
-      """WITH f1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS nrows,
-        |    CAST(COUNT(DISTINCT l_suppkey)
-        |      + MAX(CASE WHEN l_suppkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nd
-        |  FROM lineitem GROUP BY l_partkey),
-        |a1 AS (SELECT 'l_partkey->l_suppkey' AS fd,
-        |    CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN 1 END), 0) AS BIGINT)
-        |      AS violating_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN nrows END), 0) AS BIGINT)
-        |      AS violating_rows,
-        |    CAST(MAX(nd) AS BIGINT) AS max_distinct_dep
-        |  FROM f1),
-        |f2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS nrows,
-        |    CAST(COUNT(DISTINCT l_partkey)
-        |      + MAX(CASE WHEN l_partkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nd
-        |  FROM lineitem GROUP BY l_orderkey, l_linenumber),
-        |a2 AS (SELECT 'l_orderkey,l_linenumber->l_partkey' AS fd,
-        |    CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN 1 END), 0) AS BIGINT)
-        |      AS violating_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN nrows END), 0) AS BIGINT)
-        |      AS violating_rows,
-        |    CAST(MAX(nd) AS BIGINT) AS max_distinct_dep
-        |  FROM f2),
-        |f3 AS (SELECT CAST(COUNT(*) AS BIGINT) AS nrows,
-        |    CAST(COUNT(DISTINCT l_linestatus)
-        |      + MAX(CASE WHEN l_linestatus IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nd
-        |  FROM lineitem GROUP BY l_orderkey),
-        |a3 AS (SELECT 'l_orderkey->l_linestatus' AS fd,
-        |    CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN 1 END), 0) AS BIGINT)
-        |      AS violating_groups,
-        |    CAST(COALESCE(SUM(CASE WHEN nd > 1 THEN nrows END), 0) AS BIGINT)
-        |      AS violating_rows,
-        |    CAST(MAX(nd) AS BIGINT) AS max_distinct_dep
-        |  FROM f3)
+      s"""WITH ${fdAuditCtes(1, "l_suppkey", "l_partkey")},
+        |${fdAuditCtes(2, "l_partkey", "l_orderkey, l_linenumber")},
+        |${fdAuditCtes(3, "l_linestatus", "l_orderkey")}
         |SELECT * FROM a1 UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3
         |ORDER BY fd""".stripMargin)) { (s, d) =>
       graft.operators.Quality.fdViolations(t(s, d, "lineitem"), Seq(
@@ -2083,10 +1935,7 @@ object MiscQueries {
     // co-purchase with other popular parts (r > 0) or with long-tail
     // ones (r < 0)? All-integer Pearson over the orientation list.
     Query("qg12_assortativity", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |  WHERE l_orderkey % 50 = 0),
-        |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-        |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes(50)},
         |ori AS (SELECT u AS s, v AS t FROM edges
         |  UNION ALL SELECT v AS s, u AS t FROM edges),
         |deg AS (SELECT s AS n, CAST(COUNT(*) AS BIGINT) AS d FROM ori GROUP BY s),
@@ -2103,11 +1952,7 @@ object MiscQueries {
         |  (num * 1000 - ((num * 1000 % GREATEST(1, den)) + GREATEST(1, den))
         |    % GREATEST(1, den)) // GREATEST(1, den) AS r_milli
         |FROM nd""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.degreeAssortativity(edges, "pa", "pb")
     },
     // Time-in-state: how long users dwell in each event type before
@@ -2517,13 +2362,11 @@ object MiscQueries {
     // merged up to per-type estimates — digit-identical to the
     // single-pass sketch, which IS the oracle (mergeability invariant).
     Query("qx11_kmv_rollup", Some(
-      """WITH d AS (SELECT DISTINCT event_type AS grp,
+      s"""WITH d AS (SELECT DISTINCT event_type AS grp,
         |    md5(CAST(user_id AS VARCHAR)) AS h FROM events),
         |r AS (SELECT grp, h,
         |    ROW_NUMBER() OVER (PARTITION BY grp ORDER BY h) AS rn FROM d),
-        |kk AS (SELECT grp, CAST(list_sum(list_transform(generate_series(1, 13),
-        |    j -> CAST(instr('0123456789abcdef', substr(h, CAST(j AS INT), 1))
-        |      - 1 AS BIGINT) * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS hi
+        |kk AS (SELECT grp, ${hex52("h")} AS hi
         |  FROM r WHERE rn <= 64),
         |sk AS (SELECT grp, CASE WHEN COUNT(*) < 64 THEN CAST(COUNT(*) AS DOUBLE)
         |    ELSE CAST(63 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE)
@@ -2599,8 +2442,7 @@ object MiscQueries {
     // Closeness/harmonic centrality of the 3 lowest-id co-purchase
     // parts: per-seed BFS, reached/sum-hops/integer harmonic.
     Query("qg13_closeness", Some(
-      """WITH RECURSIVE pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
+      s"""WITH RECURSIVE ${orderPartsCte(50)},
         |edges AS (SELECT DISTINCT a.p AS pa, b.p AS pb
         |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
         |und AS (SELECT pa AS a, pb AS b FROM edges
@@ -2617,13 +2459,9 @@ object MiscQueries {
         |  CAST(SUM(dist) AS BIGINT) AS sum_hops,
         |  CAST(SUM(1000000 // dist) AS BIGINT) AS harmonic_scaled
         |FROM md WHERE dist > 0 GROUP BY seed ORDER BY seed""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       // materialized once (r11 opt): the seed gather + 3 per-seed BFS
       // runs each re-executed the lineitem scan + self-join (4x total)
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
         .localCheckpoint()
       val seeds = graft.streaming.Replay.bounded(
           edges.select(col("pa").as("n"))
@@ -2690,7 +2528,7 @@ object MiscQueries {
     // Pairwise Pearson r² (ppm) over integer-scaled lineitem features:
     // one moment pass, pairs unrolled via inline.
     Query("qq20_corr_matrix", Some(
-      """WITH f AS (SELECT CAST(FLOOR(l_quantity) AS BIGINT) AS q,
+      s"""WITH f AS (SELECT CAST(FLOOR(l_quantity) AS BIGINT) AS q,
         |    CAST(FLOOR(l_extendedprice / 10) AS BIGINT) AS p,
         |    CAST(ROUND(l_discount * 100) AS BIGINT) AS d,
         |    CAST(ROUND(l_tax * 100) AS BIGINT) AS t
@@ -2717,12 +2555,7 @@ object MiscQueries {
         |    n*spt - sp*st, (n*spp - sp*sp) * (n*stt - st*st) FROM m
         |  UNION ALL SELECT 'disc100', 'tax100', nb,
         |    n*sdt - sd*st, (n*sdd - sd*sd) * (n*stt - st*st) FROM m)
-        |SELECT col_a, col_b, n,
-        |  CASE WHEN vv = 0 THEN NULL
-        |    ELSE CAST(FLOOR(cov * cov / vv * 1000000.0) AS BIGINT)
-        |  END AS r2_ppm,
-        |  CAST(SIGN(cov) AS BIGINT) AS sgn
-        |FROM pairs ORDER BY col_a, col_b""".stripMargin)) { (s, d) =>
+        |$corrPairsSelect""".stripMargin)) { (s, d) =>
       graft.operators.Quality.corrMatrix(t(s, d, "lineitem"), Seq(
           "qty" -> col("l_quantity"),
           "price10" -> floor(col("l_extendedprice") / 10),
@@ -2788,8 +2621,7 @@ object MiscQueries {
     // Item-item CF "also bought" table: basket-capped co-occurrence,
     // cosine^2-ppm on counts, top-3 per item.
     Query("qg14_item_cf", Some(
-      """WITH bi AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 20 = 0),
+      s"""WITH ${orderPartsCte(20, "bi")},
         |sz AS (SELECT o, COUNT(*) AS bs FROM bi GROUP BY o),
         |bd AS (SELECT bi.o, bi.p FROM bi JOIN sz ON sz.o = bi.o AND sz.bs <= 16),
         |fr AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS c FROM bd GROUP BY p),
@@ -2812,22 +2644,16 @@ object MiscQueries {
     // Bloom filter FPR calibration: members = parts seen on F-status
     // orders; probes = the complement of the part id space.
     Query("qx12_bloom_fpr", Some(
-      """WITH seen AS (SELECT DISTINCT l.l_partkey AS pk FROM lineitem l
+      s"""WITH seen AS (SELECT DISTINCT l.l_partkey AS pk FROM lineitem l
         |  JOIN orders o ON o.o_orderkey = l.l_orderkey
         |    AND o.o_orderstatus = 'F'),
         |probes AS (SELECT p_partkey AS pk FROM part
         |  WHERE p_partkey NOT IN (SELECT pk FROM seen)),
         |mb AS (SELECT DISTINCT i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('bf' || i || '_'
-        |        || CAST(pk AS VARCHAR)), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1024 AS b
+        |    ${hex52("md5('bf' || i || '_' || CAST(pk AS VARCHAR))")} % 1024 AS b
         |  FROM seen CROSS JOIN (SELECT unnest([0, 1, 2]) AS i)),
         |pb AS (SELECT pk, i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('bf' || i || '_'
-        |        || CAST(pk AS VARCHAR)), CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1024 AS b
+        |    ${hex52("md5('bf' || i || '_' || CAST(pk AS VARCHAR))")} % 1024 AS b
         |  FROM probes CROSS JOIN (SELECT unnest([0, 1, 2]) AS i)),
         |fp AS (SELECT pb.pk FROM pb JOIN mb ON mb.i = pb.i AND mb.b = pb.b
         |  GROUP BY pb.pk HAVING COUNT(*) = 3)
@@ -2936,17 +2762,14 @@ object MiscQueries {
     // 52-bit row hashes over integer-stable renderings — the two-sided
     // migration fingerprint.
     Query("qq28_content_checksum", Some(
-      """WITH r AS (SELECT o_orderstatus AS grp,
+      s"""WITH r AS (SELECT o_orderstatus AS grp,
         |    md5(CAST(o_orderkey AS VARCHAR) || '|'
         |      || CAST(o_custkey AS VARCHAR) || '|'
         |      || CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
         |           AS VARCHAR)) AS h
         |  FROM orders),
         |hi AS (SELECT grp,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(h, CAST(j AS INT), 1))
-        |        - 1 AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS hv
+        |    ${hex52("h")} AS hv
         |  FROM r)
         |SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(bit_xor(hv) AS BIGINT) AS xor_hash,
@@ -3112,18 +2935,13 @@ object MiscQueries {
     // Deterministic edge-sample fidelity: degree-octave histogram of the
     // co-purchase graph, full vs md5-kept half.
     Query("qg15_edge_sample_audit", Some(
-      """WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem WHERE l_orderkey % 50 = 0),
+      s"""WITH ${orderPartsCte(50)},
         |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u,
         |    GREATEST(a.p, b.p) AS v
         |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p
         |  WHERE a.p <> b.p),
         |samp AS (SELECT u, v FROM edges
-        |  WHERE CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |    CAST(instr('0123456789abcdef', substr(md5('es_'
-        |      || CAST(u AS VARCHAR) || '_' || CAST(v AS VARCHAR)),
-        |      CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |    * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1000000
+        |  WHERE ${hex52("md5('es_' || CAST(u AS VARCHAR) || '_' || CAST(v AS VARCHAR))")} % 1000000
         |    < 500000),
         |df AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM
         |  (SELECT u AS n FROM edges UNION ALL SELECT v FROM edges)
@@ -3140,11 +2958,7 @@ object MiscQueries {
         |  COALESCE(nodes_sample, 0) AS nodes_sample
         |FROM hf FULL OUTER JOIN hs ON hs.bucket = hf.bucket
         |ORDER BY bucket""".stripMargin)) { (s, d) =>
-      val pp = t(s, d, "lineitem").filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.edgeSampleAudit(edges, "pa", "pb",
           keepPpm = 500000L)
         .orderBy("bucket")
@@ -3153,12 +2967,8 @@ object MiscQueries {
     // which per-user reach deltas between the qa18 arms survive
     // multiple-testing control? (Chebyshev p-proxy, step-up rule.)
     Query("qa27_fdr_gate", Some(
-      """WITH armed AS (SELECT user_id, event_type,
-        |    (CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0) AS arm
+      s"""WITH armed AS (SELECT user_id, event_type,
+        |    ($abArmSql) AS arm
         |  FROM events),
         |tot AS (SELECT
         |    CAST(SUM(CASE WHEN arm THEN 1 ELSE 0 END) AS BIGINT) AS na,
@@ -3255,19 +3065,13 @@ object MiscQueries {
     // revenue-per-event per md5 arm — the variance the naive per-user
     // t-interval gets wrong for ratios of sums.
     Query("qa31_ratio_metric", Some(
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
         |    CAST(SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(CAST(value AS DECIMAL(30,6)) * 1000000 AS BIGINT)
         |      ELSE 0 END) AS BIGINT) AS yu,
         |    CAST(COUNT(*) AS BIGINT) AS nu
         |  FROM events GROUP BY 1),
-        |a AS (SELECT CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS arm, yu, nu FROM u),
+        |a AS (SELECT CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS arm, yu, nu FROM u),
         |g AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS k,
         |    CAST(SUM(yu) AS BIGINT) AS sy, CAST(SUM(nu) AS BIGINT) AS sn,
         |    SUM(CAST(yu AS HUGEINT) * yu) AS syy,
@@ -3303,12 +3107,8 @@ object MiscQueries {
     // Experiment-design readout: per metric, the smallest absolute rate
     // delta detectable at alpha=5%/power=80% with the qa18 arms.
     Query("qa28_power", Some(
-      """WITH armed AS (SELECT user_id, event_type,
-        |    (CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0) AS arm
+      s"""WITH armed AS (SELECT user_id, event_type,
+        |    ($abArmSql) AS arm
         |  FROM events),
         |tot AS (SELECT
         |    CAST(SUM(CASE WHEN arm THEN 1 ELSE 0 END) AS BIGINT) AS na,
@@ -3333,14 +3133,8 @@ object MiscQueries {
     // allocation, in exact integer ppm terms (the read-BEFORE-metrics
     // experiment health check).
     Query("qa32_srm_check", Some(
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |armed AS (SELECT CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS arm FROM u),
+      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
+        |armed AS (SELECT CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS arm FROM u),
         |obs AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS o
         |  FROM armed GROUP BY arm),
         |wt AS (SELECT 'A' AS arm, CAST(1 AS BIGINT) AS w
@@ -3357,9 +3151,7 @@ object MiscQueries {
         |FROM j, tot GROUP BY n_arms, n""".stripMargin)) { (s, d) =>
       val armed = t(s, d, "events").select(col("user_id")).distinct()
         .withColumn("arm",
-          when(conv(substring(md5(concat(lit("ab_exp1_"),
-            col("user_id").cast("string"))), 1, 13), 16, 10)
-            .cast("long") % 2 === 0, "A").otherwise("B"))
+          when(abArm, "A").otherwise("B"))
       graft.operators.Quality.srmCheck(armed, col("arm"),
         Seq("A" -> 1L, "B" -> 1L))
     },
@@ -3367,16 +3159,10 @@ object MiscQueries {
     // qa18 arms — the parametric mean readout beside qa29's rank test;
     // exact BIGINT moments, t and Welch-Satterthwaite df floored to ppm.
     Query("qa33_welch_ttest", Some(
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
         |    CAST(SUM(CAST(value AS DECIMAL(30,2)) * 100) AS BIGINT) AS v
         |  FROM events GROUP BY user_id),
-        |armed AS (SELECT CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS g, v FROM u),
+        |armed AS (SELECT CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS g, v FROM u),
         |rawg AS (SELECT CAST(COUNT(DISTINCT g) AS BIGINT) AS rg FROM armed),
         |byg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g,
         |    CAST(SUM(v) AS BIGINT) AS s_g, CAST(SUM(v * v) AS BIGINT) AS ss_g
@@ -3409,9 +3195,7 @@ object MiscQueries {
         .agg(sum(col("value").cast("decimal(30,2)") * 100).cast("long")
           .as("cents"))
         .withColumn("g",
-          when(conv(substring(md5(concat(lit("ab_exp1_"),
-            col("user_id").cast("string"))), 1, 13), 16, 10)
-            .cast("long") % 2 === 0, "A").otherwise("B"))
+          when(abArm, "A").otherwise("B"))
       graft.operators.Quality.welchTTest(perUser, col("g"), col("cents"))
         .withColumn("t_ppm", floor(col("t") * 1000000).cast("long"))
         .withColumn("df_ppm", floor(col("df") * 1000000).cast("long"))
@@ -3423,16 +3207,10 @@ object MiscQueries {
     // integers; z floored to ppm for cross-engine digit identity.
     // (The id reuses the qa29 numbering gap — r9 verdict item #5.)
     Query("qa29_mannwhitney", Some(
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
         |    CAST(SUM(CAST(value AS DECIMAL(30,2)) * 100) AS BIGINT) AS v
         |  FROM events GROUP BY user_id),
-        |armed AS (SELECT CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS g, v FROM u),
+        |armed AS (SELECT CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS g, v FROM u),
         |counts AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c
         |  FROM armed GROUP BY v),
         |ranks AS (SELECT v, 2 * COALESCE(SUM(c) OVER (ORDER BY v
@@ -3469,26 +3247,18 @@ object MiscQueries {
         .agg(sum(col("value").cast("decimal(30,2)") * 100).cast("long")
           .as("cents"))
         .withColumn("g",
-          when(conv(substring(md5(concat(lit("ab_exp1_"),
-            col("user_id").cast("string"))), 1, 13), 16, 10)
-            .cast("long") % 2 === 0, "A").otherwise("B"))
+          when(abArm, "A").otherwise("B"))
       graft.operators.Quality.mannWhitneyU(perUser, col("g"), col("cents"))
         .withColumn("z_ppm", floor(col("z") * 1000000).cast("long"))
         .drop("z")
     },
     // Deterministic salted-md5 A/B assignment + conversion readout.
     Query("qa18_ab_assignment", Some(
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
         |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
         |      AS converted
         |  FROM events GROUP BY user_id),
-        |a AS (SELECT CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS arm, converted FROM u)
+        |a AS (SELECT CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS arm, converted FROM u)
         |SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_users,
         |  CAST(SUM(converted) AS BIGINT) AS n_converted,
         |  (CAST(SUM(converted) AS BIGINT) * 1000000) // COUNT(*) AS conv_ppm
@@ -3499,7 +3269,7 @@ object MiscQueries {
     // CUPED variance-reduced A/B readout: pre-period activity as the
     // covariate, arms from the qa18 md5 coin.
     Query("qa24_cuped", Some(
-      """WITH e AS (SELECT user_id, epoch_us(ts) * 1000 AS tsn FROM events),
+      s"""WITH e AS (SELECT user_id, epoch_us(ts) * 1000 AS tsn FROM events),
         |mid AS (SELECT (MIN(tsn) + MAX(tsn)) // 2 AS m FROM e),
         |u0 AS (SELECT user_id,
         |    CAST(SUM(CASE WHEN tsn < (SELECT m FROM mid) THEN 1 ELSE 0 END)
@@ -3507,13 +3277,7 @@ object MiscQueries {
         |    CAST(SUM(CASE WHEN tsn >= (SELECT m FROM mid) THEN 1 ELSE 0 END)
         |      AS BIGINT) AS y
         |  FROM e GROUP BY user_id),
-        |u AS (SELECT *, CASE WHEN
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('ab_exp1_'
-        |        || CAST(user_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 2 = 0
-        |    THEN 'A' ELSE 'B' END AS arm FROM u0),
+        |u AS (SELECT *, CASE WHEN $abArmSql THEN 'A' ELSE 'B' END AS arm FROM u0),
         |g AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
         |    CAST(SUM(x * x) AS BIGINT) AS sxx,
@@ -3816,16 +3580,12 @@ object MiscQueries {
     // Horvitz-Thompson stratified expansion: census purchases, thin the
     // bulk; the estimator audit behind every sampled revenue dashboard.
     Query("qx19_ht_estimator", Some(
-      """WITH f AS (SELECT event_type AS stratum,
+      s"""WITH f AS (SELECT event_type AS stratum,
         |    CAST(CASE event_type WHEN 'purchase' THEN 1000000
         |      WHEN 'click' THEN 100000 ELSE 50000 END AS BIGINT)
         |      AS rate_ppm,
         |    CAST(FLOOR(value * 100) AS BIGINT) AS cents,
-        |    CASE WHEN CAST(list_sum(list_transform(generate_series(1, 13),
-        |      j -> CAST(instr('0123456789abcdef', substr(md5('ht_'
-        |        || CAST(event_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1000000
+        |    CASE WHEN ${hex52("md5('ht_' || CAST(event_id AS VARCHAR))")} % 1000000
         |      < CASE event_type WHEN 'purchase' THEN 1000000
         |        WHEN 'click' THEN 100000 ELSE 50000 END
         |    THEN 1 ELSE 0 END AS s
@@ -3898,13 +3658,7 @@ object MiscQueries {
     },
     // Community conductance over the qg05 label-prop communities.
     Query("qg16_conductance", Some(conductanceOracle(iters = 4))) { (s, d) =>
-      val pp = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 50 === 0)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val edges = pp.as("a").join(pp.as("b"),
-          col("a.o") === col("b.o") && col("a.p") < col("b.p"))
-        .select(col("a.p").as("pa"), col("b.p").as("pb"))
+      val edges = coPurchaseEdges(orderParts(s, d, 50))
       graft.operators.Graphs.communityConductance(edges, "pa", "pb",
           iters = 4)
         .orderBy("community")
@@ -3926,12 +3680,8 @@ object MiscQueries {
     },
     // Sampling-accuracy audit: 10% md5 sample estimates vs exact counts.
     Query("qx14_sample_accuracy", Some(
-      """WITH f AS (SELECT event_type AS "group",
-        |    CASE WHEN CAST(list_sum(list_transform(generate_series(1, 13),
-        |      j -> CAST(instr('0123456789abcdef', substr(md5('sa_'
-        |        || CAST(event_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1000000
+      s"""WITH f AS (SELECT event_type AS "group",
+        |    CASE WHEN ${hex52("md5('sa_' || CAST(event_id AS VARCHAR))")} % 1000000
         |      < 100000
         |    THEN 1 ELSE 0 END AS s
         |  FROM events)
@@ -4015,12 +3765,9 @@ object MiscQueries {
     },
     // Pseudonymization collision audit: 10-bit hash space over custkeys.
     Query("qq24_pseudonym_audit", Some(
-      """WITH k AS (SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS k
+      s"""WITH k AS (SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS k
         |  FROM orders WHERE o_custkey IS NOT NULL),
-        |p AS (SELECT CAST(list_sum(list_transform(generate_series(1, 13),
-        |    j -> CAST(instr('0123456789abcdef', substr(md5('pn_' || k),
-        |      CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |    * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 1024 AS p
+        |p AS (SELECT ${hex52("md5('pn_' || k)")} % 1024 AS p
         |  FROM k),
         |c AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS cnt FROM p GROUP BY p)
         |SELECT CAST(1024 AS BIGINT) AS space,
@@ -4118,13 +3865,9 @@ object MiscQueries {
     // CMS ranking fidelity: top-10 by estimate vs top-10 by exact count
     // under a deliberately collision-heavy 2x64 sketch.
     Query("qx16_cms_recall", Some(
-      """WITH vals AS (SELECT CAST(user_id AS VARCHAR) AS v FROM events),
+      s"""WITH vals AS (SELECT CAST(user_id AS VARCHAR) AS v FROM events),
         |b AS (SELECT v, i,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef',
-        |        substr(md5('c' || i || '_' || v), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) % 64 AS bkt
+        |    ${hex52("md5('c' || i || '_' || v)")} % 64 AS bkt
         |  FROM vals CROSS JOIN (SELECT unnest([0, 1]) AS i)),
         |counters AS (SELECT i, bkt, CAST(COUNT(*) AS BIGINT) AS c
         |  FROM b GROUP BY 1, 2),
@@ -4237,10 +3980,7 @@ object MiscQueries {
          |    JOIN outdeg od ON od.src = p.n
          |    GROUP BY dir.dst) c ON c.n = nd.n)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-       |  WHERE l_orderkey % 50 = 0),
-       |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+    s"""WITH ${coPurchaseCtes(50)},
        |dir AS (SELECT u AS src, v AS dst FROM edges
        |  UNION ALL SELECT v, u FROM edges),
        |outdeg AS (SELECT src, COUNT(*) AS d FROM dir GROUP BY src),
@@ -4266,10 +4006,7 @@ object MiscQueries {
          |    JOIN outdeg od ON od.src = p.n
          |    GROUP BY dir.dst) c ON c.n = nd.n)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-       |  WHERE l_orderkey % 50 = 0),
-       |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+    s"""WITH ${coPurchaseCtes(50)},
        |dir AS (SELECT u AS src, v AS dst FROM edges
        |  UNION ALL SELECT v, u FROM edges),
        |outdeg AS (SELECT src, COUNT(*) AS d FROM dir GROUP BY src),
@@ -4283,14 +4020,13 @@ object MiscQueries {
        |SELECT n, r AS ppr FROM r$iters ORDER BY n""".stripMargin
   }
 
-  /** The qg05 oracle: the identical deterministic synchronous LPA
-    * unrolled as one CTE per round — per-dst neighbour-label counts
-    * ranked (count DESC, label ASC), ROW_NUMBER = 1 is exactly the
-    * operator's `min_by(lbl, (-count, lbl))`. */
-  /** The qg16 oracle: the identical unrolled label propagation (the qg05
-    * oracle's steps verbatim) followed by conductance algebra on the
-    * converged communities. */
-  private def conductanceOracle(iters: Int): String = {
+  /** The synchronous label propagation of qg05 and qg16: `dir` holds both
+    * directions of each co-purchase edge, `l0` gives every vertex its own
+    * label, and each of the `iters` rounds `l1`.. moves a vertex to the
+    * label most of its neighbours hold, ties to the smallest (ROW_NUMBER
+    * = 1 over count DESC, label ASC is the operator's
+    * `min_by(lbl, (-count, lbl))`). No trailing comma. */
+  private def labelPropCtes(iters: Int): String = {
     val steps = (1 to iters).map { k =>
       s"""l$k AS (SELECT n, lbl FROM (
          |  SELECT dir.dst AS n, p.lbl,
@@ -4299,14 +4035,18 @@ object MiscQueries {
          |  FROM l${k - 1} p JOIN dir ON dir.src = p.n
          |  GROUP BY dir.dst, p.lbl) WHERE rn = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-       |  WHERE l_orderkey % 50 = 0),
-       |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
-       |dir AS (SELECT u AS src, v AS dst FROM edges
+    s"""dir AS (SELECT u AS src, v AS dst FROM edges
        |  UNION ALL SELECT v, u FROM edges),
        |l0 AS (SELECT DISTINCT src AS n, src AS lbl FROM dir),
-       |$steps,
+       |$steps""".stripMargin
+  }
+
+  /** The qg16 oracle: the identical unrolled label propagation (the qg05
+    * oracle's steps verbatim) followed by conductance algebra on the
+    * converged communities. */
+  private def conductanceOracle(iters: Int): String = {
+    s"""WITH ${coPurchaseCtes(50)},
+       |${labelPropCtes(iters)},
        |comm AS (SELECT n, lbl FROM l$iters),
        |deg AS (SELECT src AS n, CAST(COUNT(*) AS BIGINT) AS d FROM dir
        |  GROUP BY src),
@@ -4327,23 +4067,10 @@ object MiscQueries {
        |ORDER BY v.community""".stripMargin
   }
 
+  /** The qg05 oracle: [[labelPropCtes]] read out per vertex. */
   private def labelPropOracle(iters: Int): String = {
-    val steps = (1 to iters).map { k =>
-      s"""l$k AS (SELECT n, lbl FROM (
-         |  SELECT dir.dst AS n, p.lbl,
-         |    ROW_NUMBER() OVER (PARTITION BY dir.dst
-         |      ORDER BY COUNT(*) DESC, p.lbl ASC) AS rn
-         |  FROM l${k - 1} p JOIN dir ON dir.src = p.n
-         |  GROUP BY dir.dst, p.lbl) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-       |  WHERE l_orderkey % 50 = 0),
-       |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
-       |dir AS (SELECT u AS src, v AS dst FROM edges
-       |  UNION ALL SELECT v, u FROM edges),
-       |l0 AS (SELECT DISTINCT src AS n, src AS lbl FROM dir),
-       |$steps
+    s"""WITH ${coPurchaseCtes(50)},
+       |${labelPropCtes(iters)}
        |SELECT n, lbl AS label FROM l$iters ORDER BY n""".stripMargin
   }
 
@@ -4363,10 +4090,7 @@ object MiscQueries {
       s"""a$r AS (SELECT n FROM (
          |${degWithin(s"a${r - 1}")}) WHERE deg >= $k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH pp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-       |  WHERE l_orderkey % 50 = 0),
-       |edges AS (SELECT DISTINCT LEAST(a.p, b.p) AS u, GREATEST(a.p, b.p) AS v
-       |  FROM pp a JOIN pp b ON a.o = b.o AND a.p < b.p),
+    s"""WITH ${coPurchaseCtes(50)},
        |a0 AS (SELECT u AS n FROM edges UNION SELECT v FROM edges),
        |$steps
        |SELECT n, deg FROM (

@@ -19,6 +19,15 @@ object Relational {
     if (name == "events") graft.streaming.EventStream.tsMicros(df) else df
   }
 
+  /** In oracle SQL, a hex string's first 13 digits as a non-negative 52-bit
+    * integer: the twin of Spark's `conv(substring(h, 1, 13), 16, 10)
+    * .cast("long")`, with which the query modules turn an md5 into a
+    * deterministic hash. `hex` is a DuckDB expression such as `md5(...)`. */
+  private[queries] def hex52(hex: String): String =
+    s"""CAST(list_sum(list_transform(generate_series(1, 13), j ->
+       |    CAST(instr('0123456789abcdef', substr($hex, CAST(j AS INT), 1)) - 1 AS BIGINT)
+       |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT)""".stripMargin
+
   /** SUM(measure) with exact decimal accumulation, emitted as double. */
   private def dsum(c: Column, scale: Int = 4): Column =
     sum(c.cast(s"decimal(30,$scale)")).cast("double")

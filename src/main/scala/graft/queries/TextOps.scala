@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data text operators (builder contract: dedup, text
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    order identical in any engine, no bigint-hex conversion needed.
   */
 object TextOps {
-  import Relational.t
+  import Relational.{hex52, t}
 
   private def toks(c: Column): Column = split(c, " ")
   private val stop = Seq("the", "a", "of", "and", "to")
@@ -60,6 +61,149 @@ object TextOps {
        |${bmCte("q2", "'window', 'dup'")},""".stripMargin
   }
 
+  /** `all_docs`: the oracle twin of [[withDups]]. */
+  private def allDocsCte: String =
+    """all_docs AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0)""".stripMargin
+
+  /** tok → bits → bal: each doc's per-bit balance for the 16-bit SimHash
+    * (`Text.simhash16`) of `src`'s (doc_id, text). No trailing comma. */
+  private def simhashBalCtes(src: String): String =
+    s"""tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM $src),
+       |bits AS (SELECT doc_id, b,
+       |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
+       |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
+       |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
+       |  FROM bits GROUP BY doc_id, b)""".stripMargin
+
+  /** The SimHash of each doc from its `bal` rows: bit b is set where the
+    * balance is >= 0. */
+  private def simhashFromBal: String =
+    """SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
+      |  FROM bal GROUP BY doc_id""".stripMargin
+
+  /** ok → cand: every pair (id_a < id_b) sharing a band of `bands`
+    * (doc_id, band), skipping bands of more than `maxBucket` docs. */
+  private def bandPairCtes(maxBucket: Int): String =
+    s"""ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND $maxBucket),
+       |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
+       |  JOIN ok o ON o.band = a.band)""".stripMargin
+
+  /** tok → ... → sig → bands → ok → cand over `sub`: the SimHash
+    * candidate pairs of `Dedup.simhashNearDupPairs`, one low and one high
+    * byte band per doc. */
+  private def simhashPairCtes: String =
+    s"""${simhashBalCtes("sub")},
+       |sig AS ($simhashFromBal),
+       |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
+       |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
+       |${bandPairCtes(1000)}""".stripMargin
+
+  /** [[simhashPairCtes]] → nd → und → reach: the near-dup pairs (hamming
+    * <= 1) and their transitive closure, for `Dedup.duplicateClusters`.
+    * Needs `WITH RECURSIVE`. */
+  private def simhashClusterCtes: String =
+    s"""$simhashPairCtes,
+       |nd AS (SELECT c.id_a, c.id_b
+       |  FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
+       |  WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1),
+       |und AS (SELECT id_a AS a, id_b AS b FROM nd UNION SELECT id_b, id_a FROM nd),
+       |reach AS (
+       |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
+       |  UNION
+       |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)""".stripMargin
+
+  /** The qd25 and qd29 oracle: SimHash pairs within hamming 2 of the docs
+    * `all_docs` holds with doc_id % 10 = 0, from 4 nibble bands. */
+  private def nibblePairsOracle(allDocs: String): String =
+    s"""WITH $allDocs,
+       |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
+       |${simhashBalCtes("sub")},
+       |sig AS ($simhashFromBal),
+       |bands AS (SELECT doc_id,
+       |  CAST(b AS VARCHAR) || '/' || CAST((simhash >> CAST(4 * b AS INT)) & 15 AS VARCHAR) AS band
+       | FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
+       |${bandPairCtes(1000)}
+       |SELECT c.id_a, c.id_b, CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hd
+       |FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
+       |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 2
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** sig → bands: the MinHash LSH bands of `Dedup.lshCandidatePairs` (4
+    * salted-md5 hashes, 2 bands of 2 rows) over `tok` (doc_id, tok). No
+    * trailing comma. */
+  private def minhashBandCtes: String =
+    """sig AS (SELECT doc_id,
+      |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
+      |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
+      |  FROM tok GROUP BY doc_id),
+      |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
+      |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig)""".stripMargin
+
+  /** tok → [[minhashBandCtes]] → ok → cand: the MinHash LSH candidate
+    * pairs of `src`'s (doc_id, text). */
+  private def minhashPairCtes(src: String, maxBucket: Int = 1000): String =
+    s"""tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok FROM $src),
+       |$minhashBandCtes,
+       |${bandPairCtes(maxBucket)}""".stripMargin
+
+  /** The qd45 and qd54 runs over `docs`: the BM25 top 30 of the `bm_q1`
+    * and `bm_q2` term lists of [[bm25OracleCtes]], as (query_id, doc,
+    * rank). */
+  private def bm25Runs(docs: DataFrame): DataFrame = {
+    def ranked(qid: Long, terms: Seq[String]) =
+      graft.operators.Text.bm25TopK(docs, "text", "doc_id", terms, k = 30)
+        .select(lit(qid).as("query_id"), col("doc"),
+          row_number().over(
+            Window.orderBy(col("bm25").desc, col("doc"))).as("rank"))
+    ranked(1L, Seq("spark", "join"))
+      .unionAll(ranked(2L, Seq("window", "dup")))
+  }
+
+  /** toks → ... → sc: per (doc, term) BM25 scores of the fixed 4-term
+    * query `qt` of qd38 and qd42 (integer IDF and saturation, quantized
+    * avgdl). No trailing comma. */
+  private def bm25ScoreCtes: String =
+    """toks AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS dl,
+      |    unnest(str_split(text, ' ')) AS tok FROM documents),
+      |qt AS (SELECT unnest(['spark', 'join', 'window', 'dup']) AS tok),
+      |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS tot FROM documents),
+      |av AS (SELECT n, (tot * 10) // n AS avgdl10 FROM st),
+      |hits AS (SELECT t.doc_id, t.tok, t.dl FROM toks t JOIN qt USING (tok)),
+      |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf, MIN(dl) AS dl
+      |  FROM hits GROUP BY 1, 2),
+      |dft AS (SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
+      |  FROM hits GROUP BY 1),
+      |sc AS (SELECT tf.doc_id,
+      |    ((av.n * 1000000) // dft.df)
+      |      * ((22 * tf.tf * av.avgdl10 * 1000000)
+      |         // (10 * tf.tf * av.avgdl10 + 3 * av.avgdl10 + 90 * tf.dl)) AS s
+      |  FROM tf JOIN dft USING (tok) CROSS JOIN av)""".stripMargin
+
+  /** The qd22 and qd32 oracle: corpus docs (doc_id % 97 <> 0) sharing at
+    * least 2 distinct trigrams with the bench slice (doc_id % 97 = 0),
+    * counting only grams in at most 50 corpus docs. */
+  private def contaminationOracle: String =
+    """WITH cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
+      |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
+      |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
+      |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
+      |        WHERE doc_id % 97 <> 0)),
+      |okg AS (SELECT g FROM cg GROUP BY g HAVING COUNT(*) <= 50),
+      |bg AS (SELECT doc_id, unnest(list_distinct(list_transform(
+      |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
+      |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
+      |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
+      |        WHERE doc_id % 97 = 0)),
+      |sh AS (SELECT c.doc_id AS cid, b.doc_id AS bid, COUNT(*) AS shared
+      |  FROM cg c JOIN okg o ON o.g = c.g JOIN bg b ON b.g = c.g
+      |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
+      |SELECT cid AS doc_id, COUNT(*) AS n_bench_hits, MAX(shared) AS max_shared
+      |FROM sh GROUP BY 1 ORDER BY doc_id""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // The INGEST-TIME near-dup operator under the oracle: the same banded
     // simhash pairs as qd25, but found by StreamingDedup probing corpus
@@ -67,31 +211,11 @@ object TextOps {
     // is qd25's batch formula — the lowest-equal-band exactly-once
     // emission is invisible to a DISTINCT-pairs oracle, so cross-batch
     // state probing is what's actually being verified.
-    Query("qd29_streaming_neardup", Some(
-      """WITH all_docs AS (
+    Query("qd29_streaming_neardup", Some(nibblePairsOracle(
+      """all_docs AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id < 2000
         |  UNION ALL SELECT doc_id + 1000000, text FROM documents
-        |    WHERE doc_id % 50 = 0 AND doc_id < 2000),
-        |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id,
-        |  CAST(b AS VARCHAR) || '/' || CAST((simhash >> CAST(4 * b AS INT)) & 15 AS VARCHAR) AS band
-        | FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
-        |SELECT c.id_a, c.id_b, CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hd
-        |FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 2
-        |ORDER BY id_a, id_b""".stripMargin)) { (s, d) =>
+        |    WHERE doc_id % 50 = 0 AND doc_id < 2000)""".stripMargin))) { (s, d) =>
       import s.implicits._
       // Replay set bounded BEFORE dup injection (r9 verdict #3): doc_id <
       // 2000 is a deterministic constant-size slice at every SF (<= 240
@@ -221,9 +345,7 @@ object TextOps {
     },
     // Exact dedup: content-hash groups, keeper = min id, copies counted.
     Query("qd04_exact_dedup", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0)
+      s"""WITH $allDocsCte
         |SELECT md5(text) AS content_hash, COUNT(*) AS n_copies, MIN(doc_id) AS keeper_id
         |FROM all_docs GROUP BY md5(text) HAVING COUNT(*) > 1 ORDER BY keeper_id""".stripMargin)) { (s, d) =>
       graft.operators.Dedup.exactGroups(withDups(s, d), "text", "doc_id")
@@ -247,21 +369,8 @@ object TextOps {
     // collide heavily). Default maxBucket cap (mirrored in the oracle) is
     // a no-op at this scale but enforced by the operator.
     Query("qd06_lsh_pairs", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok
-        |  FROM all_docs WHERE doc_id % 10 = 0),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
+      s"""WITH $allDocsCte,
+        |${minhashPairCtes("all_docs WHERE doc_id % 10 = 0")}
         |SELECT id_a, COUNT(*) AS n_candidates, MIN(id_b) AS min_cand
         |FROM cand GROUP BY id_a ORDER BY id_a""".stripMargin)) { (s, d) =>
       graft.operators.Dedup.lshCandidatePairs(
@@ -296,15 +405,8 @@ object TextOps {
     },
     // 16-bit SimHash over the token multiset (bits from md5 hex digits).
     Query("qd08_simhash", Some(
-      """WITH tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h
-        |  FROM documents WHERE doc_id < 100),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b)
-        |SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |FROM bal GROUP BY doc_id ORDER BY doc_id""".stripMargin)) { (s, d) =>
+      s"""WITH ${simhashBalCtes("documents WHERE doc_id < 100")}
+        |$simhashFromBal ORDER BY doc_id""".stripMargin)) { (s, d) =>
       graft.operators.Text.simhash16(
           t(s, d, "documents").filter(col("doc_id") < 100), "text", "doc_id")
         .orderBy("doc_id")
@@ -313,24 +415,9 @@ object TextOps {
     // hamming <= 1), exact bit_count verification. 20% sample keeps the
     // 256-bucket band space from saturating on the tiny-vocab corpus.
     Query("qd12_simhash_neardup", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 5 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
-        |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
+        |$simhashPairCtes
         |SELECT c.id_a, c.id_b, CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hd
         |FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
         |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1
@@ -342,30 +429,7 @@ object TextOps {
     // The GENERIC banded-Hamming near-dup operator under the oracle (the
     // image-aHash pair path, here driven by the 16-bit text simhash):
     // 4 nibble bands give full recall for hamming <= 3; verify keeps <= 2.
-    Query("qd25_hamming_pairs", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
-        |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id,
-        |  CAST(b AS VARCHAR) || '/' || CAST((simhash >> CAST(4 * b AS INT)) & 15 AS VARCHAR) AS band
-        | FROM sig, (SELECT unnest(generate_series(0, 3)) AS b)),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
-        |SELECT c.id_a, c.id_b, CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INT) AS hd
-        |FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 2
-        |ORDER BY id_a, id_b""".stripMargin)) { (s, d) =>
+    Query("qd25_hamming_pairs", Some(nibblePairsOracle(allDocsCte))) { (s, d) =>
       val sig = graft.operators.Text.simhash16(
         withDups(s, d).filter(col("doc_id") % 10 === 0), "text", "doc_id")
       graft.operators.Dedup.hammingNearDupPairs(sig, "simhash", "doc_id",
@@ -377,9 +441,7 @@ object TextOps {
     // whole-doc MinHash misses). 25% sample of the dup-injected corpus;
     // windows hash to xxhash64 longs, never shuffled as strings.
     Query("qd30_shared_windows", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |docs AS (SELECT doc_id AS id, str_split(text, ' ') AS w
         |  FROM all_docs WHERE doc_id % 4 = 0),
         |wins AS (SELECT DISTINCT id, array_to_string(list_slice(w, i, i + 7), ' ') AS win
@@ -399,21 +461,9 @@ object TextOps {
     // candidates (cost scales with candidates, not corpus²) — how many
     // candidates are real near-dups at tau = 0.5.
     Query("qd20_lsh_verify", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok FROM sub),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
+        |${minhashPairCtes("sub")},
         |tks AS (SELECT doc_id, list_distinct(str_split(text, ' ')) AS tk FROM sub),
         |v AS (SELECT c.id_a, c.id_b,
         |  CAST(len(list_intersect(ta.tk, tb.tk)) AS DOUBLE) /
@@ -439,34 +489,13 @@ object TextOps {
     // deterministic split -> per-(source, split) corpus accounting. One
     // oracle checks the full composition end-to-end.
     Query("qd19_pipeline_e2e", Some(
-      """WITH RECURSIVE all_docs AS (
+      s"""WITH RECURSIVE all_docs AS (
         |  SELECT source, doc_id, text FROM documents
         |  UNION ALL SELECT source, doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
         |kf AS (SELECT source, doc_id, text,
         |  ROW_NUMBER() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM all_docs),
         |sub AS (SELECT source, doc_id, text FROM kf WHERE rn = 1 AND doc_id % 25 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
-        |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
-        |nd AS (SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |  WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1),
-        |und AS (SELECT id_a AS a, id_b AS b FROM nd UNION SELECT id_b, id_a FROM nd),
-        |reach AS (
-        |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
-        |  UNION
-        |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+        |$simhashClusterCtes,
         |comp AS (SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a),
         |keepers AS (SELECT s.source, s.doc_id FROM sub s LEFT JOIN comp c ON c.doc_id = s.doc_id
         |  WHERE c.component IS NULL OR c.component = s.doc_id),
@@ -648,32 +677,9 @@ object TextOps {
     // highest-quality member (type-token ratio, id tie-break) — the
     // production rule: ship the cleanest copy, not the lowest id.
     Query("qd35_keep_best", Some(
-      """WITH RECURSIVE all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH RECURSIVE $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 5 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
-        |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
-        |nd AS (SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |  WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1),
-        |und AS (SELECT id_a AS a, id_b AS b FROM nd UNION SELECT id_b, id_a FROM nd),
-        |reach AS (
-        |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
-        |  UNION
-        |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+        |$simhashClusterCtes,
         |comp AS (SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a),
         |ttr AS (SELECT doc_id,
         |  CAST(len(list_distinct(str_split(text, ' '))) AS DOUBLE) / len(str_split(text, ' ')) AS t
@@ -755,32 +761,9 @@ object TextOps {
     // to its cluster keeper (min reachable id). Oracle = recursive
     // transitive closure.
     Query("qd13_dup_clusters", Some(
-      """WITH RECURSIVE all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH RECURSIVE $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 5 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
-        |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
-        |nd AS (SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |  WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1),
-        |und AS (SELECT id_a AS a, id_b AS b FROM nd UNION SELECT id_b, id_a FROM nd),
-        |reach AS (
-        |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
-        |  UNION
-        |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a)
+        |$simhashClusterCtes
         |SELECT a AS doc_id, MIN(b) AS component
         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin)) { (s, d) =>
       val pairs = graft.operators.Dedup.simhashNearDupPairs(
@@ -792,9 +775,7 @@ object TextOps {
     // Winnowing-style rolling fingerprint: min-md5 over 3-token windows.
     // Injected dups share their original's fingerprint by construction.
     Query("qd11_fingerprint", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |d AS (SELECT doc_id, str_split(text, ' ') AS tk FROM all_docs WHERE doc_id % 25 = 0),
         |w AS (SELECT doc_id, tk, unnest(generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1))) AS j FROM d)
         |SELECT doc_id, MIN(md5(array_to_string(tk[j:j+2], ' '))) AS fingerprint
@@ -833,9 +814,7 @@ object TextOps {
     // Batch top-k cosine: 5 query vectors answered in ONE corpus scan
     // (broadcast query batch + per-query rank window).
     Query("qv07_batch_knn", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${VectorOps.quantizedCte()},
         |qs AS (SELECT vec_id AS query_id, q AS xq FROM emb WHERE vec_id < 5),
         |scored AS (SELECT qs.query_id, e.vec_id,
         |  CAST(list_sum(list_transform(range(1, 65), i -> e.q[i] * qs.xq[i])) AS DOUBLE) /
@@ -979,23 +958,7 @@ object TextOps {
     // Benchmark-contamination check: corpus docs sharing >= 2 distinct
     // trigrams with the held-out "benchmark" slice (doc_id % 97 == 0),
     // via an inverted-index join with a df cap — never corpus x bench.
-    Query("qd22_contamination", Some(
-      """WITH cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
-        |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
-        |        WHERE doc_id % 97 <> 0)),
-        |okg AS (SELECT g FROM cg GROUP BY g HAVING COUNT(*) <= 50),
-        |bg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
-        |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
-        |        WHERE doc_id % 97 = 0)),
-        |sh AS (SELECT c.doc_id AS cid, b.doc_id AS bid, COUNT(*) AS shared
-        |  FROM cg c JOIN okg o ON o.g = c.g JOIN bg b ON b.g = c.g
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT cid AS doc_id, COUNT(*) AS n_bench_hits, MAX(shared) AS max_shared
-        |FROM sh GROUP BY 1 ORDER BY doc_id""".stripMargin)) { (s, d) =>
+    Query("qd22_contamination", Some(contaminationOracle)) { (s, d) =>
       val docs = t(s, d, "documents")
       graft.operators.Dedup.crossCorpusContamination(
           docs.filter(col("doc_id") % 97 =!= 0),
@@ -1007,23 +970,7 @@ object TextOps {
     // corpus posting stream is cut map-side BEFORE its shuffle (no false
     // negatives, so the result — and the oracle SQL — is byte-identical
     // to qd22; the shuffle now scales with the overlap, not the corpus).
-    Query("qd32_contamination_bloom", Some(
-      """WITH cg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
-        |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
-        |        WHERE doc_id % 97 <> 0)),
-        |okg AS (SELECT g FROM cg GROUP BY g HAVING COUNT(*) <= 50),
-        |bg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(1, GREATEST(CAST(len(tk) AS BIGINT) - 2, 1)),
-        |    i -> array_to_string(tk[i:i+2], ' ')))) AS g
-        |  FROM (SELECT doc_id, str_split(text, ' ') AS tk FROM documents
-        |        WHERE doc_id % 97 = 0)),
-        |sh AS (SELECT c.doc_id AS cid, b.doc_id AS bid, COUNT(*) AS shared
-        |  FROM cg c JOIN okg o ON o.g = c.g JOIN bg b ON b.g = c.g
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-        |SELECT cid AS doc_id, COUNT(*) AS n_bench_hits, MAX(shared) AS max_shared
-        |FROM sh GROUP BY 1 ORDER BY doc_id""".stripMargin)) { (s, d) =>
+    Query("qd32_contamination_bloom", Some(contaminationOracle)) { (s, d) =>
       val docs = t(s, d, "documents")
       graft.operators.Dedup.crossCorpusContaminationBloom(
           docs.filter(col("doc_id") % 97 =!= 0),
@@ -1064,21 +1011,8 @@ object TextOps {
     // degenerate boilerplate buckets (300-3000 docs per band bucket at
     // these SFs) before pair expansion; the oracle applies the same cap.
     Query("qd10_lsh_capped", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok
-        |  FROM all_docs),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 8),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
+      s"""WITH $allDocsCte,
+        |${minhashPairCtes("all_docs", maxBucket = 8)}
         |SELECT COUNT(*) AS n_pairs,
         | CAST(SUM(id_a) AS BIGINT) AS sum_a, CAST(SUM(id_b) AS BIGINT) AS sum_b,
         | MIN(id_a) AS min_a, MAX(id_b) AS max_b
@@ -1093,22 +1027,7 @@ object TextOps {
     // the integer IDF does real work) — all-integer saturation with
     // quantized avgdl, bit-exact under the oracle.
     Query("qd38_bm25", Some(
-      """WITH toks AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS dl,
-        |    unnest(str_split(text, ' ')) AS tok FROM documents),
-        |qt AS (SELECT unnest(['spark', 'join', 'window', 'dup']) AS tok),
-        |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS tot FROM documents),
-        |av AS (SELECT n, (tot * 10) // n AS avgdl10 FROM st),
-        |hits AS (SELECT t.doc_id, t.tok, t.dl FROM toks t JOIN qt USING (tok)),
-        |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf, MIN(dl) AS dl
-        |  FROM hits GROUP BY 1, 2),
-        |dft AS (SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        |  FROM hits GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |    ((av.n * 1000000) // dft.df)
-        |      * ((22 * tf.tf * av.avgdl10 * 1000000)
-        |         // (10 * tf.tf * av.avgdl10 + 3 * av.avgdl10 + 90 * tf.dl)) AS s
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN av)
+      s"""WITH $bm25ScoreCtes
         |SELECT doc_id, CAST(SUM(s) AS BIGINT) AS bm25
         |FROM sc GROUP BY 1 ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin)) { (s, d) =>
       graft.operators.Text.bm25TopK(t(s, d, "documents"), "text", "doc_id",
@@ -1136,21 +1055,9 @@ object TextOps {
     // LSH candidate pairs — asymmetric containment grading that Jaccard
     // misses (short doc inside long doc = high recall, low Jaccard).
     Query("qd40_overlap_f1", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok FROM sub),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
+        |${minhashPairCtes("sub")},
         |tks AS (SELECT doc_id, list_distinct(str_split(text, ' ')) AS tk FROM sub),
         |m AS (SELECT c.id_a, c.id_b,
         |  CAST(len(list_intersect(ta.tk, tb.tk)) AS BIGINT) AS n_inter,
@@ -1223,22 +1130,7 @@ object TextOps {
     // qd38's BM25 pipeline at k=50 + a length prior, fused with integer
     // reciprocal ranks
     Query("qd42_rrf_fusion", Some(
-      """WITH toks AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS dl,
-        |    unnest(str_split(text, ' ')) AS tok FROM documents),
-        |qt AS (SELECT unnest(['spark', 'join', 'window', 'dup']) AS tok),
-        |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(len(str_split(text, ' '))) AS BIGINT) AS tot FROM documents),
-        |av AS (SELECT n, (tot * 10) // n AS avgdl10 FROM st),
-        |hits AS (SELECT t.doc_id, t.tok, t.dl FROM toks t JOIN qt USING (tok)),
-        |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf, MIN(dl) AS dl
-        |  FROM hits GROUP BY 1, 2),
-        |dft AS (SELECT tok, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-        |  FROM hits GROUP BY 1),
-        |sc AS (SELECT tf.doc_id,
-        |    ((av.n * 1000000) // dft.df)
-        |      * ((22 * tf.tf * av.avgdl10 * 1000000)
-        |         // (10 * tf.tf * av.avgdl10 + 3 * av.avgdl10 + 90 * tf.dl)) AS s
-        |  FROM tf JOIN dft USING (tok) CROSS JOIN av),
+      s"""WITH $bm25ScoreCtes,
         |bm AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS bm25
         |  FROM sc GROUP BY 1 ORDER BY bm25 DESC, doc_id LIMIT 50),
         |bmr AS (SELECT doc_id AS id,
@@ -1251,7 +1143,6 @@ object TextOps {
         |SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS lists,
         |  CAST(SUM(1000000 // (60 + rank)) AS BIGINT) AS rrf
         |FROM u GROUP BY id ORDER BY rrf DESC, id LIMIT 20""".stripMargin)) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
       val bm = graft.operators.Text.bm25TopK(docs, "text", "doc_id",
           Seq("spark", "join", "window", "dup"), k = 50)
@@ -1296,15 +1187,7 @@ object TextOps {
          |  FROM neg)
          |SELECT query_id, doc_id, neg_rank FROM rk WHERE neg_rank <= 10
          |ORDER BY query_id, neg_rank""".stripMargin)) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val docs = t(s, d, "documents")
-      def ranked(qid: Long, terms: Seq[String]) =
-        graft.operators.Text.bm25TopK(docs, "text", "doc_id", terms, k = 30)
-          .select(lit(qid).as("query_id"), col("doc"),
-            row_number().over(
-              Window.orderBy(col("bm25").desc, col("doc"))).as("rank"))
-      val r = ranked(1L, Seq("spark", "join"))
-        .unionAll(ranked(2L, Seq("window", "dup")))
+      val r = bm25Runs(t(s, d, "documents"))
       val positives = r.filter(col("doc") % 3 === 0)
         .select(col("query_id"), col("doc"))
       graft.operators.Text.hardNegatives(r, positives,
@@ -1318,21 +1201,9 @@ object TextOps {
     // of the longer text confirm. Exact copies land at dist 0; shared-
     // vocabulary shuffles (high Jaccard, different order) wash out.
     Query("qd47_edit_distance", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 10 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) AS tok FROM sub),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
+        |${minhashPairCtes("sub")},
         |tk AS (SELECT doc_id, list_distinct(str_split(text, ' ')) AS tk FROM sub),
         |ver AS (SELECT c.id_a, c.id_b FROM cand c
         |  JOIN tk a ON a.doc_id = c.id_a JOIN tk b ON b.doc_id = c.id_b
@@ -1445,15 +1316,11 @@ object TextOps {
     // any 7-token shared run is guaranteed a common fingerprint at ~40%
     // of the every-gram index size.
     Query("qd52_winnowing", Some(
-      """WITH tk AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents
+      s"""WITH tk AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents
         |  WHERE doc_id < 300),
         |g AS (SELECT doc_id, w,
         |    unnest(generate_series(1, CAST(greatest(len(w) - 3, 1) AS BIGINT))) AS i FROM tk),
-        |h AS (SELECT doc_id, i, CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |    CAST(instr('0123456789abcdef',
-        |      substr(md5(array_to_string(w[CAST(i AS INT):CAST(i AS INT) + 3], ' ')),
-        |        CAST(j AS INT), 1)) - 1 AS BIGINT)
-        |    * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS hv FROM g),
+        |h AS (SELECT doc_id, i, ${hex52("md5(array_to_string(w[CAST(i AS INT):CAST(i AS INT) + 3], ' '))")} AS hv FROM g),
         |win AS (SELECT doc_id, i,
         |    MIN(hv) OVER (PARTITION BY doc_id ORDER BY i
         |      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp,
@@ -1471,32 +1338,9 @@ object TextOps {
     // lands in the same side, so no near-duplicate of a heldout doc can
     // sit in train. Split accounting per side.
     Query("qd53_leakage_split", Some(
-      """WITH RECURSIVE all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 50 = 0),
+      s"""WITH RECURSIVE $allDocsCte,
         |sub AS (SELECT doc_id, text FROM all_docs WHERE doc_id % 5 = 0),
-        |tok AS (SELECT doc_id, md5(unnest(str_split(text, ' '))) AS h FROM sub),
-        |bits AS (SELECT doc_id, b,
-        |  ((instr('0123456789abcdef', substr(h, CAST(b // 4 AS INT) + 1, 1)) - 1) >> (b % 4)) % 2 AS bit
-        |  FROM tok, (SELECT unnest(generate_series(0, 15)) AS b)),
-        |bal AS (SELECT doc_id, b, SUM(CASE WHEN bit = 1 THEN 1 ELSE -1 END) AS bal
-        |  FROM bits GROUP BY doc_id, b),
-        |sig AS (SELECT doc_id, CAST(SUM(CASE WHEN bal >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS simhash
-        |  FROM bal GROUP BY doc_id),
-        |bands AS (SELECT doc_id, 'l' || CAST(simhash % 256 AS VARCHAR) AS band FROM sig
-        |  UNION ALL SELECT doc_id, 'h' || CAST(simhash // 256 AS VARCHAR) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band),
-        |nd AS (SELECT c.id_a, c.id_b
-        |  FROM cand c JOIN sig sa ON sa.doc_id = c.id_a JOIN sig sb ON sb.doc_id = c.id_b
-        |  WHERE bit_count(xor(sa.simhash, sb.simhash)) <= 1),
-        |und AS (SELECT id_a AS a, id_b AS b FROM nd UNION SELECT id_b, id_a FROM nd),
-        |reach AS (
-        |  SELECT a, a AS b FROM (SELECT DISTINCT a FROM und)
-        |  UNION
-        |  SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
+        |$simhashClusterCtes,
         |comp AS (SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a),
         |allc AS (SELECT s.doc_id, COALESCE(c.component, s.doc_id) AS comp
         |  FROM sub s LEFT JOIN comp c USING (doc_id)),
@@ -1549,15 +1393,8 @@ object TextOps {
          |  COALESCE(1000000 // h.first_rel, 0) AS mrr_ppm
          |FROM nrel n LEFT JOIN h ON h.query_id = n.query_id
          |ORDER BY n.query_id""".stripMargin)) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
-      def ranked(qid: Long, terms: Seq[String]) =
-        graft.operators.Text.bm25TopK(docs, "text", "doc_id", terms, k = 30)
-          .select(lit(qid).as("query_id"), col("doc"),
-            row_number().over(
-              Window.orderBy(col("bm25").desc, col("doc"))).as("rank"))
-      val runs = ranked(1L, Seq("spark", "join"))
-        .unionAll(ranked(2L, Seq("window", "dup")))
+      val runs = bm25Runs(docs)
       def rel(qid: Long, terms: Seq[String]) =
         docs.filter(terms.map(w => col("text").contains(w)).reduce(_ && _))
           .select(lit(qid).as("query_id"), col("doc_id").as("doc"))
@@ -1704,25 +1541,8 @@ object TextOps {
     // table (never re-shingled), only the delta hashes fresh; candidates
     // are band collisions touching the delta.
     Query("qd84_lsh_incremental", Some(
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents
-        |  WHERE doc_id % 50 = 0),
-        |tok AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' ')))
-        |    AS tok
-        |  FROM all_docs WHERE doc_id % 10 = 0),
-        |sig AS (SELECT doc_id,
-        |  MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |  MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
-        |ok AS (SELECT band FROM bands GROUP BY band
-        |  HAVING COUNT(*) BETWEEN 2 AND 1000),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM bands a JOIN bands b ON a.band = b.band
-        |    AND a.doc_id < b.doc_id
-        |  JOIN ok o ON o.band = a.band)
+      s"""WITH $allDocsCte,
+        |${minhashPairCtes("all_docs WHERE doc_id % 10 = 0")}
         |SELECT id_a, id_b FROM cand
         |WHERE id_a % 3 = 0 OR id_b % 3 = 0
         |ORDER BY id_a, id_b""".stripMargin)) { (s, d) =>
@@ -2224,16 +2044,11 @@ object TextOps {
     // MinHash-LSH calibration: measured precision/recall of the banded
     // index vs exact same-source Jaccard >= 0.8 (integer-compared).
     Query("qd73_lsh_calibration", Some(
-      """WITH docs AS (SELECT source, doc_id,
+      s"""WITH docs AS (SELECT source, doc_id,
         |    list_distinct(str_split(text, ' ')) AS tk,
         |    len(list_distinct(str_split(text, ' '))) AS nt FROM documents),
         |tok AS (SELECT source, doc_id, unnest(tk) AS tok FROM docs),
-        |sig AS (SELECT doc_id,
-        |    MIN(md5('s0_' || tok)) AS mh0, MIN(md5('s1_' || tok)) AS mh1,
-        |    MIN(md5('s2_' || tok)) AS mh2, MIN(md5('s3_' || tok)) AS mh3
-        |  FROM tok GROUP BY doc_id),
-        |bands AS (SELECT doc_id, md5('0' || mh0 || mh1) AS band FROM sig
-        |  UNION ALL SELECT doc_id, md5('1' || mh2 || mh3) AS band FROM sig),
+        |$minhashBandCtes,
         |ok AS (SELECT band FROM bands GROUP BY band
         |  HAVING COUNT(*) BETWEEN 2 AND 1000),
         |cand0 AS (SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
@@ -2448,14 +2263,10 @@ object TextOps {
     // T5/FIM span-corruption manifest: hash-chosen mask spans, identical
     // from any engine or shard.
     Query("qd80_span_corruption", Some(
-      """WITH t1 AS (SELECT doc_id AS id,
+      s"""WITH t1 AS (SELECT doc_id AS id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n,
         |    string_split(text, ' ') AS toks,
-        |    CAST(list_sum(list_transform(generate_series(1, 13), j ->
-        |      CAST(instr('0123456789abcdef', substr(md5('sc_'
-        |        || CAST(doc_id AS VARCHAR)), CAST(j AS INT), 1)) - 1
-        |        AS BIGINT)
-        |      * CAST(16 ** (13 - j) AS BIGINT))) AS BIGINT) AS h
+        |    ${hex52("md5('sc_' || CAST(doc_id AS VARCHAR))")} AS h
         |  FROM documents),
         |p AS (SELECT id, n, toks, 1 + h % GREATEST(n - 3, 1) AS start
         |  FROM t1),

@@ -24,13 +24,131 @@ object VectorOps {
       k = 10, m = 8, nCells = 8, nprobe = 3, nCodes = 64, trainRows = 512)
   }
 
+  /** el → planes → signs → buckets: each vector's 8-bit random-hyperplane
+    * LSH bucket (`Similarity.lshBuckets`, md5-derived +/-1 plane
+    * components over the 1e4-quantized embedding). No trailing comma. */
+  private def lshBucketCtes: String =
+    """el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
+      | FROM (SELECT vec_id,
+      |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
+      |  FROM embeddings), unnest(range(1, 65)) t(i)),
+      |planes AS (SELECT vec_id, p, qe,
+      |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
+      |    THEN 1 ELSE -1 END AS comp
+      | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
+      |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes
+      |  GROUP BY vec_id, p),
+      |buckets AS (SELECT vec_id,
+      |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
+      | FROM signs GROUP BY vec_id)""".stripMargin
+
+  /** The CTE `name` of (vec_id, q): each vector's embedding quantized to
+    * 1e4 integer steps. */
+  private[queries] def quantizedCte(name: String = "emb"): String =
+    s"""$name AS (SELECT vec_id,
+       |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
+       |  FROM embeddings)""".stripMargin
+
+  /** [[quantizedCte]] `emb` → nemb: each quantized vector with its squared
+    * norm `qq`. No trailing comma. */
+  private def normedCtes: String =
+    s"""${quantizedCte()},
+       |nemb AS (SELECT vec_id, q,
+       |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb)""".stripMargin
+
+  /** cents: the 64 coarse IVF centroids (every vector with vec_id % 53 = 0,
+    * lowest ids first) as (cid, cq, cc) from `nemb`. */
+  private def centsCte: String =
+    """cents AS (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
+      |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64)""".stripMargin
+
+  /** [[lshBucketCtes]] → q → bc → v → pairs → r: the `Similarity.knnGraph`
+    * bucket-mate pairs, ranked per `src` by exact cosine (rank 1 =
+    * nearest). Buckets over 10000 vectors are skipped. */
+  private def lshKnnCtes: String =
+    s"""$lshBucketCtes,
+       |${quantizedCte("q")},
+       |bc AS (SELECT bucket FROM buckets GROUP BY bucket
+       |  HAVING COUNT(*) <= 10000),
+       |v AS (SELECT b.vec_id, b.bucket, q.q,
+       |    sqrt(CAST(CAST(list_sum(list_transform(q.q, x -> x * x)) AS BIGINT) AS DOUBLE)) AS nrm
+       |  FROM buckets b JOIN bc ON bc.bucket = b.bucket
+       |  JOIN q ON q.vec_id = b.vec_id),
+       |pairs AS (SELECT a.vec_id AS src, b.vec_id AS nbr,
+       |    CAST(CAST(list_sum(list_transform(range(1, 65),
+       |      i -> a.q[i] * b.q[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cos
+       |  FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+       |r AS (SELECT src, nbr, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, nbr) AS rank
+       |  FROM pairs)""".stripMargin
+
+  /** The qv10 and qv13 PQ oracle: 64 centroids taken in id order from
+    * the vectors `centFilter` keeps, 8 sub-quantizer codes per vector,
+    * and the query's ADC distance from a per-(sub-space, centroid) LUT. */
+  private def pqAdcOracle(centFilter: String): String =
+    s"""WITH ${quantizedCte()},
+       |cents AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, q AS cq
+       |  FROM (SELECT vec_id, q FROM emb $centFilter
+       |        ORDER BY vec_id LIMIT 64)),
+       |codes AS (SELECT vec_id, j, c AS code FROM (
+       |  SELECT e.vec_id, s.j, ct.c,
+       |    ROW_NUMBER() OVER (PARTITION BY e.vec_id, s.j ORDER BY
+       |      list_sum(list_transform(range(1, 9), t ->
+       |        (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]) * (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]))), ct.c) AS rn
+       |  FROM emb e, (SELECT unnest(range(0, 8)) AS j) s, cents ct) WHERE rn = 1),
+       |query AS (SELECT q AS xq FROM emb WHERE vec_id = 0),
+       |lut AS (SELECT s.j, ct.c,
+       |    CAST(list_sum(list_transform(range(1, 9), t ->
+       |      (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]) * (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]))) AS BIGINT) AS d2
+       |  FROM (SELECT unnest(range(0, 8)) AS j) s, cents ct, query),
+       |adist AS (SELECT cd.vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
+       |  FROM codes cd JOIN lut l ON l.j = cd.j AND l.c = cd.code
+       |  GROUP BY cd.vec_id)
+       |SELECT vec_id, adist FROM adist WHERE vec_id <> 0
+       |ORDER BY adist, vec_id LIMIT 12""".stripMargin
+
+  /** assigned → resid: each vector's nearest `cents` centroid (cid, cq;
+    * cc = |cq|², from `nemb` rows with qq = |q|²) and its residual `r`.
+    * Shared by the residual IVF-PQ oracles qv14 and qv15. */
+  private def residualAssignCtes: String =
+    """assigned AS (SELECT vec_id AS id, q, cid, cq FROM (
+      |  SELECT e.vec_id, e.q, ct.cid, ct.cq,
+      |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+      |      e.qq + ct.cc - 2 * list_sum(list_transform(range(1, 65), i -> e.q[i] * ct.cq[i])),
+      |      ct.cid) AS rn
+      |  FROM nemb e, cents ct) WHERE rn = 1),
+      |resid AS (SELECT id, cid,
+      |  list_transform(range(1, 65), i -> q[i] - cq[i]) AS r FROM assigned)""".stripMargin
+
+  /** query → probed → codes → lut, then the top 10 by ADC distance: the
+    * residual IVF-PQ search over [[residualAssignCtes]] and the residual
+    * codebook `cb` (c, cr), probing the query's 3 nearest cells. */
+  private def residualAdcTail: String =
+    """query AS (SELECT q AS xq, qq AS xqq FROM nemb WHERE vec_id = 0),
+      |probed AS (SELECT cid, cq FROM cents, query
+      |  ORDER BY xqq + cc - 2 * list_sum(list_transform(range(1, 65), i -> cq[i] * xq[i])), cid
+      |  LIMIT 3),
+      |codes AS (SELECT id, cid, j, c AS code FROM (
+      |  SELECT t.id, t.cid, s.j, cb.c,
+      |    ROW_NUMBER() OVER (PARTITION BY t.id, s.j ORDER BY
+      |      list_sum(list_transform(range(1, 9), u ->
+      |        (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]) * (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]))), cb.c) AS rn
+      |  FROM resid t JOIN probed USING (cid), (SELECT unnest(range(0, 8)) AS j) s, cb) WHERE rn = 1),
+      |lut AS (SELECT p.cid, s.j, cb.c,
+      |    CAST(list_sum(list_transform(range(1, 9), u ->
+      |      (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u])
+      |      * (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u]))) AS BIGINT) AS d2
+      |  FROM (SELECT unnest(range(0, 8)) AS j) s, cb, probed p, query)
+      |SELECT cd.id AS vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
+      |FROM codes cd JOIN lut l ON l.cid = cd.cid AND l.j = cd.j AND l.c = cd.code
+      |WHERE cd.id <> 0
+      |GROUP BY cd.id ORDER BY adist, vec_id LIMIT 10""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // Brute-force cosine top-k against a query vector (vec_id = 0),
     // broadcast nested-loop over the quantized grid.
     Query("qv01_knn_cosine", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |qv AS (SELECT q AS v FROM emb WHERE vec_id = 0),
         |scored AS (SELECT e.vec_id,
         |  CAST(list_sum(list_transform(range(1, 65), i -> e.q[i] * qv.v[i])) AS DOUBLE) /
@@ -72,13 +190,8 @@ object VectorOps {
     // |cells probed| / |cells| of brute force, and every stage is a
     // hash-partitioned join/window - no driver-side index.
     Query("qv04_ivf_ann", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
-        |cents AS (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
-        |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
+      s"""WITH $normedCtes,
+        |$centsCte,
         |assigned AS (SELECT vec_id, q, qq, cid FROM (
         |  SELECT e.vec_id, e.q, e.qq, c.cid,
         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -105,9 +218,7 @@ object VectorOps {
     // invariant (engine-independent), while partial-probe recall is
     // covered by SimilaritySpec on clustered data.
     Query("qv05_ivf_trained", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |qv AS (SELECT q AS v FROM emb WHERE vec_id = 0),
         |scored AS (SELECT e.vec_id,
         |  CAST(list_sum(list_transform(range(1, 65), i -> e.q[i] * qv.v[i])) AS DOUBLE) /
@@ -121,18 +232,7 @@ object VectorOps {
     // Random-hyperplane LSH bucketing: 8 sign bits from md5-derived +/-1
     // hyperplane components; bucket histogram (candidate-generation stage).
     Query("qv03_lsh_buckets", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id)
+      s"""WITH $lshBucketCtes
         |SELECT bucket, COUNT(*) AS n_vecs FROM buckets GROUP BY bucket ORDER BY bucket""".stripMargin)) { (s, d) =>
       graft.operators.Similarity
         .lshBuckets(t(s, d, "embeddings"), "embedding", "vec_id",
@@ -144,34 +244,7 @@ object VectorOps {
     // the whole-graph batch shape (one call = one graph), bucket-bounded
     // pair fan-out, exact integer dot products under the oracle.
     Query("qv20_knn_graph", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id),
-        |q AS (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |bc AS (SELECT bucket FROM buckets GROUP BY bucket
-        |  HAVING COUNT(*) <= 10000),
-        |v AS (SELECT b.vec_id, b.bucket, q.q,
-        |    sqrt(CAST(CAST(list_sum(list_transform(q.q, x -> x * x)) AS BIGINT) AS DOUBLE)) AS nrm
-        |  FROM buckets b JOIN bc ON bc.bucket = b.bucket
-        |  JOIN q ON q.vec_id = b.vec_id),
-        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS nbr,
-        |    CAST(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.q[i] * b.q[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cos
-        |  FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |r AS (SELECT src, nbr, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, nbr) AS rank
-        |  FROM pairs)
+      s"""WITH $lshKnnCtes
         |SELECT src, nbr, cos, CAST(rank AS INT) AS rank FROM r WHERE rank <= 5
         |ORDER BY src, rank""".stripMargin)) { (s, d) =>
       graft.operators.Similarity
@@ -182,22 +255,8 @@ object VectorOps {
     // nearest-margin bit flips, exact-cosine re-rank — recall without
     // stacking hash tables.
     Query("qv38_multiprobe", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes
-        |  GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id),
-        |q AS (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
+      s"""WITH $lshBucketCtes,
+        |${quantizedCte("q")},
         |qp AS (SELECT p, CAST(proj AS BIGINT) AS proj FROM signs
         |  WHERE vec_id = 0),
         |qb AS (SELECT CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p)
@@ -258,35 +317,7 @@ object VectorOps {
     // undirected two-hop candidate expansion re-scored with the exact
     // cosine; is_new marks the recall the LSH buckets missed.
     Query("qv37_nn_descent", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes
-        |  GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id),
-        |q AS (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |bc AS (SELECT bucket FROM buckets GROUP BY bucket
-        |  HAVING COUNT(*) <= 10000),
-        |v AS (SELECT b.vec_id, b.bucket, q.q,
-        |    sqrt(CAST(CAST(list_sum(list_transform(q.q, x -> x * x)) AS BIGINT) AS DOUBLE)) AS nrm
-        |  FROM buckets b JOIN bc ON bc.bucket = b.bucket
-        |  JOIN q ON q.vec_id = b.vec_id),
-        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS nbr,
-        |    CAST(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.q[i] * b.q[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cos
-        |  FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |r AS (SELECT src, nbr, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, nbr) AS rank
-        |  FROM pairs),
+      s"""WITH $lshKnnCtes,
         |g AS (SELECT src, nbr FROM r WHERE rank <= 5),
         |planesb AS (SELECT vec_id, p, qe,
         |  CASE WHEN instr('0123456789abcdef', substr(md5('b_' || p || '_' || i), 1, 1)) - 1 < 8
@@ -456,15 +487,8 @@ object VectorOps {
     // IVF index-balance audit: per-cell population of the qv04 coarse
     // cells, empty cells included.
     Query("qv24_ivf_balance", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding,
-        |    e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq
-        | FROM emb),
-        |cents AS (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
-        |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
+      s"""WITH $normedCtes,
+        |$centsCte,
         |assigned AS (SELECT vec_id, cid FROM (
         |  SELECT e.vec_id, c.cid,
         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -486,10 +510,7 @@ object VectorOps {
     // Embedding norm profile: octave histogram of quantized norm^2,
     // zero vectors in bucket 0.
     Query("qv25_norm_profile", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding,
-        |    e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |n AS (SELECT vec_id,
         |  CAST(list_sum(list_transform(range(1, 65), i -> q[i] * q[i]))
         |    AS BIGINT) AS n2
@@ -507,35 +528,7 @@ object VectorOps {
     // Label-noise screen: majority-disagreeing k-NN neighborhoods flag
     // suspect labels, per label.
     Query("qv26_label_noise", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes
-        |  GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id),
-        |q AS (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |bc AS (SELECT bucket FROM buckets GROUP BY bucket
-        |  HAVING COUNT(*) <= 10000),
-        |v AS (SELECT b.vec_id, b.bucket, q.q,
-        |    sqrt(CAST(CAST(list_sum(list_transform(q.q, x -> x * x)) AS BIGINT) AS DOUBLE)) AS nrm
-        |  FROM buckets b JOIN bc ON bc.bucket = b.bucket
-        |  JOIN q ON q.vec_id = b.vec_id),
-        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS nbr,
-        |    CAST(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.q[i] * b.q[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cos
-        |  FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |r AS (SELECT src, nbr, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, nbr) AS rank
-        |  FROM pairs),
+      s"""WITH $lshKnnCtes,
         |g AS (SELECT src, nbr FROM r WHERE rank <= 5),
         |lb AS (SELECT vec_id, CAST(label AS BIGINT) AS lbl FROM embeddings),
         |per AS (SELECT g.src, ls.lbl AS ls, CAST(COUNT(*) AS BIGINT) AS n_nbrs,
@@ -581,15 +574,11 @@ object VectorOps {
     // IVF cost/recall curve: scanned share and recall@10 at nprobe
     // 1/2/4/8 over the qv04 coarse cells.
     Query("qv34_ivf_probe_sweep", Some(
-      """WITH emb AS (SELECT vec_id,
-        |    list_transform(embedding,
-        |      e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |nemb AS (SELECT vec_id, q,
         |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qq
         |  FROM emb),
-        |cents AS (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
-        |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
+        |$centsCte,
         |assigned AS (SELECT vec_id, q, qq, cid FROM (
         |  SELECT e.vec_id, e.q, e.qq, c.cid,
         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
@@ -652,10 +641,7 @@ object VectorOps {
     // Matryoshka truncation sweep: retained energy + recall@10 when the
     // index serves only the first 8/16/32/64 dims.
     Query("qv33_mrl_truncation", Some(
-      """WITH emb AS (SELECT vec_id,
-        |    list_transform(embedding,
-        |      e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |nemb AS (SELECT vec_id, q,
         |    CAST(list_sum(list_transform(q, x -> x * x)) AS BIGINT) AS qq
         |  FROM emb),
@@ -754,35 +740,7 @@ object VectorOps {
     // k-NN hubness: in-degree histogram of the qv20 graph including the
     // never-retrieved zero bucket — the retrieval-health screen.
     Query("qv30_hubness", Some(
-      """WITH el AS (SELECT vec_id, CAST(i - 1 AS INT) AS i, q[i] AS qe
-        | FROM (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings), unnest(range(1, 65)) t(i)),
-        |planes AS (SELECT vec_id, p, qe,
-        |  CASE WHEN instr('0123456789abcdef', substr(md5(p || '_' || i), 1, 1)) - 1 < 8
-        |    THEN 1 ELSE -1 END AS comp
-        | FROM el, (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p)),
-        |signs AS (SELECT vec_id, p, SUM(comp * qe) AS proj FROM planes
-        |  GROUP BY vec_id, p),
-        |buckets AS (SELECT vec_id,
-        |  CAST(SUM(CASE WHEN proj >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS bucket
-        | FROM signs GROUP BY vec_id),
-        |q AS (SELECT vec_id,
-        |   list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |bc AS (SELECT bucket FROM buckets GROUP BY bucket
-        |  HAVING COUNT(*) <= 10000),
-        |v AS (SELECT b.vec_id, b.bucket, q.q,
-        |    sqrt(CAST(CAST(list_sum(list_transform(q.q, x -> x * x)) AS BIGINT) AS DOUBLE)) AS nrm
-        |  FROM buckets b JOIN bc ON bc.bucket = b.bucket
-        |  JOIN q ON q.vec_id = b.vec_id),
-        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS nbr,
-        |    CAST(CAST(list_sum(list_transform(range(1, 65),
-        |      i -> a.q[i] * b.q[i])) AS BIGINT) AS DOUBLE) / (a.nrm * b.nrm) AS cos
-        |  FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |r AS (SELECT src, nbr, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY src ORDER BY cos DESC, nbr) AS rank
-        |  FROM pairs),
+      s"""WITH $lshKnnCtes,
         |g AS (SELECT src, nbr FROM r WHERE rank <= 5),
         |ind AS (SELECT e.vec_id AS id, COALESCE(c.cnt, 0) AS in_degree
         |  FROM embeddings e LEFT JOIN (SELECT nbr,
@@ -800,11 +758,7 @@ object VectorOps {
     // Bands data-scaled for the synthetic near-random corpus (best-cos
     // tops out ~0.40 here; production defaults are 0.95/0.99).
     Query("qv36_embedding_decontam", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |panel AS (SELECT q AS eq, qq AS ecc FROM nemb WHERE vec_id % 97 = 0),
         |best AS (SELECT e.vec_id,
         |    MAX(CAST(FLOOR(CAST(list_sum(list_transform(range(1, 65),
@@ -826,11 +780,7 @@ object VectorOps {
     // qv22 asks "labels agree?", qv28 "members resemble the centroid?",
     // this asks "are the cells distinct from EACH OTHER?".
     Query("qv35_silhouette", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |cents AS (SELECT vec_id AS cid, q AS cq,
         |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS cc
         |  FROM nemb WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
@@ -866,11 +816,7 @@ object VectorOps {
     // their centroid (worst + summed cos ppm) — qv24's balance audit
     // answers "even cells?", this answers "representative centroids?".
     Query("qv28_coreset_coverage", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |cents AS (SELECT vec_id AS cid, q AS cq,
         |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS cc
         |  FROM nemb WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
@@ -897,11 +843,7 @@ object VectorOps {
     // PQ reconstruction distortion: the relative L2² energy the m=8
     // encoding throws away, one corpus scan, one row.
     Query("qv29_pq_distortion", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |cents AS (SELECT q AS cq FROM nemb WHERE vec_id % 53 = 0
         |  ORDER BY vec_id LIMIT 64),
         |sd AS (SELECT e.vec_id, s.j,
@@ -945,29 +887,7 @@ object VectorOps {
     // id-sample centroid per 8-dim subvector, native pq_encode kernel);
     // query scored via an inlined asymmetric-distance LUT — per-row
     // arithmetic over codes, no vector touched at query time.
-    Query("qv10_pq_ann", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |cents AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, q AS cq
-        |  FROM (SELECT vec_id, q FROM emb WHERE vec_id % 53 = 0
-        |        ORDER BY vec_id LIMIT 64)),
-        |codes AS (SELECT vec_id, j, c AS code FROM (
-        |  SELECT e.vec_id, s.j, ct.c,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id, s.j ORDER BY
-        |      list_sum(list_transform(range(1, 9), t ->
-        |        (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]) * (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]))), ct.c) AS rn
-        |  FROM emb e, (SELECT unnest(range(0, 8)) AS j) s, cents ct) WHERE rn = 1),
-        |query AS (SELECT q AS xq FROM emb WHERE vec_id = 0),
-        |lut AS (SELECT s.j, ct.c,
-        |    CAST(list_sum(list_transform(range(1, 9), t ->
-        |      (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]) * (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]))) AS BIGINT) AS d2
-        |  FROM (SELECT unnest(range(0, 8)) AS j) s, cents ct, query),
-        |adist AS (SELECT cd.vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
-        |  FROM codes cd JOIN lut l ON l.j = cd.j AND l.c = cd.code
-        |  GROUP BY cd.vec_id)
-        |SELECT vec_id, adist FROM adist WHERE vec_id <> 0
-        |ORDER BY adist, vec_id LIMIT 12""".stripMargin)) { (s, d) =>
+    Query("qv10_pq_ann", Some(pqAdcOracle("WHERE vec_id % 53 = 0"))) { (s, d) =>
       graft.operators.Similarity.pqTopK(
         t(s, d, "embeddings"), "embedding", "vec_id", queryId = 0L,
         k = 12, m = 8, sampleMod = 53, maxCentroids = 64)
@@ -1001,11 +921,7 @@ object VectorOps {
     // IVF+PQ (FAISS IVFPQ shape): coarse cells filter to nprobe=3,
     // PQ ADC scores only the probed cells — index = (cell, 8 codes)/vec.
     Query("qv12_ivfpq", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |cents AS (SELECT cid, cq, cc, ROW_NUMBER() OVER (ORDER BY cid) - 1 AS c
         |  FROM (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
         |        WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64)),
@@ -1043,28 +959,7 @@ object VectorOps {
     // nCodes >= trainRows invariance (every training point its own
     // center, in id order => deterministic, SQL-expressible ADC); the
     // partial-K trained path is spec-anchored on clustered data.
-    Query("qv13_pq_trained", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |cents AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS c, q AS cq
-        |  FROM (SELECT vec_id, q FROM emb ORDER BY vec_id LIMIT 64)),
-        |codes AS (SELECT vec_id, j, c AS code FROM (
-        |  SELECT e.vec_id, s.j, ct.c,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id, s.j ORDER BY
-        |      list_sum(list_transform(range(1, 9), t ->
-        |        (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]) * (e.q[s.j*8 + t] - ct.cq[s.j*8 + t]))), ct.c) AS rn
-        |  FROM emb e, (SELECT unnest(range(0, 8)) AS j) s, cents ct) WHERE rn = 1),
-        |query AS (SELECT q AS xq FROM emb WHERE vec_id = 0),
-        |lut AS (SELECT s.j, ct.c,
-        |    CAST(list_sum(list_transform(range(1, 9), t ->
-        |      (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]) * (query.xq[s.j*8 + t] - ct.cq[s.j*8 + t]))) AS BIGINT) AS d2
-        |  FROM (SELECT unnest(range(0, 8)) AS j) s, cents ct, query),
-        |adist AS (SELECT cd.vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
-        |  FROM codes cd JOIN lut l ON l.j = cd.j AND l.c = cd.code
-        |  GROUP BY cd.vec_id)
-        |SELECT vec_id, adist FROM adist WHERE vec_id <> 0
-        |ORDER BY adist, vec_id LIMIT 12""".stripMargin)) { (s, d) =>
+    Query("qv13_pq_trained", Some(pqAdcOracle(""))) { (s, d) =>
       graft.operators.Similarity.pqTopKTrained(
         t(s, d, "embeddings"), "embedding", "vec_id", queryId = 0L,
         k = 12, m = 8, nCodes = 64, trainRows = 64)
@@ -1074,42 +969,12 @@ object VectorOps {
     // Deterministic variant: capped id-sample cells + first-64-residual
     // codebook, replayed exactly by the oracle.
     Query("qv14_ivfpq_residual", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
-        |cents AS (SELECT vec_id AS cid, q AS cq, qq AS cc FROM nemb
-        |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
-        |assigned AS (SELECT vec_id AS id, q, cid, cq FROM (
-        |  SELECT e.vec_id, e.q, ct.cid, ct.cq,
-        |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-        |      e.qq + ct.cc - 2 * list_sum(list_transform(range(1, 65), i -> e.q[i] * ct.cq[i])),
-        |      ct.cid) AS rn
-        |  FROM nemb e, cents ct) WHERE rn = 1),
-        |resid AS (SELECT id, cid,
-        |  list_transform(range(1, 65), i -> q[i] - cq[i]) AS r FROM assigned),
+      s"""WITH $normedCtes,
+        |$centsCte,
+        |$residualAssignCtes,
         |cb AS (SELECT ROW_NUMBER() OVER (ORDER BY id) - 1 AS c, r AS cr
         |  FROM (SELECT id, r FROM resid ORDER BY id LIMIT 64)),
-        |query AS (SELECT q AS xq, qq AS xqq FROM nemb WHERE vec_id = 0),
-        |probed AS (SELECT cid, cq FROM cents, query
-        |  ORDER BY xqq + cc - 2 * list_sum(list_transform(range(1, 65), i -> cq[i] * xq[i])), cid
-        |  LIMIT 3),
-        |codes AS (SELECT id, cid, j, c AS code FROM (
-        |  SELECT t.id, t.cid, s.j, cb.c,
-        |    ROW_NUMBER() OVER (PARTITION BY t.id, s.j ORDER BY
-        |      list_sum(list_transform(range(1, 9), u ->
-        |        (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]) * (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]))), cb.c) AS rn
-        |  FROM resid t JOIN probed USING (cid), (SELECT unnest(range(0, 8)) AS j) s, cb) WHERE rn = 1),
-        |lut AS (SELECT p.cid, s.j, cb.c,
-        |    CAST(list_sum(list_transform(range(1, 9), u ->
-        |      (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u])
-        |      * (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u]))) AS BIGINT) AS d2
-        |  FROM (SELECT unnest(range(0, 8)) AS j) s, cb, probed p, query)
-        |SELECT cd.id AS vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
-        |FROM codes cd JOIN lut l ON l.cid = cd.cid AND l.j = cd.j AND l.c = cd.code
-        |WHERE cd.id <> 0
-        |GROUP BY cd.id ORDER BY adist, vec_id LIMIT 10""".stripMargin)) { (s, d) =>
+        |$residualAdcTail""".stripMargin)) { (s, d) =>
       graft.operators.Similarity.ivfPqTopKResidual(
         t(s, d, "embeddings"), "embedding", "vec_id", queryId = 0L,
         k = 10, m = 8, sampleMod = 53, nprobe = 3, maxCentroids = 64,
@@ -1122,9 +987,7 @@ object VectorOps {
     // (correctly-rounded IEEE division + half-away rounding in both
     // engines), so the oracle replays the quantization bit-for-bit.
     Query("qv16_sq_ann", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |sc AS (SELECT vec_id, q,
         |  GREATEST(1, CAST(ceil(CAST(list_max(list_transform(q, e -> abs(e))) AS DOUBLE) / 127.0) AS BIGINT)) AS scale
         | FROM emb),
@@ -1146,11 +1009,7 @@ object VectorOps {
     // id-sample centroids, within-cell cosine >= tau evicts the higher
     // id. Output = dropped rows with their retained representative.
     Query("qv09_semantic_dedup", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
-        |nemb AS (SELECT vec_id, q,
-        |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+      s"""WITH $normedCtes,
         |cents AS (SELECT vec_id AS cid, q AS cq FROM nemb
         |  WHERE vec_id % 53 = 0 ORDER BY vec_id LIMIT 64),
         |assigned AS (SELECT vec_id AS id, q, SQRT(CAST(qq AS DOUBLE)) AS nrm, cid FROM (
@@ -1184,9 +1043,7 @@ object VectorOps {
     // coin (seed 7, 16x64), exact BIGINT projections, double only in the
     // final cosine ratio — same a / (b * c) association as the operator.
     Query("qv18_jl_project", Some(
-      """WITH emb AS (SELECT vec_id,
-        |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        | FROM embeddings),
+      s"""WITH ${quantizedCte()},
         |r AS MATERIALIZED (SELECT j, list_transform(range(0, 64), i ->
         |    CASE WHEN instr('0123456789abcdef', substr(md5(7 || '_' || j || '_' || i), 1, 1)) - 1 < 8
         |      THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END) AS comp
@@ -1215,9 +1072,7 @@ object VectorOps {
     // buckets -> within-bucket scaled-cosine candidates -> top-k sums ->
     // integer ratio margin -> best-margin b per a
     Query("qv19_bitext_mining", Some(
-      """WITH q AS (SELECT vec_id,
-        |    list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-        |  FROM embeddings),
+      s"""WITH ${quantizedCte("q")},
         |q2 AS (SELECT vec_id, q,
         |    CAST(list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS BIGINT) AS qq
         |  FROM q),
@@ -1288,43 +1143,14 @@ object VectorOps {
     def row(id: Long, v: Array[Long]) = s"($id, ${v.mkString("[", ",", "]")})"
     val cents = cids.zip(cb0).map { case (c, v) => row(c, v) }.mkString(", ")
     val cb = cbRows.zipWithIndex.map { case (v, c) => row(c.toLong, v) }.mkString(", ")
-    s"""WITH emb AS (SELECT vec_id,
-       |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-       | FROM embeddings),
-       |nemb AS (SELECT vec_id, q,
-       |  list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS qq FROM emb),
+    s"""WITH $normedCtes,
        |cents0(cid, cq0) AS (VALUES $cents),
        |cents AS (SELECT cid, list_transform(cq0, e -> CAST(e AS BIGINT)) AS cq,
        |  list_sum(list_transform(cq0, e -> CAST(e AS BIGINT) * e)) AS cc FROM cents0),
        |cb0(c, cr0) AS (VALUES $cb),
        |cb AS (SELECT c, list_transform(cr0, e -> CAST(e AS BIGINT)) AS cr FROM cb0),
-       |assigned AS (SELECT vec_id AS id, q, cid, cq FROM (
-       |  SELECT e.vec_id, e.q, ct.cid, ct.cq,
-       |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-       |      e.qq + ct.cc - 2 * list_sum(list_transform(range(1, 65), i -> e.q[i] * ct.cq[i])),
-       |      ct.cid) AS rn
-       |  FROM nemb e, cents ct) WHERE rn = 1),
-       |resid AS (SELECT id, cid,
-       |  list_transform(range(1, 65), i -> q[i] - cq[i]) AS r FROM assigned),
-       |query AS (SELECT q AS xq, qq AS xqq FROM nemb WHERE vec_id = 0),
-       |probed AS (SELECT cid, cq FROM cents, query
-       |  ORDER BY xqq + cc - 2 * list_sum(list_transform(range(1, 65), i -> cq[i] * xq[i])), cid
-       |  LIMIT 3),
-       |codes AS (SELECT id, cid, j, c AS code FROM (
-       |  SELECT t.id, t.cid, s.j, cb.c,
-       |    ROW_NUMBER() OVER (PARTITION BY t.id, s.j ORDER BY
-       |      list_sum(list_transform(range(1, 9), u ->
-       |        (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]) * (t.r[s.j*8 + u] - cb.cr[s.j*8 + u]))), cb.c) AS rn
-       |  FROM resid t JOIN probed USING (cid), (SELECT unnest(range(0, 8)) AS j) s, cb) WHERE rn = 1),
-       |lut AS (SELECT p.cid, s.j, cb.c,
-       |    CAST(list_sum(list_transform(range(1, 9), u ->
-       |      (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u])
-       |      * (query.xq[s.j*8 + u] - p.cq[s.j*8 + u] - cb.cr[s.j*8 + u]))) AS BIGINT) AS d2
-       |  FROM (SELECT unnest(range(0, 8)) AS j) s, cb, probed p, query)
-       |SELECT cd.id AS vec_id, CAST(SUM(l.d2) AS BIGINT) AS adist
-       |FROM codes cd JOIN lut l ON l.cid = cd.cid AND l.j = cd.j AND l.c = cd.code
-       |WHERE cd.id <> 0
-       |GROUP BY cd.id ORDER BY adist, vec_id LIMIT 10""".stripMargin
+       |$residualAssignCtes,
+       |$residualAdcTail""".stripMargin
   }
 
   /** The qv17 oracle: the identical greedy MMR selection unrolled as one
@@ -1347,9 +1173,7 @@ object VectorOps {
          |  ORDER BY mmr DESC, p.vec_id LIMIT 1),
          |sel$t AS MATERIALIZED (SELECT * FROM sel${t - 1} UNION ALL SELECT * FROM s$t)""".stripMargin
     }.mkString(",\n")
-    s"""WITH emb AS (SELECT vec_id,
-       |  list_transform(embedding, e -> CAST(round(CAST(e AS DOUBLE) * 10000) AS BIGINT)) AS q
-       | FROM embeddings),
+    s"""WITH ${quantizedCte()},
        |nrm AS (SELECT vec_id, q,
        |  SQRT(CAST(list_sum(list_transform(range(1, 65), i -> q[i] * q[i])) AS DOUBLE)) AS n
        | FROM emb),

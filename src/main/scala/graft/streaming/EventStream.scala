@@ -85,7 +85,7 @@ object EventStream {
       if (streaming) withTs(events).withWatermark("ets", s"$gapMinutes minutes")
       else withTs(events)
     val typed = withW.select(
-      col("user_id"), unix_micros(col("ets")).as("etsMicros"), col("value"),
+      col("user_id"), col("ts").as("etsMicros"), col("value"),
       col("ets")).as[EventIn]
 
     def fn(userId: Long, rows: Iterator[EventIn],
@@ -167,8 +167,8 @@ object EventStream {
     val t = if (events.isStreaming)
       t0.withWatermark("ets", s"$gapMinutes minutes") else t0
     t.groupBy(col("user_id"), session_window(col("ets"), s"$gapMinutes minutes"))
-      .agg(min(unix_micros(col("ets"))).as("start_us"),
-        max(unix_micros(col("ets"))).as("end_us"),
+      .agg(min(col("ts")).as("start_us"),
+        max(col("ts")).as("end_us"),
         count(lit(1)).as("n_events"))
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
@@ -225,7 +225,7 @@ object EventStream {
     val typed = withW
       .filter(col("event_type").isin(stages: _*))
       .select(col("user_id"), col("event_type"),
-        unix_micros(col("ets")).as("etsMicros"), col("ets"))
+        col("ts").as("etsMicros"), col("ets"))
       .as[FunnelEvent]
 
     def fn(userId: Long, rows: Iterator[FunnelEvent],
@@ -310,8 +310,7 @@ object EventStream {
     val base = withTs(events)
     val withW = if (streaming) base.withWatermark("ets", lateness) else base
     val typed = withW.select(
-        (unix_micros(col("ets")) - pmod(unix_micros(col("ets")), lit(winUs)))
-          .as("wstartUs"),
+        (col("ts") - pmod(col("ts"), lit(winUs))).as("wstartUs"),
         md5(col(valueCol).cast("string")).as("h"),
         col("ets")) // the watermark column must survive into the grouping
       .as[KmvWinEvent]
@@ -412,8 +411,7 @@ object EventStream {
       (conv(substring(md5(concat(lit(s"c${i}_"), col(valueCol).cast("string"))),
         1, 13), 16, 10).cast("long") % width).cast("int")
     val typed = withW.select(
-        (unix_micros(col("ets")) - pmod(unix_micros(col("ets")), lit(winUs)))
-          .as("wstartUs"),
+        (col("ts") - pmod(col("ts"), lit(winUs))).as("wstartUs"),
         bucket(0).as("b0"), bucket(1).as("b1"),
         col("ets")) // the watermark column must survive into the grouping
       .as[CmsWinEvent]
@@ -472,7 +470,7 @@ object EventStream {
       val base = withTs(events).filter(col("event_type") === tpe)
       val w = if (streaming) base.withWatermark("ets", lateness) else base
       w.select(col("user_id").as(s"${tag}_uid"), col("ets").as(s"${tag}_ets"),
-        unix_micros(col("ets")).as(s"${tag}_us"), col("value").as(s"${tag}_value"))
+        col("ts").as(s"${tag}_us"), col("value").as(s"${tag}_value"))
     }
     side(leftType, "l").join(side(rightType, "r"),
         col("l_uid") === col("r_uid") &&
@@ -505,7 +503,7 @@ object EventStream {
       val base = withTs(events).filter(col("event_type") === tpe)
       val w = if (streaming) base.withWatermark("ets", lateness) else base
       w.select(col("user_id").as(s"${tag}_uid"), col("ets").as(s"${tag}_ets"),
-        unix_micros(col("ets")).as(s"${tag}_us"), col("value").as(s"${tag}_value"))
+        col("ts").as(s"${tag}_us"), col("value").as(s"${tag}_value"))
     }
     side(leftType, "l").join(side(rightType, "r"),
         col("l_uid") === col("r_uid") &&
