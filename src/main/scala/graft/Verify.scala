@@ -3,6 +3,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Registered queries checked by their rows alone, with no oracle. */
+  private val RowsOnly = Set("qx01_sketches")
+
+  /** Every registered query that is neither rows-only nor in `oracles`. */
+  def missingOracles(oracles: Map[String, String]): Seq[String] =
+    SparkEntry.queries.keys.filterNot(n => oracles.contains(n) || RowsOnly(n))
+      .toSeq.sorted
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [querySubstr...]")
     val (sfDir, outDir) = (args(0), args(1))
@@ -37,7 +45,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val oracles = SparkEntry.oracleSql
+    // a query the compare cannot check is a failure too (qv15's oracle is
+    // generated only by running qv15 in this JVM)
+    missingOracles(oracles).foreach { name =>
+      errors.getOrElseUpdate(name, "no oracle SQL in oracle_sql.json")
+    }
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Self-describing failure record — {} when everything ran, so its

@@ -832,7 +832,7 @@ object Multimodal {
       // OGG container (RFC 3533): "OggS" pages — 27-byte header
       // (version, header-type flags, granule, serial, sequence, CRC,
       // segment count) + segment table + payload. The metadata packet is
-      // the VorbisComment: "vorbis" (Vorbis comment header) or
+      // the VorbisComment: 0x03 "vorbis" (Vorbis comment header) or
       // "OpusTags" (Opus) at a fresh packet boundary — vendor string +
       // user-comment list, parsed to the COUNT. Header-resident (the
       // comment header rides the first pages), so the 64 KiB cap

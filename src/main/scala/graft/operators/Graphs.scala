@@ -9,6 +9,21 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
+  /** Each undirected edge of `edges0` once, as longs `u < v`; self-loops
+    * and null endpoints dropped. */
+  private def canonicalEdges(edges0: DataFrame, aCol: String,
+      bCol: String): DataFrame =
+    edges0
+      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
+        greatest(col(aCol), col(bCol)).cast("long").as("v"))
+      .filter(col("u") =!= col("v") && col("u").isNotNull)
+      .distinct()
+
+  /** [[canonicalEdges]] in both directions, as columns (`a`, `b`). */
+  private def bothWays(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(col("u").as(a), col("v").as(b))
+      .unionAll(edges.select(col("v").as(a), col("u").as(b)))
+
   /** Exact triangle statistics via degree-ordered edge orientation (Suri
     * & Vassilvitskii 2011, "Counting triangles and the curse of the last
     * reducer", WWW '11): orient every edge from its lower (degree, id)
@@ -62,11 +77,7 @@ object Graphs {
     * degree-ordered oriented wedges carrying their apex `s`. */
   private def orientedWedges(edges0: DataFrame, aCol: String,
       bCol: String): (DataFrame, DataFrame, DataFrame) = {
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
     val deg = edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -121,11 +132,7 @@ object Graphs {
         .groupBy(col("e.u").as("u"), col("e.v").as("v"))
         .agg(count(lit(1)).as("support"))
     }
-    var cur = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    var cur = canonicalEdges(edges0, aCol, bCol)
       .localCheckpoint(true)
     var i = 0
     var converged = false
@@ -175,14 +182,9 @@ object Graphs {
   def pageRank(edges0: DataFrame, aCol: String, bCol: String,
       iters: Int = 5, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
     // directed both ways + out-degree, built once, scanned every round
-    val dir = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
+    val dir = bothWays(edges, "src", "dst")
     val outdeg = dir.groupBy("src").agg(count(lit(1)).as("d"))
     val dirDeg = dir.join(outdeg.hint("shuffle_hash"), "src").persist()
     val nodes = outdeg.select(col("src").as("n"))
@@ -223,13 +225,8 @@ object Graphs {
       seeds: DataFrame, seedCol: String, iters: Int = 5,
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-    val dir = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
+    val edges = canonicalEdges(edges0, aCol, bCol)
+    val dir = bothWays(edges, "src", "dst")
     val outdeg = dir.groupBy("src").agg(count(lit(1)).as("d"))
     val dirDeg = dir.join(outdeg.hint("shuffle_hash"), "src").persist()
     val nodes = outdeg.select(col("src").as("n"))
@@ -277,13 +274,8 @@ object Graphs {
   def labelPropagation(edges0: DataFrame, aCol: String, bCol: String,
       iters: Int = 5): DataFrame = {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-    val dir = edges.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
+    val edges = canonicalEdges(edges0, aCol, bCol)
+    val dir = bothWays(edges, "src", "dst")
       .persist()
     var labels = dir.select(col("src").as("n")).distinct()
       .select(col("n"), col("n").as("lbl"))
@@ -320,11 +312,7 @@ object Graphs {
       rounds: Int = 5): DataFrame = {
     require(k >= 1, s"k >= 1: $k")
     require(rounds >= 1 && rounds <= 50, s"rounds out of range: $rounds")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
       .persist()
     def degIn(alive: DataFrame): DataFrame = {
       // no join-strategy hint: `alive` is a localCheckpoint'ed vertex
@@ -380,13 +368,8 @@ object Graphs {
       scale: Long = 1000000L, maxDeg: Int = 64): DataFrame = {
     require(maxDeg >= 2, s"maxDeg >= 2: $maxDeg")
     require(scale >= 1 && scale <= 1000000000000L, s"scale out of range: $scale")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-    val dir = edges.select(col("u").as("z"), col("v").as("n"))
-      .unionAll(edges.select(col("v").as("z"), col("u").as("n")))
+    val edges = canonicalEdges(edges0, aCol, bCol)
+    val dir = bothWays(edges, "z", "n")
     val deg = dir.groupBy("z").agg(count(lit(1)).as("deg"))
     val nbrs = dir.join(deg.filter(col("deg") <= maxDeg), "z")
     nbrs.as("x").join(nbrs.as("y"),
@@ -561,11 +544,7 @@ object Graphs {
       assign: DataFrame, nodeCol: String, commCol: String,
       scale: Long = 1000000L): DataFrame = {
     require(scale >= 1 && scale <= 1000000000L, s"scale out of range: $scale")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
     val asg = assign.select(col(nodeCol).cast("long").as("n"),
       col(commCol).cast("long").as("c")).distinct()
     val m = broadcast(edges.agg(count(lit(1)).as("m")))
@@ -621,18 +600,13 @@ object Graphs {
     // branches, both adj branches, AND [[modularity]]'s internal edge/
     // degree pipelines — the executed plan re-ran the input self-join
     // ~10x (125 parquet scans / 436 Exchanges in qg21's final plan)
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
       .localCheckpoint()
     val m = broadcast(edges.agg(count(lit(1)).as("m")))
     val deg = edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
-    val adj = edges.select(col("u").as("i"), col("v").as("j"))
-      .unionAll(edges.select(col("v").as("i"), col("u").as("j")))
+    val adj = bothWays(edges, "i", "j")
       .join(deg.select(col("n").as("j"), col("deg").as("kj"))
         .hint("shuffle_hash"), "j")
     val w = org.apache.spark.sql.expressions.Window
@@ -790,13 +764,8 @@ object Graphs {
     * edges. */
   def degreeAssortativity(edges0: DataFrame, aCol: String,
       bCol: String): DataFrame = {
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-    val ori = edges.select(col("u").as("s"), col("v").as("t"))
-      .unionAll(edges.select(col("v").as("s"), col("u").as("t")))
+    val edges = canonicalEdges(edges0, aCol, bCol)
+    val ori = bothWays(edges, "s", "t")
     val deg = ori.groupBy(col("s").as("n")).agg(count(lit(1)).as("d"))
     ori
       .join(deg.select(col("n").as("s"), col("d").as("x")), Seq("s"))
@@ -832,11 +801,7 @@ object Graphs {
     // pipeline — is consumed THREE times (volumes + both cut-join sides).
     // Left lazy, the propagation subtree executed 3x per query and the
     // executed plan was ~400 KB of repeated lineage (guide §2.4).
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
       .localCheckpoint()
     // propagate over the SAME materialized canonical edge list (least/
     // greatest/distinct re-canonicalization is idempotent on it), not the
@@ -884,11 +849,7 @@ object Graphs {
       keepPpm: Long = 500000L): DataFrame = {
     require(keepPpm >= 0 && keepPpm <= 1000000L,
       s"keepPpm out of range: $keepPpm")
-    val edges = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val edges = canonicalEdges(edges0, aCol, bCol)
     val sampled = edges.filter(
       conv(substring(md5(concat(lit("es_"), col("u").cast("string"),
         lit("_"), col("v").cast("string"))), 1, 13), 16, 10)
@@ -970,15 +931,10 @@ object Graphs {
     require(len >= 1 && len <= 16, s"len out of range: $len")
     require(walksPerNode >= 1 && walksPerNode <= 64,
       s"walksPerNode out of range: $walksPerNode")
-    val canon = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
+    val canon = canonicalEdges(edges0, aCol, bCol)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy("t")
-    val adj = canon.select(col("u").as("s"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("s"), col("u").as("t")))
+    val adj = bothWays(canon, "s", "t")
       .select(col("s"), col("t"), row_number().over(w).as("rn"),
         count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("s"))
@@ -1032,13 +988,8 @@ object Graphs {
       s"walksPerNode out of range: $walksPerNode")
     require(wReturn >= 1 && wCommon >= 1 && wOut >= 1,
       s"weights must be positive: $wReturn/$wCommon/$wOut")
-    val canon = edges0
-      .select(least(col(aCol), col(bCol)).cast("long").as("u"),
-        greatest(col(aCol), col(bCol)).cast("long").as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull)
-      .distinct()
-    val adj = canon.select(col("u").as("s"), col("v").as("t"))
-      .unionAll(canon.select(col("v").as("s"), col("u").as("t")))
+    val canon = canonicalEdges(edges0, aCol, bCol)
+    val adj = bothWays(canon, "s", "t")
     val flag = adj.select(col("s").as("fp"), col("t").as("ft"),
       lit(true).as("prev_adj"))
     val start = adj.select(col("s").as("seed")).distinct()

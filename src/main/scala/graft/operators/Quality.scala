@@ -1415,7 +1415,7 @@ object Quality {
     require(l >= 2 && l <= 1000000, s"l out of range: $l")
     val cells = df
       .withColumn("__sv", coalesce(col(sensitiveCol).cast("string"),
-        lit("null")))
+        lit("\u0001null")))
       .groupBy((quasiCols.map(col) :+ col("__sv")): _*)
       .agg(count(lit(1)).as("cnt"))
     val groups = cells.groupBy(quasiCols.map(col): _*)
@@ -1496,7 +1496,7 @@ object Quality {
     * (t_ppm, n_rows, n_groups, weak_groups, rows_at_risk, max_emd_ppm).
     *
     * NULLs: the sensitive value AND every quasi column coalesce to a
-    * null sentinel (the qq25 lesson, and here quasi NULLs would
+    * \u0001null sentinel (the qq25 lesson, and here quasi NULLs would
     * otherwise silently miss the grid join's null-unsafe equality and
     * inflate every EMD).
     *

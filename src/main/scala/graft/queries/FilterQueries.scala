@@ -14,6 +14,25 @@ import org.apache.spark.sql.types.{MapType, StringType}
 object FilterQueries {
   import Relational.t
 
+  /** The README's Rio job bbox (README.md:22-31). */
+  private val rio = BBox(-44.4836, -23.0266, -43.4127, -22.5856)
+
+  /** p → r → xs → ys: the z13 tile columns `x` and rows `y` covering
+    * [[rio]], by the Web-Mercator formula of `TileEnumeration.tiles`.
+    * No trailing comma. */
+  private def rioTileCtes: String =
+    """p AS (
+      |  SELECT -44.4836 AS w, -23.0266 AS s, -43.4127 AS e, -22.5856 AS n,
+      |         CAST(POW(2, 13) AS DOUBLE) AS z2),
+      |r AS (SELECT
+      |  CAST(FLOOR((w/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x0,
+      |  CAST(FLOOR(((e - 1e-11)/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x1,
+      |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(n)))/(1-SIN(RADIANS(n))))/PI() + 1e-14) * z2) AS INT) AS y0,
+      |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(s + 1e-11)))/(1-SIN(RADIANS(s + 1e-11))))/PI() + 1e-14) * z2) AS INT) AS y1
+      |  FROM p),
+      |xs AS (SELECT CAST(unnest(generate_series(x0, x1)) AS INT) AS x FROM r),
+      |ys AS (SELECT CAST(unnest(generate_series(y0, y1)) AS INT) AS y FROM r)""".stripMargin
+
   /** events.props JSON + event_type/value lifted into the engine's
     * map<string,string> feature-property form. */
   private def eventFeatures(s: SparkSession, d: String): DataFrame =
@@ -87,65 +106,33 @@ object FilterQueries {
     // expressed in SQL (generate_series) — verifies the distributed generator
     // and the mercantile-parity math without any HTTP dependency.
     Query("qt01_tile_enum", Some(
-      """WITH p AS (
-        |  SELECT -44.4836 AS w, -23.0266 AS s, -43.4127 AS e, -22.5856 AS n,
-        |         CAST(POW(2, 13) AS DOUBLE) AS z2),
-        |r AS (SELECT
-        |  CAST(FLOOR((w/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x0,
-        |  CAST(FLOOR(((e - 1e-11)/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x1,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(n)))/(1-SIN(RADIANS(n))))/PI() + 1e-14) * z2) AS INT) AS y0,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(s + 1e-11)))/(1-SIN(RADIANS(s + 1e-11))))/PI() + 1e-14) * z2) AS INT) AS y1
-        |  FROM p),
-        |xs AS (SELECT CAST(unnest(generate_series(x0, x1)) AS INT) AS x FROM r),
-        |ys AS (SELECT CAST(unnest(generate_series(y0, y1)) AS INT) AS y FROM r)
+      s"""WITH $rioTileCtes
         |SELECT 13 AS z, x, y FROM xs, ys ORDER BY x, y""".stripMargin)) { (s, _) =>
       // README.md:22-31 Rio job: zoom 13 -> 312 tiles.
-      TileEnumeration.tiles(s, BBox(-44.4836, -23.0266, -43.4127, -22.5856), 13)
+      TileEnumeration.tiles(s, rio, 13)
         .orderBy("x", "y")
     },
     // Pyramid rollup: the z13 Rio tile set aggregated two zoom levels up
     // (overview generation); each z11 parent counts its covered children.
     Query("qt02_tile_pyramid", Some(
-      """WITH p AS (
-        |  SELECT -44.4836 AS w, -23.0266 AS s, -43.4127 AS e, -22.5856 AS n,
-        |         CAST(POW(2, 13) AS DOUBLE) AS z2),
-        |r AS (SELECT
-        |  CAST(FLOOR((w/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x0,
-        |  CAST(FLOOR(((e - 1e-11)/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x1,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(n)))/(1-SIN(RADIANS(n))))/PI() + 1e-14) * z2) AS INT) AS y0,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(s + 1e-11)))/(1-SIN(RADIANS(s + 1e-11))))/PI() + 1e-14) * z2) AS INT) AS y1
-        |  FROM p),
-        |xs AS (SELECT CAST(unnest(generate_series(x0, x1)) AS INT) AS x FROM r),
-        |ys AS (SELECT CAST(unnest(generate_series(y0, y1)) AS INT) AS y FROM r),
+      s"""WITH $rioTileCtes,
         |tiles AS (SELECT 13 AS z, x, y FROM xs, ys)
         |SELECT CAST(11 AS INT) AS z, CAST(x // 4 AS INT) AS x, CAST(y // 4 AS INT) AS y,
         |  COUNT(*) AS n_children
         |FROM tiles GROUP BY 2, 3 ORDER BY x, y""".stripMargin)) { (s, _) =>
-      TileEnumeration.parentRollup(
-          TileEnumeration.tiles(s, BBox(-44.4836, -23.0266, -43.4127, -22.5856), 13),
-          levels = 2)
+      TileEnumeration.parentRollup(TileEnumeration.tiles(s, rio, 13), levels = 2)
         .orderBy("x", "y")
     },
     // Bing quadkeys: the string form of the Morton interleave — a
     // parent's key is every descendant's prefix (subtree = prefix scan).
     Query("qt03_quadkeys", Some(
-      """WITH p AS (
-        |  SELECT -44.4836 AS w, -23.0266 AS s, -43.4127 AS e, -22.5856 AS n,
-        |         CAST(POW(2, 13) AS DOUBLE) AS z2),
-        |r AS (SELECT
-        |  CAST(FLOOR((w/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x0,
-        |  CAST(FLOOR(((e - 1e-11)/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x1,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(n)))/(1-SIN(RADIANS(n))))/PI() + 1e-14) * z2) AS INT) AS y0,
-        |  CAST(FLOOR((0.5 - 0.25*LN((1+SIN(RADIANS(s + 1e-11)))/(1-SIN(RADIANS(s + 1e-11))))/PI() + 1e-14) * z2) AS INT) AS y1
-        |  FROM p),
-        |xs AS (SELECT CAST(unnest(generate_series(x0, x1)) AS INT) AS x FROM r),
-        |ys AS (SELECT CAST(unnest(generate_series(y0, y1)) AS INT) AS y FROM r),
+      s"""WITH $rioTileCtes,
         |tiles AS (SELECT 13 AS z, x, y FROM xs, ys)
         |SELECT z, x, y,
         |  array_to_string(list_transform(range(13, 0, -1), i ->
         |    CAST(((x >> (i-1)) & 1) + 2*((y >> (i-1)) & 1) AS VARCHAR)), '') AS quadkey
         |FROM tiles ORDER BY x, y""".stripMargin)) { (s, _) =>
-      TileEnumeration.tiles(s, BBox(-44.4836, -23.0266, -43.4127, -22.5856), 13)
+      TileEnumeration.tiles(s, rio, 13)
         .select(col("z"), col("x"), col("y"),
           TileEnumeration.quadkey(13, col("x"), col("y")).as("quadkey"))
         .orderBy("x", "y")

@@ -1,16 +1,26 @@
 package graft.queries
 
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, Replay}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal binary-column plumbing + the streaming windowed aggregation,
   * both verified against the DuckDB oracle. */
 object MediaQueries {
-
-  /** Unique memory-sink names across reps (Bench runs each query 3×). */
-  private val cdcSinkSeq = new java.util.concurrent.atomic.AtomicInteger
   import Relational.{hex52, t}
+
+  /** ev → d → g: each event's session id `sid` per user, a new session
+    * after a gap of more than 30 minutes; the oracle of
+    * `EventStream.sessionize`. No trailing comma. */
+  private def gapSessionCtes: String =
+    """ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+      |d AS (SELECT user_id, us,
+      |  CASE WHEN LAG(us) OVER w IS NULL
+      |         OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
+      | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)),
+      |g AS (SELECT user_id, us,
+      |  SUM(brk) OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
+      | FROM d)""".stripMargin
 
   private def hexv(c: Column): Column = instr(lit("0123456789abcdef"), c) - 1
 
@@ -211,7 +221,7 @@ object MediaQueries {
         "ID3".getBytes("ISO-8859-1") ++ Array[Byte](3, 0, 0) ++
           syncsafe(body.length) ++ body
       }
-      val mp3Priv = tag3(frame34("PRIV", "acme.example u123".getBytes("ISO-8859-1")))
+      val mp3Priv = tag3(frame34("PRIV", "acme.example\u0000u123".getBytes("ISO-8859-1")))
       val mp3Comm = tag3(frame34("COMM", "engdescr".getBytes("ISO-8859-1")))
       val mp3Clean = tag3() // empty tag: declared size 0, clean walk
       // v2.2: 3-char ids, 3-byte big-endian sizes, version byte 2
@@ -295,7 +305,7 @@ object MediaQueries {
     // after WAV/MP3: FLAC metadata-block chains (xiph spec — the
     // VorbisComment text-tag block parsed down to the user-comment
     // COUNT, PICTURE/APPLICATION as binary) and OGG page streams
-    // (RFC 3533 — the "vorbis"/"OpusTags" comment packet at a
+    // (RFC 3533 — the 0x03 "vorbis"/"OpusTags" comment packet at a
     // fresh packet boundary, counted the same way). REAL container
     // bytes injected by doc_id % 6, including an explicitly EMPTY
     // comment list (none, not text) and a truncated block chain.
@@ -590,14 +600,7 @@ object MediaQueries {
     // (sumValue is omitted — a sequential double sum is order-sensitive
     // across engines; boundaries and counts are the semantics.)
     Query("qs02_sessions", Some(
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |d AS (SELECT user_id, us,
-        |  CASE WHEN LAG(us) OVER w IS NULL
-        |         OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |g AS (SELECT user_id, us,
-        |  SUM(brk) OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM d)
+      s"""WITH $gapSessionCtes
         |SELECT user_id, MIN(us) AS start_us, MAX(us) AS end_us,
         | CAST(COUNT(*) AS INT) AS n_events
         |FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin)) { (s, d) =>
@@ -712,14 +715,7 @@ object MediaQueries {
     // surviving pair attributed to the bin of its overlap start (no
     // dedup shuffle). Work per task ∝ rows-per-bin, never sessions².
     Query("qr02_interval_overlap", Some(
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |d AS (SELECT user_id, us,
-        |  CASE WHEN LAG(us) OVER w IS NULL
-        |         OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |g AS (SELECT user_id, us,
-        |  SUM(brk) OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM d),
+      s"""WITH $gapSessionCtes,
         |sess AS (SELECT user_id, MIN(us) AS s, MAX(us) AS e FROM g GROUP BY user_id, sid)
         |SELECT a.user_id AS ua, a.s AS sa, b.user_id AS ub, b.s AS sb,
         | LEAST(a.e, b.e) - GREATEST(a.s, b.s) AS overlap_us
@@ -773,7 +769,7 @@ object MediaQueries {
         .orderBy("user_id")
     },
     // STREAM-STREAM interval join under the oracle (click attribution):
-    // views and clicks filtered from ONE MemoryStream self-join across a
+    // views and clicks filtered from ONE stream and self-joined across a
     // 3-micro-batch replay — watermarked on both sides with the
     // time-range condition that bounds Spark's join state. The oracle is
     // the plain batch interval join; cross-batch pairs are what the
@@ -789,41 +785,18 @@ object MediaQueries {
         | AND c.us >= v.us AND c.us <= v.us + 1800000000
         |ORDER BY v.user_id, left_us, right_us""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("user_id", "event_type", "ts", "value")
           .as[(Long, String, Long, Double)], max = 25000).sortBy(_._3)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Double)]
-      val name = s"qs08_sink_${cdcSinkSeq.incrementAndGet()}"
-      // stream-stream join state = 4 store instances per shuffle
-      // partition per micro-batch; at the session's 32 partitions the
-      // store lifecycle dominates this bounded replay (measured 14.6 s
-      // -> 2.6 s at 4). A production continuous job amortizes store
-      // startup over its lifetime and sizes partitions to throughput —
-      // the replay harness should not pay 32x its data size in stores.
-      // r10: 4 -> 2 (stream-stream joins open 4 stores/partition, the
-      // heaviest store multiplier in the suite; 2 halves it again for a
-      // 20k-row replay whose compute is trivial either way). r11: 2 -> 1
-      // (paired min-of-6 at sf0.1: qs08 4.32 -> 3.22 s, qs18 4.05 ->
-      // 3.76 s) - the replay is a bounded harness; a production job
-      // sizes partitions to throughput, not to this replay.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      try {
-        val q = EventStream.intervalJoin(
-            mem.toDF.toDF("user_id", "event_type", "ts", "value"),
-            "view", "click", windowMinutes = 30)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3),
-            rows.slice(2 * n / 3, n))
-          .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(name).orderBy("user_id", "left_us", "right_us")
+      // a stream-stream join opens 4 state stores per shuffle partition
+      // per micro-batch, the heaviest multiplier in the suite. r10: 4 -> 2;
+      // r11: 2 -> 1 (paired min-of-6 at sf0.1: qs08 4.32 -> 3.22 s, qs18
+      // 4.05 -> 3.76 s).
+      Replay.run(s, rows, Seq("user_id", "event_type", "ts", "value"),
+          Some(1), "append") {
+        EventStream.intervalJoin(_, "view", "click", windowMinutes = 30)
+      }.orderBy("user_id", "left_us", "right_us")
     },
     // STREAM-STREAM LEFT OUTER interval join under the oracle
     // (unattributed-impression accounting): qs08's inner join emits only
@@ -844,35 +817,17 @@ object MediaQueries {
         | AND c.us >= v.us AND c.us <= v.us + 1800000000
         |ORDER BY v.user_id, left_us, right_us""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("user_id", "event_type", "ts", "value")
           .as[(Long, String, Long, Double)], max = 25000).sortBy(_._3)
       val sentinelTs = rows.map(_._3).max + 10L * 24 * 3600 * 1000000L
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Long, Double)]
-      val name = s"qs18_sink_${cdcSinkSeq.incrementAndGet()}"
-      // same state-store economics as qs08: 4 stores/partition for a
-      // stream-stream join; the bounded replay runs at 1 partition (r11
-      // paired measurement, see qs08)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "1")
-      try {
-        val q = EventStream.intervalJoinOuter(
-            mem.toDF.toDF("user_id", "event_type", "ts", "value"),
-            "view", "click", windowMinutes = 30)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3).toSeq, rows.slice(n / 3, 2 * n / 3).toSeq,
-            rows.slice(2 * n / 3, n).toSeq,
-            Seq((999999L, "view", sentinelTs, 0.0),
-              (999999L, "click", sentinelTs, 0.0)))
-          .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(name).filter(col("user_id") < 300)
+      // qs08's stream-stream join store economics: 1 partition (r11)
+      Replay.run(s, rows, Seq("user_id", "event_type", "ts", "value"),
+          Some(1), "append", last = Seq((999999L, "view", sentinelTs, 0.0),
+            (999999L, "click", sentinelTs, 0.0))) {
+        EventStream.intervalJoinOuter(_, "view", "click", windowMinutes = 30)
+      }.filter(col("user_id") < 300)
         .orderBy("user_id", "left_us", "right_us")
     },
     // STREAMING WINDOWED KMV sketch under the oracle: per-hour distinct
@@ -896,35 +851,21 @@ object MediaQueries {
       // Replay set bounded by a deterministic key filter (qs08's
       // discipline): the driver gather stays O(|user_id<300|) at every
       // SF instead of collecting the whole events relation.
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("user_id", "ts")
           .as[(Long, Long)], max = 25000).sortBy(_._2)
       val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000L
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val name = s"qx05_sink_${cdcSinkSeq.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = EventStream.kmvDistinctWindowed(
-            mem.toDF.toDF("user_id", "ts"), "user_id")
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3).toSeq, rows.slice(n / 3, 2 * n / 3).toSeq,
-            rows.slice(2 * n / 3, n).toSeq, Seq((999999L, sentinelTs)))
-          .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       val sentinelW = sentinelTs - sentinelTs % 3600000000L
-      s.table(name).filter(col("wstart_us") < sentinelW)
+      Replay.run(s, rows, Seq("user_id", "ts"), Some(4), "append",
+          last = Seq((999999L, sentinelTs))) {
+        EventStream.kmvDistinctWindowed(_, "user_id")
+      }.filter(col("wstart_us") < sentinelW)
         .orderBy("wstart_us")
     },
     // STREAMING CDC upsert under the oracle: the same snapshot+changelog
     // as qc01 (bounded to user_id < 300), but folded through
-    // CdcStream.applyChangelogStream across a 3-micro-batch MemoryStream
+    // CdcStream.applyChangelogStream across a 3-micro-batch stream
     // replay with the snapshot as INITIAL STATE, then materialized. The
     // oracle is the batch MERGE formula — what's actually verified is
     // that per-key state (snapshot seed + cross-batch winners + late-
@@ -958,29 +899,14 @@ object MediaQueries {
             .when(col("event_type") === "error", "D")
             .otherwise("U").as("op"))
         .as[(Long, Long, String, String)]
-      val delta = graft.streaming.Replay.bounded(delta0, max = 25000)
+      val delta = Replay.bounded(delta0, max = 25000)
         .sortBy(r => (r._2, r._1))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, String, String)]
-      val name = s"qc03_sink_${cdcSinkSeq.incrementAndGet()}"
-      // same state-store-lifecycle economics as qs08: the bounded replay
-      // should not pay the session's 32 partitions in store instances
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = graft.streaming.CdcStream.applyChangelogStream(
-            mem.toDF.toDF("key", "seq", "payload", "op"),
-            "key", "op", "seq", "payload", Some(snapshot))
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = delta.length
-        Seq(delta.slice(0, n / 3), delta.slice(n / 3, 2 * n / 3),
-            delta.slice(2 * n / 3, n))
-          .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      graft.streaming.CdcStream.materialize(s.table(name), Some(snapshot))
+      val changes = Replay.run(s, delta, Seq("key", "seq", "payload", "op"),
+          Some(4), "append") {
+        graft.streaming.CdcStream.applyChangelogStream(_,
+          "key", "op", "seq", "payload", Some(snapshot))
+      }
+      graft.streaming.CdcStream.materialize(changes, Some(snapshot))
         .select(col("key").as("user_id"),
           col("payload").cast("double").as("value"))
         .orderBy("user_id")
@@ -1052,30 +978,16 @@ object MediaQueries {
         |FROM events WHERE user_id < 300
         |GROUP BY 1 ORDER BY 1""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("user_id", "ts")
           .as[(Long, Long)], max = 25000).sortBy(_._2)
       val sentinelTs = rows.last._2 + 10L * 24 * 3600 * 1000000L
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long)]
-      val name = s"qs16_sink_${cdcSinkSeq.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = EventStream.distinctWindowed(
-            mem.toDF.toDF("user_id", "ts"), "user_id")
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3).toSeq, rows.slice(n / 3, 2 * n / 3).toSeq,
-            rows.slice(2 * n / 3, n).toSeq, Seq((999999L, sentinelTs)))
-          .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
       val sentinelW = sentinelTs - sentinelTs % 3600000000L
-      s.table(name).filter(col("wstart_us") < sentinelW)
+      Replay.run(s, rows, Seq("user_id", "ts"), Some(4), "append",
+          last = Seq((999999L, sentinelTs))) {
+        EventStream.distinctWindowed(_, "user_id")
+      }.filter(col("wstart_us") < sentinelW)
         .orderBy("wstart_us")
     },
     // Time-travel read: the table AS OF the midpoint of the event-time
@@ -1196,7 +1108,7 @@ object MediaQueries {
         .orderBy("user_id")
     },
     // STREAM-STATIC dimension enrichment under the oracle: events replay
-    // through a MemoryStream, each micro-batch broadcast-joined to the
+    // through Replay.run, each micro-batch broadcast-joined to the
     // static customer dimension (stateless append — Structured
     // Streaming's stream-static join); the oracle is the plain batch
     // left join. Unknown users keep NULL dim columns.
@@ -1206,26 +1118,16 @@ object MediaQueries {
         |FROM events e LEFT JOIN customer c ON c.c_custkey = e.user_id
         |WHERE e.user_id < 300 ORDER BY e.event_id""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("event_id", "user_id", "value")
           .as[(Long, Long, Double)], max = 25000).sortBy(_._1)
       val dim = t(s, d, "customer")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val name = s"qs14_sink_${cdcSinkSeq.incrementAndGet()}"
-      val q = EventStream.enrichStatic(
-          mem.toDF.toDF("event_id", "user_id", "value"), dim,
+      Replay.run(s, rows, Seq("event_id", "user_id", "value"), None,
+          "append") {
+        EventStream.enrichStatic(_, dim,
           "user_id", "c_custkey", Seq("c_mktsegment", "c_nationkey"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      val n = rows.length
-      Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3),
-          rows.slice(2 * n / 3, n))
-        .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-      q.stop()
-      s.table(name).select(col("event_id"), col("user_id"),
+      }.select(col("event_id"), col("user_id"),
           col("c_mktsegment").as("segment"),
           col("c_nationkey").as("nationkey"), col("value"))
         .orderBy("event_id")
@@ -1241,27 +1143,16 @@ object MediaQueries {
         |  WHERE c.c_mktsegment = 'BUILDING' AND c.c_custkey = e.user_id)
         |ORDER BY event_id""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select("event_id", "user_id", "value")
           .as[(Long, Long, Double)], max = 25000).sortBy(_._1)
       val block = t(s, d, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val name = s"qs19_sink_${cdcSinkSeq.incrementAndGet()}"
-      val q = graft.streaming.EventStream.filterBlocklist(
-          mem.toDF.toDF("event_id", "user_id", "value"), block,
-          "user_id", "c_custkey")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      val n = rows.length
-      Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3),
-          rows.slice(2 * n / 3, n))
-        .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-      q.stop()
-      s.table(name).orderBy("event_id")
+      Replay.run(s, rows, Seq("event_id", "user_id", "value"), None,
+          "append") {
+        EventStream.filterBlocklist(_, block, "user_id", "c_custkey")
+      }.orderBy("event_id")
     },
     // SCD-type-2 history: one validity interval per change, closed by
     // the next change's sequence; deletes close without opening.
@@ -1288,14 +1179,7 @@ object MediaQueries {
     // the identical gap-islands oracle as qs02, so the custom stateful
     // operator and the built-in agree with the oracle AND each other.
     Query("qs03_session_window", Some(
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-        |d AS (SELECT user_id, us,
-        |  CASE WHEN LAG(us) OVER w IS NULL
-        |         OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-        | FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY us)),
-        |g AS (SELECT user_id, us,
-        |  SUM(brk) OVER (PARTITION BY user_id ORDER BY us ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM d)
+      s"""WITH $gapSessionCtes
         |SELECT user_id, MIN(us) AS start_us, MAX(us) AS end_us,
         | CAST(COUNT(*) AS BIGINT) AS n_events
         |FROM g GROUP BY user_id, sid ORDER BY user_id, start_us""".stripMargin)) { (s, d) =>
@@ -1413,29 +1297,14 @@ object MediaQueries {
         |  CAST(level_after AS BIGINT) AS level_after
         |FROM st ORDER BY user_id, tus, event_id""".stripMargin)) { (s, d) =>
       import s.implicits._
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select(col("user_id"), col("event_id"), col("ts"))
           .as[(Long, Long, Long)], max = 25000).sortBy(r => (r._3, r._2))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Long)]
-      val name = s"qs17_sink_${cdcSinkSeq.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = EventStream.rateLimit(
-            mem.toDF.toDF("user_id", "event_id", "ts"),
-            capacity = 3, refillPerSec = 1)
-          .writeStream.outputMode("append").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3),
-            rows.slice(2 * n / 3, n))
-          .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-        q.stop()
-        s.table(name).orderBy("user_id", "tus", "event_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      Replay.run(s, rows, Seq("user_id", "event_id", "ts"), Some(4),
+          "append") {
+        EventStream.rateLimit(_, capacity = 3, refillPerSec = 1)
+      }.orderBy("user_id", "tus", "event_id")
     },
     Query("qs12_user_features", Some(
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1447,34 +1316,19 @@ object MediaQueries {
       // Replay set bounded by the deterministic key filter (qs08's
       // discipline): O(|user_id < 300|) at every SF, hard-capped by the
       // shared Replay.bounded gather — the r9 verdict's #1.
-      val rows = graft.streaming.Replay.bounded(
+      val rows = Replay.bounded(
         t(s, d, "events").filter(col("user_id") < 300)
           .select(col("user_id"), col("ts"), col("value"))
           .as[(Long, Long, Double)], max = 25000).sortBy(r => (r._2, r._1))
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val name = s"qs12_sink_${cdcSinkSeq.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = EventStream.runningUserFeatures(
-            mem.toDF.toDF("user_id", "ts", "value"))
-          .writeStream.outputMode("update").format("memory")
-          .queryName(name).start()
-        val n = rows.length
-        Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3),
-            rows.slice(2 * n / 3, n))
-          .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-        q.stop()
+      Replay.run(s, rows, Seq("user_id", "ts", "value"), Some(4),
+          "update")(EventStream.runningUserFeatures)
         // the serving-table upsert: each user's LAST emission (max n) wins
-        s.table(name).groupBy("user_id")
-          .agg(max(struct(col("n_events"), col("last_tus"),
-            col("sum_cents"))).as("f"))
-          .select(col("user_id"), col("f.n_events").as("n_events"),
-            col("f.last_tus").as("last_tus"), col("f.sum_cents").as("sum_cents"))
-          .orderBy("user_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        .groupBy("user_id")
+        .agg(max(struct(col("n_events"), col("last_tus"),
+          col("sum_cents"))).as("f"))
+        .select(col("user_id"), col("f.n_events").as("n_events"),
+          col("f.last_tus").as("last_tus"), col("f.sum_cents").as("sum_cents"))
+        .orderBy("user_id")
     },
     // Snapshot diff — the inverse of the CDC apply: two keyed per-user
     // aggregates diffed into the minimal I/U/D changelog (nightly-dump

@@ -31,9 +31,6 @@ object TextOps {
         .select((col("doc_id") + 1000000).as("doc_id"), col("text"), col("source")))
   }
 
-  /** Unique memory-sink names across reps (Bench runs each query twice). */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger
-
   /** WITH-list head shared by the qd45 and qd54 oracles: tokens, corpus
     * stats and the top-30 BM25 docs for two fixed term lists (`bm_q1`,
     * `bm_q2`). Ends in a comma; the caller continues the list. */
@@ -207,7 +204,7 @@ object TextOps {
   val queries: Seq[Query] = Seq(
     // The INGEST-TIME near-dup operator under the oracle: the same banded
     // simhash pairs as qd25, but found by StreamingDedup probing corpus
-    // state across a 3-micro-batch replay (MemoryStream). The oracle SQL
+    // state across a 3-micro-batch replay (Replay.run). The oracle SQL
     // is qd25's batch formula — the lowest-equal-band exactly-once
     // emission is invisible to a DISTINCT-pairs oracle, so cross-batch
     // state probing is what's actually being verified.
@@ -230,26 +227,13 @@ object TextOps {
       val docs = graft.streaming.Replay.bounded(
         bounded.filter(col("doc_id") % 10 === 0)
           .as[(Long, String)], max = 1000).sortBy(_._1)
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      val name = s"qd29_sink_${sinkSeq.incrementAndGet()}"
-      // r11: the one stateful replay harness still paying the session's
-      // 32 partitions in state-store instances (the qs08/qc03 economics);
-      // paired min-of-6 at sf0.1: 32 -> 2 partitions = 3.25 -> 1.37 s
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
-        val q = graft.streaming.StreamingDedup.nearDupPairs(
-            graft.operators.Text.simhash16(
-              mem.toDF.toDF("doc_id", "text"), "text", "doc_id"),
-            "simhash", "doc_id", hashBits = 16, numBands = 4, maxHamming = 2)
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        val n = docs.length
-        Seq(docs.slice(0, n / 3), docs.slice(n / 3, 2 * n / 3), docs.slice(2 * n / 3, n))
-          .foreach { c => mem.addData(c.toSeq: _*); q.processAllAvailable() }
-        q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(name).orderBy("id_a", "id_b")
+      // r11: paired min-of-6 at sf0.1, 32 -> 2 partitions = 3.25 -> 1.37 s
+      graft.streaming.Replay.run(s, docs, Seq("doc_id", "text"), Some(2),
+          "append") { in =>
+        graft.streaming.StreamingDedup.nearDupPairs(
+          graft.operators.Text.simhash16(in, "text", "doc_id"),
+          "simhash", "doc_id", hashBits = 16, numBands = 4, maxHamming = 2)
+      }.orderBy("id_a", "id_b")
     },
     // Token counting + corpus stats per language (public Text facade).
     Query("qd01_text_stats", Some(

@@ -97,8 +97,16 @@ class QueryRegistrySpec extends AnyFunSuite {
       "md5('ab_exp1_'", // qa18 experiment arm, oracle
       "lit(\"ab_exp1_\")", // and Spark
       "ORDER BY COUNT(*) DESC, p.lbl ASC", // label propagation rounds
-      "col(\"asof_err_value\").as(\"err_value\")") // as-of output
+      "col(\"asof_err_value\").as(\"err_value\")", // as-of output
+      "OR us - LAG(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk", // gap sessions
+      "CAST(FLOOR((w/360.0 + 0.5 + 1e-14) * z2) AS INT) AS x0,") // Rio tile cover
     val wrong = fragmentLines.map(l => l -> count(l)).filter(_._2 != 1)
     assert(wrong.isEmpty, s"fragment lines not written exactly once: ${wrong.mkString("; ")}")
+  }
+
+  test("Verify names every query without an oracle, qv15 until it has run") {
+    val qv15 = "qv15_ivfpq_trained_res"
+    assert(graft.Verify.missingOracles(SparkEntry.oracleSql - qv15) == Seq(qv15))
+    assert(graft.Verify.missingOracles(SparkEntry.oracleSql + (qv15 -> "SELECT 1")).isEmpty)
   }
 }

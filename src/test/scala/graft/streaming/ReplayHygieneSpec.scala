@@ -15,28 +15,42 @@ import graft.SparkSpec
   *      `.collect()` — every driver gather in a registered query must go
   *      through [[Replay.bounded]], whose hard cap turns a forgotten
   *      SF-independent filter into an immediate named failure instead of a
-  *      silent linear-in-SF driver gather.
+  *      silent linear-in-SF driver gather. Nor may one contain a
+  *      `MemoryStream`, `processAllAvailable` or `writeStream`: every
+  *      replay goes through [[Replay.run]], which stops its query and
+  *      restores its settings even when a batch throws.
   *   2. RUNTIME: [[Replay.bounded]] itself returns all rows when under the
   *      cap, fails loudly when over it, and never ships more than max+1
   *      rows to the driver (the limit is in the plan, not post-hoc).
   */
 class ReplayHygieneSpec extends SparkSpec {
 
-  test("no raw .collect() in any graft/queries source file") {
+  /** `file:line` of every line under `graft/queries` holding one of `banned`. */
+  private def offenders(banned: Seq[String]): Seq[String] = {
     val dir = Paths.get("src/main/scala/graft/queries")
     assert(Files.isDirectory(dir), "run tests from the repo root")
-    val offenders = Files.list(dir).iterator().asScala
+    Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         val lines = new String(Files.readAllBytes(p), "UTF-8").linesIterator
         lines.zipWithIndex.collect {
-          case (l, i) if l.contains(".collect()") || l.contains("collectAsList") =>
-            s"${p.getFileName}:${i + 1}"
+          case (l, i) if banned.exists(l.contains) => s"${p.getFileName}:${i + 1}"
         }
       }.toSeq
-    assert(offenders.isEmpty,
+  }
+
+  test("no raw .collect() in any graft/queries source file") {
+    val hits = offenders(Seq(".collect()", "collectAsList"))
+    assert(hits.isEmpty,
       "raw driver gathers in registered-query sources (route through " +
-        s"graft.streaming.Replay.bounded): ${offenders.mkString(", ")}")
+        s"graft.streaming.Replay.bounded): ${hits.mkString(", ")}")
+  }
+
+  test("no hand-rolled streaming replay in any graft/queries source file") {
+    val hits = offenders(Seq("MemoryStream", "processAllAvailable", "writeStream"))
+    assert(hits.isEmpty,
+      "streaming replays in registered-query sources (route through " +
+        s"graft.streaming.Replay.run): ${hits.mkString(", ")}")
   }
 
   test("Replay.bounded returns every row when the input is under the cap") {
