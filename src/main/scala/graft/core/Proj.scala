@@ -987,15 +987,12 @@ object Proj {
       if (north) 0.0 else 10000000.0), WGS84).forward(lon, lat)
   }
 
-  /** LCC/Albers parameter bundle kept for existing call sites/specs. */
+  /** LCC parameter bundle kept for existing call sites/specs. */
   final case class LccParams(lat0: Double, lon0: Double, sp1: Double,
       sp2: Double, fe: Double, fn: Double)
 
   def toLcc(p: LccParams)(lon: Double, lat: Double): (Double, Double) =
     Crs(Lcc2sp(p.lat0, p.lon0, p.sp1, p.sp2, p.fe, p.fn), WGS84).forward(lon, lat)
-
-  def toAlbers(p: LccParams)(lon: Double, lat: Double): (Double, Double) =
-    Crs(AlbersK(p.lat0, p.lon0, p.sp1, p.sp2, p.fe, p.fn), WGS84).forward(lon, lat)
 
   /** rasterio `transform_bounds(..., densify_pts=21)` equivalent: project
     * `densify + 2` points along each bbox edge and take the min/max — the

@@ -24,8 +24,6 @@ object FilterCompiler {
 
   def compile(f: GLFilter): Column = compile(f, defaultCols)
 
-  def compileJson(json: String): Column = compile(GLFilter.parseJson(json))
-
   def compile(f: GLFilter, c: FeatureCols): Column = f match {
     case True => lit(true)
     case False => lit(false)

@@ -20,9 +20,11 @@ import graft.core.{TileKey, Tiles}
   *    throw
   *  - COG access pattern: header + IFD parse from one bounded read, then
   *    RANGE reads of only the tiles intersecting the window
-  *  - overview selection: the reduced-resolution IFD closest to the target
-  *    resolution without being coarser than 2x (GDAL-style heuristic),
-  *    then nearest-neighbor resample to 256x256
+  *  - overview selection: the coarsest IFD whose resolution is at or
+  *    below the target (else full resolution), then nearest-neighbor
+  *    resample to 256x256; uint8 ([[tile]]) and float32 ([[tileFloat]])
+  *    reads share this one window read and differ only in the sample
+  *    conversion and the fill outside the raster
   *
   *  - BigTIFF (version 43, 8-byte offsets) — the layout GDAL emits for
   *    rasters past 4 GiB, i.e. the normal case at 100 TB imagery scale
@@ -428,11 +430,12 @@ object CogReader {
     }
   }
 
-  /** Read one internal tile as decoded interleaved (chunky) uint8 bytes,
-    * tileWidth*tileHeight*samplesPerPixel — whatever the on-disk layout:
-    * predictor is reversed, uint16 is downconverted (high byte), planar
-    * planes are interleaved. */
-  private def readTile(reader: RangeReader, ifd: Ifd, tx: Int, ty: Int): Array[Byte] = {
+  /** Read one internal tile (or strip) as decoded chunky samples in the
+    * file's sample width, tileWidth*rowsInChunk*samplesPerPixel, whatever
+    * the on-disk layout: predictor is reversed and planar planes are
+    * interleaved. JPEG tiles (8-bit by construction) come back decoded. */
+  private def readChunk(reader: RangeReader, ifd: Ifd, tx: Int, ty: Int,
+      st: SampleType[_]): Array[Byte] = {
     val tilesAcross = (ifd.width + ifd.tileWidth - 1) / ifd.tileWidth
     val tilesDown = (ifd.height + ifd.tileHeight - 1) / ifd.tileHeight
     val idx = ty * tilesAcross + tx
@@ -444,7 +447,7 @@ object CogReader {
       else ifd.tileHeight
     val pixelsPerTile = ifd.tileWidth * rowsInChunk
 
-    if (ifd.compression == 7) { // JPEG: always 8-bit chunky (predictor n/a)
+    if (ifd.compression == 7 && st == Uint8) { // JPEG: always 8-bit chunky (predictor n/a)
       if (ifd.planarConfig != 1)
         throw new java.io.IOException("JPEG tiles with PlanarConfiguration=2 unsupported")
       if (idx >= ifd.tileByteCounts.length || idx >= ifd.tileOffsets.length)
@@ -453,42 +456,18 @@ object CogReader {
       return decodeJpegTile(reader.read(ifd.tileOffsets(idx), ifd.tileByteCounts(idx).toInt), ifd)
     }
 
-    if (ifd.sampleFormat != 1)
-      throw new java.io.IOException(
-        s"unsupported SampleFormat ${ifd.sampleFormat} for uint8 reads " +
-          "(1 = unsigned only; float32 rasters go through tileFloat) — " +
-          "refusing to silently misinterpret sample bytes")
-    val bytesPer = ifd.bitsPerSample match {
-      case 8 => 1
-      case 16 => 2
-      case b => throw new java.io.IOException(s"unsupported TIFF bitsPerSample $b (8/16 only)")
-    }
-    if (ifd.predictor != 1 && ifd.predictor != 2)
-      throw new java.io.IOException(
-        s"unsupported TIFF predictor ${ifd.predictor} (1 or 2 only) — refusing to decode corrupted pixels")
-
-    def loadChunk(chunkIdx: Int, chunkSpp: Int): Array[Byte] =
-      loadChunkBytes(reader, ifd, chunkIdx, chunkSpp, rowsInChunk, bytesPer)
-
-    // uint16 -> uint8: take the high byte (linear 16->8 downscale)
-    val hiOff = if (ifd.littleEndian) 1 else 0
-    def sample8(data: Array[Byte], sampleIdx: Int): Byte =
-      if (bytesPer == 1) data(sampleIdx) else data(sampleIdx * 2 + hiOff)
-
+    val bytesPer = st.sampleBytes(ifd)
     ifd.planarConfig match {
-      case 1 =>
-        val data = loadChunk(idx, spp)
-        if (bytesPer == 1) data
-        else Array.tabulate(pixelsPerTile * spp)(i => sample8(data, i))
+      case 1 => loadChunkBytes(reader, ifd, idx, spp, rowsInChunk, bytesPer)
       case 2 => // plane-major tile order (TIFF 6.0, PlanarConfiguration=2)
         val tilesPerPlane = tilesAcross * tilesDown
-        val out = new Array[Byte](pixelsPerTile * spp)
+        val out = new Array[Byte](pixelsPerTile * spp * bytesPer)
         var p = 0
         while (p < spp) {
-          val plane = loadChunk(p * tilesPerPlane + idx, 1)
+          val plane = loadChunkBytes(reader, ifd, p * tilesPerPlane + idx, 1, rowsInChunk, bytesPer)
           var i = 0
           while (i < pixelsPerTile) {
-            out(i * spp + p) = sample8(plane, i)
+            System.arraycopy(plane, i * bytesPer, out, (i * spp + p) * bytesPer, bytesPer)
             i += 1
           }
           p += 1
@@ -498,10 +477,95 @@ object CogReader {
     }
   }
 
+  /** The output sample type of a window read: uint8 for [[tile]], float32
+    * for [[tileFloat]]. */
+  private sealed abstract class SampleType[A <: AnyRef] {
+    /** Output samples for `n` pixel bands, each the value outside the raster. */
+    def fill(n: Int): A
+    /** Bytes per stored sample of `ifd`; refuses a layout this type would
+      * misread. */
+    def sampleBytes(ifd: Ifd): Int
+    /** A decoded chunk of `ifd` ([[readChunk]]) as output samples. */
+    def convert(ifd: Ifd, chunk: Array[Byte]): A
+  }
+
+  private case object Uint8 extends SampleType[Array[Byte]] {
+    def fill(n: Int): Array[Byte] = new Array[Byte](n)
+    def sampleBytes(ifd: Ifd): Int = {
+      if (ifd.sampleFormat != 1)
+        throw new java.io.IOException(
+          s"unsupported SampleFormat ${ifd.sampleFormat} for uint8 reads " +
+            "(1 = unsigned only; float32 rasters go through tileFloat) — " +
+            "refusing to silently misinterpret sample bytes")
+      val bytesPer = ifd.bitsPerSample match {
+        case 8 => 1
+        case 16 => 2
+        case b => throw new java.io.IOException(s"unsupported TIFF bitsPerSample $b (8/16 only)")
+      }
+      if (ifd.predictor != 1 && ifd.predictor != 2)
+        throw new java.io.IOException(
+          s"unsupported TIFF predictor ${ifd.predictor} (1 or 2 only) — refusing to decode corrupted pixels")
+      bytesPer
+    }
+    def convert(ifd: Ifd, chunk: Array[Byte]): Array[Byte] =
+      if (ifd.compression == 7 || ifd.bitsPerSample != 16) chunk
+      else { // uint16 -> uint8: take the high byte (linear 16->8 downscale)
+        val hiOff = if (ifd.littleEndian) 1 else 0
+        val out = new Array[Byte](chunk.length / 2)
+        var i = 0
+        while (i < out.length) { out(i) = chunk(2 * i + hiOff); i += 1 }
+        out
+      }
+  }
+
+  /** SampleFormat 3, 32-bit samples: the DEM/elevation layout. Predictor 1
+    * (none) or 3 (the TIFF TechNote-3 floating-point predictor GDAL writes
+    * for DEM COGs); predictor 2 is integer-only and throws. */
+  private case object Float32 extends SampleType[Array[Float]] {
+    def fill(n: Int): Array[Float] = {
+      val out = new Array[Float](n)
+      java.util.Arrays.fill(out, Float.NaN)
+      out
+    }
+    def sampleBytes(ifd: Ifd): Int = {
+      if (ifd.sampleFormat != 3 || ifd.bitsPerSample != 32)
+        throw new java.io.IOException(
+          s"tileFloat needs SampleFormat 3 / 32-bit samples, got " +
+            s"format ${ifd.sampleFormat} / ${ifd.bitsPerSample}-bit")
+      if (ifd.predictor != 1 && ifd.predictor != 3)
+        throw new java.io.IOException(
+          s"unsupported predictor ${ifd.predictor} for float32 samples (1 or 3 only; " +
+            "2 is integer horizontal differencing) — refusing to decode corrupted pixels")
+      4
+    }
+    def convert(ifd: Ifd, chunk: Array[Byte]): Array[Float] = {
+      // GDAL_NODATA (tag 42113) masks to NaN — the same "no data here"
+      // the out-of-raster padding uses (rio-tiler mask parity for the
+      // continuous-raster path; 0 stays a valid elevation)
+      val hasNd = ifd.nodata.isDefined
+      val ndVal = ifd.nodata.getOrElse(Double.NaN).toFloat
+      val out = new Array[Float](chunk.length / 4)
+      var i = 0
+      while (i < out.length) {
+        val o = i * 4
+        val bits =
+          if (ifd.littleEndian)
+            (chunk(o) & 0xff) | ((chunk(o + 1) & 0xff) << 8) |
+              ((chunk(o + 2) & 0xff) << 16) | ((chunk(o + 3) & 0xff) << 24)
+          else
+            ((chunk(o) & 0xff) << 24) | ((chunk(o + 1) & 0xff) << 16) |
+              ((chunk(o + 2) & 0xff) << 8) | (chunk(o + 3) & 0xff)
+        val v = java.lang.Float.intBitsToFloat(bits)
+        out(i) = if (hasNd && v == ndVal) Float.NaN else v
+        i += 1
+      }
+      out
+    }
+  }
+
   /** One decoded on-disk chunk (tile, strip, or plane): range-read,
-    * decompressed, predictor-reversed. Shared by the uint8 and float32
-    * read paths. Sparse COGs mark absent chunks with byteCount 0 ->
-    * all-zero chunk. */
+    * decompressed, predictor-reversed, for [[readChunk]]. Sparse COGs
+    * mark absent chunks with byteCount 0 -> all-zero chunk. */
   private def loadChunkBytes(reader: RangeReader, ifd: Ifd, chunkIdx: Int,
       chunkSpp: Int, rowsInChunk: Int, bytesPer: Int): Array[Byte] = {
     val expected = ifd.tileWidth * rowsInChunk * chunkSpp * bytesPer
@@ -725,62 +789,6 @@ object CogReader {
     }
   }
 
-  /** Read one internal tile of a float32 raster (SampleFormat 3, 32-bit
-    * samples — the DEM/elevation layout) as interleaved floats,
-    * tileWidth*rowsInChunk*samplesPerPixel. Predictor 1 (none) or 3 (the
-    * TIFF TechNote-3 floating-point predictor GDAL writes for DEM COGs)
-    * are supported; predictor 2 is integer-only and throws. Any
-    * byte-level compression works, including ZSTD (50000). */
-  private def readTileFloat(reader: RangeReader, ifd: Ifd, tx: Int, ty: Int): Array[Float] = {
-    if (ifd.sampleFormat != 3 || ifd.bitsPerSample != 32)
-      throw new java.io.IOException(
-        s"tileFloat needs SampleFormat 3 / 32-bit samples, got " +
-          s"format ${ifd.sampleFormat} / ${ifd.bitsPerSample}-bit")
-    if (ifd.predictor != 1 && ifd.predictor != 3)
-      throw new java.io.IOException(
-        s"unsupported predictor ${ifd.predictor} for float32 samples (1 or 3 only; " +
-          "2 is integer horizontal differencing) — refusing to decode corrupted pixels")
-    val tilesAcross = (ifd.width + ifd.tileWidth - 1) / ifd.tileWidth
-    val tilesDown = (ifd.height + ifd.tileHeight - 1) / ifd.tileHeight
-    val idx = ty * tilesAcross + tx
-    val spp = ifd.samplesPerPixel
-    val rowsInChunk =
-      if (ifd.striped) math.min(ifd.tileHeight, ifd.height - ty * ifd.tileHeight)
-      else ifd.tileHeight
-    val pixelsPerTile = ifd.tileWidth * rowsInChunk
-    def floatAt(data: Array[Byte], i: Int): Float = {
-      val o = i * 4
-      val bits =
-        if (ifd.littleEndian)
-          (data(o) & 0xff) | ((data(o + 1) & 0xff) << 8) |
-            ((data(o + 2) & 0xff) << 16) | ((data(o + 3) & 0xff) << 24)
-        else
-          ((data(o) & 0xff) << 24) | ((data(o + 1) & 0xff) << 16) |
-            ((data(o + 2) & 0xff) << 8) | (data(o + 3) & 0xff)
-      java.lang.Float.intBitsToFloat(bits)
-    }
-    ifd.planarConfig match {
-      case 1 =>
-        val data = loadChunkBytes(reader, ifd, idx, spp, rowsInChunk, 4)
-        Array.tabulate(pixelsPerTile * spp)(i => floatAt(data, i))
-      case 2 =>
-        val tilesPerPlane = tilesAcross * tilesDown
-        val out = new Array[Float](pixelsPerTile * spp)
-        var p = 0
-        while (p < spp) {
-          val plane = loadChunkBytes(reader, ifd, p * tilesPerPlane + idx, 1, rowsInChunk, 4)
-          var i = 0
-          while (i < pixelsPerTile) {
-            out(i * spp + p) = floatAt(plane, i)
-            i += 1
-          }
-          p += 1
-        }
-        out
-      case pc => throw new java.io.IOException(s"unsupported PlanarConfiguration $pc")
-    }
-  }
-
   /** Decode a compression-7 ("new-style") JPEG tile. Tiles are abbreviated
     * JPEG streams sharing quant/Huffman tables via tag 347: splice the
     * tables stream (minus its EOI) ahead of the tile stream (minus its SOI)
@@ -882,10 +890,14 @@ object CogReader {
     }
   }
 
-  /** `COGReader(path).tile(x, y, z)` equivalent: a 256x256 bands-last
-    * uint8 window for the web-mercator XYZ tile. Pixels outside the
-    * raster are 0 (rio-tiler pads nodata). */
-  def tile(path: String, t: TileKey, tileSize: Int = 256): (Int, Int, Int, Array[Byte]) = {
+  /** The reference's XYZ tile size: every window is 256x256 pixels. */
+  private val TileSize = 256
+
+  /** Reads the 256x256 web-mercator window of XYZ tile `t` as bands-last
+    * samples of type `st`, nearest-neighbour at pixel centres; pixels
+    * outside the raster keep `st`'s fill. Returns (w, h, bands, samples). */
+  private def window[A <: AnyRef](path: String, t: TileKey,
+      st: SampleType[A]): (Int, Int, Int, A) = {
     val reader = readerFor(path)
     try {
       val ifds = ifdsFor(path, reader)
@@ -894,90 +906,31 @@ object CogReader {
       val m = warpMap(full) // null = native 3857, no per-pixel reprojection
       val b = Tiles.tileBounds3857(t)
       val targetRes = nativeRes(m, b.west, b.south, b.east, b.north,
-        (b.east - b.west) / tileSize)
-      // pick the finest IFD whose resolution is <= target (else full res)
-      val withRes = ifds.zipWithIndex.map { case (ifd, i) =>
-        (ifd, sx * full.width / ifd.width)
-      }
-      val chosen = withRes.filter(_._2 <= targetRes + 1e-9)
-        .sortBy(-_._2).headOption.map(_._1).getOrElse(full)
-      val res = sx * full.width / chosen.width
-      val bands = chosen.samplesPerPixel
-      val out = new Array[Byte](tileSize * tileSize * bands)
-      // tile cache for the (few) internal tiles this window touches
-      val cache = scala.collection.mutable.HashMap[(Int, Int), Array[Byte]]()
-      var py = 0
-      while (py < tileSize) {
-        // center-of-pixel sampling in model space
-        val my = b.north - (py + 0.5) * (b.north - b.south) / tileSize
-        // 1e-9 px epsilon: a center landing exactly on a raster-pixel edge
-        // resolves to the next pixel (GDAL-nearest convention) instead of
-        // flip-flopping on float error
-        val ryFast = if (m == null) ((oy - my) / res + 1e-9).toInt else 0
-        var px = 0
-        while (px < tileSize) {
-          val mx = b.west + (px + 0.5) * (b.east - b.west) / tileSize
-          var rx = 0
-          var ry = ryFast
-          if (m == null) rx = ((mx - ox) / res + 1e-9).toInt
-          else {
-            val (nx, ny) = m(mx, my)
-            rx = ((nx - ox) / res + 1e-9).toInt
-            ry = ((oy - ny) / res + 1e-9).toInt
-          }
-          if (rx >= 0 && ry >= 0 && rx < chosen.width && ry < chosen.height) {
-            val tx = rx / chosen.tileWidth
-            val ty = ry / chosen.tileHeight
-            val data = cache.getOrElseUpdate((tx, ty), readTile(reader, chosen, tx, ty))
-            val lx = rx % chosen.tileWidth
-            val ly = ry % chosen.tileHeight
-            val src = (ly * chosen.tileWidth + lx) * bands
-            val dst = (py * tileSize + px) * bands
-            var c = 0
-            while (c < bands) { out(dst + c) = data(src + c); c += 1 }
-          }
-          px += 1
-        }
-        py += 1
-      }
-      (tileSize, tileSize, bands, out)
-    } finally reader.close()
-  }
-
-  /** Windowed float32 read: the web-mercator tile `t` resampled (nearest,
-    * center-of-pixel — same conventions as [[tile]]) from a SampleFormat-3
-    * raster (DEM/elevation COGs). Pixels outside the raster are Float.NaN
-    * (the conventional "no data here" for continuous rasters, where 0 is a
-    * perfectly valid elevation). Returns (w, h, bands, interleaved floats). */
-  def tileFloat(path: String, t: TileKey, tileSize: Int = 256): (Int, Int, Int, Array[Float]) = {
-    val reader = readerFor(path)
-    try {
-      val ifds = ifdsFor(path, reader)
-      val full = ifds.head
-      val ((sx, _), (ox, oy)) = geo(full)
-      val m = warpMap(full)
-      val b = Tiles.tileBounds3857(t)
-      val targetRes = nativeRes(m, b.west, b.south, b.east, b.north,
-        (b.east - b.west) / tileSize)
+        (b.east - b.west) / TileSize)
+      // the coarsest IFD whose resolution is <= target (else full res)
       val chosen = ifds.map(ifd => (ifd, sx * full.width / ifd.width))
         .filter(_._2 <= targetRes + 1e-9)
         .sortBy(-_._2).headOption.map(_._1).getOrElse(full)
       val res = sx * full.width / chosen.width
       val bands = chosen.samplesPerPixel
-      // GDAL_NODATA (tag 42113) masks to NaN — the same "no data here"
-      // the out-of-raster padding uses (rio-tiler mask parity for the
-      // continuous-raster path; 0 stays a valid elevation)
-      val hasNd = chosen.nodata.isDefined
-      val ndVal = chosen.nodata.getOrElse(Double.NaN).toFloat
-      val out = Array.fill(tileSize * tileSize * bands)(Float.NaN)
-      val cache = scala.collection.mutable.HashMap[(Int, Int), Array[Float]]()
+      val tilesAcross = (chosen.width + chosen.tileWidth - 1) / chosen.tileWidth
+      val out = st.fill(TileSize * TileSize * bands)
+      // the (few) internal tiles this window touches, each decoded once;
+      // neighbouring pixels mostly share one, so look up only on a change
+      val cache = scala.collection.mutable.HashMap[Int, A]()
+      var lastIdx = -1
+      var data: AnyRef = null
       var py = 0
-      while (py < tileSize) {
-        val my = b.north - (py + 0.5) * (b.north - b.south) / tileSize
+      while (py < TileSize) {
+        // center-of-pixel sampling in model space
+        val my = b.north - (py + 0.5) * (b.north - b.south) / TileSize
+        // 1e-9 px epsilon: a center landing exactly on a raster-pixel edge
+        // resolves to the next pixel (GDAL-nearest convention) instead of
+        // flip-flopping on float error
         val ryFast = if (m == null) ((oy - my) / res + 1e-9).toInt else 0
         var px = 0
-        while (px < tileSize) {
-          val mx = b.west + (px + 0.5) * (b.east - b.west) / tileSize
+        while (px < TileSize) {
+          val mx = b.west + (px + 0.5) * (b.east - b.west) / TileSize
           var rx = 0
           var ry = ryFast
           if (m == null) rx = ((mx - ox) / res + 1e-9).toInt
@@ -989,23 +942,37 @@ object CogReader {
           if (rx >= 0 && ry >= 0 && rx < chosen.width && ry < chosen.height) {
             val tx = rx / chosen.tileWidth
             val ty = ry / chosen.tileHeight
-            val data = cache.getOrElseUpdate((tx, ty), readTileFloat(reader, chosen, tx, ty))
+            val idx = ty * tilesAcross + tx
+            if (idx != lastIdx) {
+              lastIdx = idx
+              data = cache.getOrElseUpdate(idx,
+                st.convert(chosen, readChunk(reader, chosen, tx, ty, st)))
+            }
             val lx = rx % chosen.tileWidth
             val ly = ry % chosen.tileHeight
-            val src = (ly * chosen.tileWidth + lx) * bands
-            val dst = (py * tileSize + px) * bands
-            var c = 0
-            while (c < bands) {
-              val v = data(src + c)
-              out(dst + c) = if (hasNd && v == ndVal) Float.NaN else v
-              c += 1
-            }
+            System.arraycopy(data, (ly * chosen.tileWidth + lx) * bands,
+              out, (py * TileSize + px) * bands, bands)
           }
           px += 1
         }
         py += 1
       }
-      (tileSize, tileSize, bands, out)
+      (TileSize, TileSize, bands, out)
     } finally reader.close()
   }
+
+  /** `COGReader(path).tile(x, y, z)` equivalent: a 256x256 bands-last
+    * uint8 window for the web-mercator XYZ tile. Pixels outside the
+    * raster are 0 (rio-tiler pads nodata). */
+  def tile(path: String, t: TileKey): (Int, Int, Int, Array[Byte]) =
+    window(path, t, Uint8)
+
+  /** Windowed float32 read: the web-mercator tile `t` resampled (nearest,
+    * center-of-pixel — same conventions as [[tile]]) from a SampleFormat-3
+    * raster (DEM/elevation COGs). Pixels outside the raster and GDAL_NODATA
+    * samples are Float.NaN (the conventional "no data here" for continuous
+    * rasters, where 0 is a perfectly valid elevation). Returns (w, h,
+    * bands, interleaved floats). */
+  def tileFloat(path: String, t: TileKey): (Int, Int, Int, Array[Float]) =
+    window(path, t, Float32)
 }

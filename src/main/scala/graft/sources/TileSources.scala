@@ -32,15 +32,6 @@ object TileSources {
     .followRedirects(HttpClient.Redirect.NORMAL)
     .build()
 
-  def httpGet(url: String): Array[Byte] = {
-    val req = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofSeconds(30)).GET().build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
-    if (resp.statusCode() / 100 != 2)
-      throw new java.io.IOException(s"HTTP ${resp.statusCode()} for $url")
-    resp.body()
-  }
-
   private def httpGetAsync(url: String): CompletableFuture[Array[Byte]] = {
     val req = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofSeconds(30)).GET().build()

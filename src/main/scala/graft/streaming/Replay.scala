@@ -55,7 +55,8 @@ object Replay {
   /** Replays `rows` (already bounded and in arrival order) through a
     * MemoryStream named `columns`, runs `plan` over it into a memory sink
     * in `outputMode`, feeds the [[batches]] one micro-batch each, and
-    * returns the sink table.
+    * returns the sink's rows. The sink's temp view is dropped when the
+    * query stops, so the rows live only as long as the returned frame.
     *
     * `partitions` sets `spark.sql.shuffle.partitions` while the query
     * runs (`None` keeps the session's). A stateful operator opens its
@@ -75,9 +76,15 @@ object Replay {
       val q = plan(mem.toDF().toDF(columns: _*))
         .writeStream.outputMode(outputMode).format("memory")
         .queryName(name).start()
-      try batches(rows, last).foreach { b => mem.addData(b); q.processAllAvailable() }
-      finally q.stop()
+      try {
+        batches(rows, last).foreach { b => mem.addData(b); q.processAllAvailable() }
+        s.table(name)
+      } finally {
+        q.stop()
+        // the returned frame holds the sink in its own plan, so without the
+        // view the rows go with the frame instead of staying in the catalog
+        s.catalog.dropTempView(name)
+      }
     } finally s.conf.set(ShufflePartitions, prevParts)
-    s.table(name)
   }
 }

@@ -894,6 +894,77 @@ class CogReaderSpec extends AnyFunSuite {
     assert(!unmasked.exists(_.isNaN))
   }
 
+  // ---- uint8 / float32 parity: one window read, two sample types ----
+
+  /** A single-band uint8 COG and a float32 COG with equal samples: full
+    * resolution `size`² (plus a `size / 2` overview) from `origin` at
+    * `res` in `epsg`. Returns (uint8 path, float32 path). */
+  private def writeTwins(name: String, size: Int, originX: Double,
+      originY: Double, res: Double, epsg: Option[Int]): (String, String) = {
+    // neighbouring pixels differ, so a read that picks another source
+    // pixel reads another value; the overview has its own pattern
+    val full = (x: Int, y: Int) => (x * 31 + y * 17) % 251
+    val half = (x: Int, y: Int) => (x * 7 + y * 29 + 3) % 253
+    def write(path: String, sample: Int => Int, bps: Int, format: Int): Unit =
+      TiffWriter.write(path, Seq(
+        TiffWriter.Level(size, size, (x, y) => (sample(full(x, y)), 0, 0)),
+        TiffWriter.Level(size / 2, size / 2, (x, y) => (sample(half(x, y)), 0, 0))),
+        tileSize = 128, originX = originX, originY = originY, resX = res,
+        resY = res, deflate = true, bps = bps, sampleFormat = format,
+        samplesPerPixel = 1, epsg = epsg)
+    val pU8 = tmp(s"${name}_u8.tif")
+    val pF32 = tmp(s"${name}_f32.tif")
+    write(pU8, identity, 8, 1)
+    write(pF32, v => java.lang.Float.floatToIntBits(v.toFloat), 32, 3)
+    (pU8, pF32)
+  }
+
+  /** Reads `t` through both entry points; asserts equal samples inside the
+    * raster, 0 and NaN outside. Returns (inside, outside) pixel counts. */
+  private def assertParity(u8: String, f32: String, t: TileKey): (Int, Int) = {
+    val (w, h, ub, u) = CogReader.tile(u8, t)
+    val (fw, fh, fb, f) = CogReader.tileFloat(f32, t)
+    assert((w, h, ub) == (fw, fh, fb) && (w, h, ub) == (256, 256, 1))
+    var inside = 0
+    var i = 0
+    while (i < u.length) {
+      if (f(i).isNaN) assert(u(i) == 0, s"pixel $i: outside, uint8 ${u(i) & 0xff}")
+      else {
+        assert((u(i) & 0xff).toFloat == f(i), s"pixel $i: uint8 ${u(i) & 0xff} vs float ${f(i)}")
+        inside += 1
+      }
+      i += 1
+    }
+    (inside, u.length - inside)
+  }
+
+  test("tile and tileFloat read the same source pixels: native, overview, " +
+      "partly outside, warped") {
+    val cover = TileKey(10, 300, 400)
+    val b = Tiles.tileBounds3857(cover)
+    val (u8, f32) = writeTwins("parity", 512, b.west, b.north,
+      (b.east - b.west) / 512, None)
+    // native 3857 at full resolution: the NE child of the covered tile
+    assert(assertParity(u8, f32, TileKey(11, 601, 800)) == (65536, 0))
+    // the covered tile itself reads the 256² overview pixel for pixel
+    assert(assertParity(u8, f32, cover) == (65536, 0))
+    val (_, _, _, ov) = CogReader.tileFloat(f32, cover)
+    assert(ov(20 * 256 + 10) == (10 * 7 + 20 * 29 + 3) % 253)
+    // the parent tile: the overview again, three quadrants outside
+    assert(assertParity(u8, f32, TileKey(9, 150, 200)) == (128 * 128, 65536 - 128 * 128))
+
+    // UTM 33N, warped per pixel onto the 3857 grid, padded past the tile
+    val crs = Proj.crs("32633").get
+    val (lonW, latS, lonE, latN) = warpLonLat
+    val padLon = (lonE - lonW) * 0.1
+    val padLat = (latN - latS) * 0.1
+    val (minX, minY, maxX, maxY) = Proj.transformBounds(crs.forward _,
+      lonW - padLon, latS - padLat, lonE + padLon, latN + padLat)
+    val (wu8, wf32) = writeTwins("parity_utm", 640, minX, maxY,
+      math.max(maxX - minX, maxY - minY) / 640, Some(32633))
+    assert(assertParity(wu8, wf32, warpTile) == (65536, 0))
+  }
+
   test("an unsupported GeoKey CRS is refused rather than misplaced") {
     // Self-healing fixture: pick the first candidate code NOT in the Proj
     // table, so the refusal path stays covered as the table grows (round 5

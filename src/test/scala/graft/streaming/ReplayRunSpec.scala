@@ -6,8 +6,8 @@ import graft.SparkSpec
 
 /** [[Replay.run]], the one MemoryStream replay of the registered streaming
   * queries: it feeds thirds then the sentinel batch, and leaves neither a
-  * running query nor a changed `spark.sql.shuffle.partitions` behind, even
-  * when a batch throws. */
+  * running query, a sink view nor a changed `spark.sql.shuffle.partitions`
+  * behind, even when a batch throws. */
 class ReplayRunSpec extends SparkSpec {
 
   private val Parts = "spark.sql.shuffle.partitions"
@@ -51,6 +51,24 @@ class ReplayRunSpec extends SparkSpec {
     }
     assert(s.conf.get(Parts) == before)
     assert(s.streams.active.isEmpty)
+    assert(sinkViews.isEmpty)
+  }
+
+  private def sinkViews: Seq[String] =
+    spark.catalog.listTables().collect().map(_.name).toSeq
+      .filter(_.startsWith("replay_sink_"))
+
+  test("Replay.run drops its sink view; the returned frames keep their rows") {
+    val s = spark
+    import s.implicits._
+    val outs = (1 to 3).map { k =>
+      Replay.run(s, (1L to 300L).map(_ * k).toVector, Seq("v"), Some(1),
+        "append")(identity)
+    }
+    assert(sinkViews.isEmpty)
+    outs.zipWithIndex.foreach { case (out, i) =>
+      assert(out.as[Long].collect().sorted.toSeq == (1L to 300L).map(_ * (i + 1)))
+    }
   }
 
   test("Replay.run stops its query when feeding a batch throws") {
